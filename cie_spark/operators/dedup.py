@@ -4,22 +4,27 @@ Five tiers, cheap to expensive, all shuffle-conscious:
 
 - exact          hash-groupBy on normalized-text digest (one shuffle)
 - ngram_jaccard  word-shingle Jaccard >= threshold within LSH buckets
-- minhash_lsh    MinHash band signatures -> bucket join -> verify
+- minhash_lsh    MinHash band signatures -> band buckets -> verify
 - simhash        64-bit simhash, hamming-distance candidate pairs by
                  band-rotation blocking
 - embedding      cosine near-dup over an embedding column (see simsearch)
 
 The scale story for every near-dup tier is the same: NEVER all-pairs.
-Candidates come from an equi-join on a blocking key (band signature /
-simhash band), so the shuffle is keyed and skew is bounded by bucket size;
+Candidates come from ONE banded core (`_band_buckets` + `_pair_expand`):
+rows sharing a (band_idx, band_sig) key are collected into one
+value-sorted member array per bucket and paired in-row, so the only
+shuffle is keyed on the band and skew is bounded by bucket size;
 verification runs only on candidates. Dedup resolution is deterministic:
 keep the minimum doc_id per duplicate group.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
@@ -35,21 +40,53 @@ def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
     return df.repartition(n_part)
 
 
-def _pair_expand(
-    buckets: DataFrame, members_col: str, out_a: str, out_b: str, cmp=None
-):
-    """Explode a value-sorted per-bucket member array into ordered pairs
-    (a < b) — the in-row replacement for the bucket self-join: one shuffle
-    (the groupBy that built the buckets) instead of three (window census +
-    two join sides). Two-step explode keeps per-row width O(bucket), never
-    O(bucket^2). NULL members never pair: collect_list drops NULLs, matching
-    the old join's null-rejecting `x.id < y.id` predicate; duplicate ids
-    collapse in the caller's dropDuplicates exactly as the join's did.
-    `cmp(a, b)` overrides the ordering predicate (struct members compare on
-    their id field only, like the old join's `x.doc_id < y.doc_id`)."""
+def _split_bands(sig, bands: int, bits: int):
+    """Array of the `bands` low-to-high `bits`-wide slices of a long
+    signature column (arithmetic shift + mask, the same bits numpy's
+    int64 `>>` and `&` give)."""
+    mask = (1 << bits) - 1
+    return F.array(
+        *[
+            F.shiftright(sig, bits * b).bitwiseAND(F.lit(mask))
+            for b in range(bands)
+        ]
+    )
+
+
+def _band_buckets(df: DataFrame, member, bands, max_bucket: int | None = None):
+    """The banded candidate core shared by the minhash, simhash and
+    embedding near-dup operators: explode each row's band-value array,
+    group rows sharing (band_idx, band_sig) in ONE aggregation and collect
+    the value-sorted `member` values into `_ms`. With `max_bucket` set,
+    buckets of more rows are dropped (the hot-bucket quadratic guard — a
+    degenerate signature or an exact-dup cluster; pairs living only there
+    are a documented recall trade). `count(*)`, not size(collect_list),
+    counts the rows, so NULL members occupy their buckets but never pair:
+    collect_list drops them."""
+    parts = df.select(
+        member.alias("_m"),
+        F.posexplode(bands).alias("band_idx", "band_sig"),
+    )
+    ms = F.sort_array(F.collect_list("_m")).alias("_ms")
+    if max_bucket is None:
+        return parts.groupBy("band_idx", "band_sig").agg(ms)
+    return (
+        parts.groupBy("band_idx", "band_sig")
+        .agg(F.count("*").alias("_n"), ms)
+        .filter(F.col("_n") <= max_bucket)
+    )
+
+
+def _pair_expand(buckets: DataFrame, out_a: str, out_b: str, cmp=None):
+    """Explode each bucket's value-sorted member array `_ms` into ordered
+    pairs (a < b) — the in-row replacement for a bucket self-join: one
+    shuffle (the groupBy that built the buckets) instead of three (window
+    census + two join sides). Two-step explode keeps per-row width
+    O(bucket), never O(bucket^2). Duplicate ids collapse in the caller's
+    dropDuplicates. `cmp(a, b)` overrides the ordering predicate (struct
+    members compare on their id field only)."""
     step1 = buckets.select(
-        F.col(members_col).alias("_ms"),
-        F.posexplode(members_col).alias("_i", out_a),
+        F.col("_ms"), F.posexplode("_ms").alias("_i", out_a)
     )
     pairs = step1.select(
         out_a,
@@ -110,20 +147,13 @@ def _words_col():
     pipeline. Tokenization stays in the JVM (F.lower/regexp/split
     semantics) so the Python shingle/hash stage can never diverge on
     locale/whitespace edge cases."""
-    return F.split(
-        F.regexp_replace(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+", " "
-        ),
-        " ",
-    )
+    return F.split(_norm_text(), " ")
 
 
 def _shingle_flat(word_lists, k: int):
     """Per-doc distinct k-word shingles (first-occurrence order, the
     array_distinct contract), hashed with the Spark-identical vectorized
     xxhash64: returns (flat uint64 hashes, per-doc counts)."""
-    import numpy as np
-
     from cie_spark.functions import xxh64_bytes_array
 
     sh_flat: list = []
@@ -151,11 +181,8 @@ def _words_to_hs_udf(k: int):
     was the dominant term of the minhash signature pass (~2 s of string
     allocation at sf1.0); here shingles are joined and hashed in one numpy
     pass (guide §4.2)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T2
 
-    @F.pandas_udf(T2.ArrayType(T2.LongType()))
+    @F.pandas_udf(T.ArrayType(T.LongType()))
     def hs(words: pd.Series) -> pd.Series:
         lists = words.tolist()
         flat, counts = _shingle_flat(lists, k)
@@ -171,46 +198,30 @@ def _words_to_hs_udf(k: int):
 
 
 def hashed_shingle_base(
-    docs: DataFrame, shingle_words: int = 3, *, widen: bool = True,
-    expr: bool = False,
+    docs: DataFrame, shingle_words: int = 3, *, widen: bool = True
 ) -> DataFrame:
-    """(doc_id, hs) — per-document array of xxhash64'd word shingles. The
-    ONE text-processing pass of the minhash family: band signatures AND the
-    exact-Jaccard verify both derive from this frame, so the (100-TB) text
-    column is split/sliced/hashed exactly once per consumer and everything
-    downstream moves 8-byte longs, never shingle strings (guide §2.3
-    "narrower types / shuffle keys instead of payloads"). `widen=False`
-    skips the under-parallelism check for inputs known to be tiny (the
-    semi-join-reduced verify side). `expr=True` selects the all-JVM
-    expression twin the UDF is pinned against."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if not widen:
-        n_part = 0
-    src = _maybe_repartition(docs, n_part)
-    if expr:
-        return src.select(
-            "doc_id",
-            F.transform(
-                _word_shingles(
-                    F.coalesce(F.col("text"), F.lit("")), shingle_words
-                ),
-                lambda x: F.xxhash64(x),
-            ).alias("hs"),
-        )
-    return src.select(
+    """(doc_id, hs) — per-document array of xxhash64'd word shingles, the
+    input of the exact-Jaccard verify. Everything downstream moves 8-byte
+    longs, never shingle strings (guide §2.3 "narrower types / shuffle keys
+    instead of payloads"). `widen=False` skips the under-parallelism check
+    for inputs known to be tiny (the semi-join-reduced verify side)."""
+    n_part = (
+        int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        if widen
+        else 0
+    )
+    return _maybe_repartition(docs, n_part).select(
         "doc_id", _words_to_hs_udf(shingle_words)(_words_col()).alias("hs")
     )
 
 
-def _minhash_bands_udf(bands: int, rows: int, shingle_words: int | None = None):
-    """Arrow-vectorized minhash banding: all bands×rows salted minima and
-    the band signatures in one numpy pass per batch — BIT-IDENTICAL to the
-    F.xxhash64 expression formulation (the `expr=True` twin below), pinned
-    by tests/test_dedup.py::test_minhash_bands_udf_matches_expression.
-    With `shingle_words` set, the returned UDF takes the WORDS array and
-    fuses shingle construction + hashing + banding into one Python stage
-    (no hs arrays ever materialize for the candidates path); with it None,
-    the UDF takes a pre-computed hs array.
+def _minhash_bands_udf(bands: int, rows: int, shingle_words: int):
+    """Arrow-vectorized minhash banding over the WORDS array: shingle
+    construction, hashing, all bands×rows salted minima and the band
+    signatures in one numpy pass per batch (no hs arrays ever materialize)
+    — BIT-IDENTICAL to the F.xxhash64 expression formulation kept in
+    tests/test_dedup.py, pinned by
+    tests/test_dedup.py::test_minhash_bands_udf_matches_expression.
 
     Why a UDF (guide §4.2): the expression form evaluates 64 separate
     transform/array_min traversals per document (~166M xxhash64 calls at
@@ -221,18 +232,15 @@ def _minhash_bands_udf(bands: int, rows: int, shingle_words: int | None = None):
     literal -> 4-byte path) into hashLong(v, ·), so the per-salt seed is a
     constant. array_min compares SIGNED longs — the reduceat runs on the
     int64 view. Empty hs arrays chain zero mins: sig = hashInt(b, 42)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T2
-
     from cie_spark.functions import xxh64_int, xxh64_long_array
 
     n_fn = bands * rows
     salt_seeds = [np.uint64(xxh64_int(h, 42)) for h in range(n_fn)]
     band_seeds = [np.uint64(xxh64_int(b, 42)) for b in range(bands)]
 
-    def from_flat(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """(flat uint64 token hashes, per-doc counts) -> docs×bands int64."""
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def sigs(words: pd.Series) -> pd.Series:
+        flat, lens = _shingle_flat(words.tolist(), shingle_words)
         n = len(lens)
         nonzero = lens > 0
         out = np.empty((n, bands), dtype=np.uint64)
@@ -253,130 +261,48 @@ def _minhash_bands_udf(bands: int, rows: int, shingle_words: int | None = None):
                     acc = xxh64_long_array(mins[b * rows + r_i], acc)
                 sig_nz[:, b] = acc
             out[nonzero] = sig_nz
-        return out.view(np.int64)
+        return pd.Series([row for row in out.view(np.int64)])
 
-    @F.pandas_udf(T2.ArrayType(T2.LongType()))
-    def sigs(hs: pd.Series) -> pd.Series:
-        lists = hs.tolist()
-        lens = np.array(
-            [len(x) if x is not None else 0 for x in lists], dtype=np.int64
-        )
-        flat = (
-            np.concatenate(
-                [
-                    np.asarray(x, dtype=np.int64)
-                    for x in lists
-                    if x is not None and len(x)
-                ]
-            ).view(np.uint64)
-            if lens.any()
-            else np.zeros(0, dtype=np.uint64)
-        )
-        signed = from_flat(flat, lens)
-        return pd.Series([row for row in signed])
-
-    @F.pandas_udf(T2.ArrayType(T2.LongType()))
-    def sigs_from_words(words: pd.Series) -> pd.Series:
-        flat, counts = _shingle_flat(words.tolist(), shingle_words)
-        signed = from_flat(flat, counts)
-        return pd.Series([row for row in signed])
-
-    return sigs if shingle_words is None else sigs_from_words
+    return sigs
 
 
-def minhash_signatures(
-    docs: DataFrame, *, bands: int = 16, rows: int = 2, shingle_words: int = 3,
-    base: DataFrame | None = None, expr: bool = False,
-) -> DataFrame:
-    """(doc_id, band_idx, band_sig) — LSH banding of word-shingle minhashes.
+def _minhash_bands(
+    docs: DataFrame, *, bands: int = 16, rows: int = 2, shingle_words: int = 3
+):
+    """(source, band-signature array column) for LSH banding of word-shingle
+    minhashes. The source is repartitioned before the CPU-heavy projection
+    ONLY when the input scan is under-parallel (guide §2.4; r5 verdict
+    wrong #3). Callers explode the UDF column in place: aliased in a
+    projection first, the optimizer's inferred non-empty-array filter is
+    pushed below it and evaluates the UDF twice."""
+    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        _maybe_repartition(docs, n_part),
+        _minhash_bands_udf(bands, rows, shingle_words)(_words_col()),
+    )
 
-    All built-ins: shingles via transform/slice, minhash via
-    array_min(transform(xxhash64)), band sig via xxhash64 of the row mins.
 
-    Two plan-shape safeguards that matter at scale:
-    - hash the per-shingle values ONCE into an int array (`base`), then
-      derive all bands×rows minhashes from that array (naively inlining the
-      shingle expression into every band column recomputes substring work
-      64×); callers that also need `hs` for the verify pass their own base;
-    - repartition before the CPU-heavy projection ONLY when the input scan
-      is under-parallel (guide §2.4; r5 verdict wrong #3).
-    """
-    if not expr:
-        if base is not None:
-            return base.select(
-                "doc_id",
-                F.posexplode(
-                    _minhash_bands_udf(bands, rows)(F.col("hs"))
-                ).alias("band_idx", "band_sig"),
-            )
-        # fused path: words -> shingles -> hashes -> bands in ONE Python
-        # stage; the hs arrays never materialize
-        n_part = int(
-            docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        src = _maybe_repartition(docs, n_part)
-        return src.select(
-            "doc_id",
-            F.posexplode(
-                _minhash_bands_udf(bands, rows, shingle_words)(_words_col())
-            ).alias("band_idx", "band_sig"),
-        )
-
-    if base is None:
-        base = hashed_shingle_base(docs, shingle_words, expr=True)
-
-    # expression twin (`expr=True`): the reference formulation the UDF is
-    # pinned against — kept runnable for the bit-identity test
-
-    def salted_min(h: int):
-        # one cheap re-mix per (hash-fn, shingle): xxhash64 of the base hash
-        # (1-arg lambda: F.transform treats 2-arg lambdas as (element, index))
-        def remix(v):
-            return F.xxhash64(F.lit(h), v)
-
-        return F.array_min(F.transform(F.col("hs"), remix))
-
-    band_cols = []
-    for b in range(bands):
-        mins = [salted_min(b * rows + r) for r in range(rows)]
-        band_cols.append(F.xxhash64(F.lit(b), *mins))
-    return base.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig")
+def minhash_signatures(docs: DataFrame, **kw) -> DataFrame:
+    """(doc_id, band_idx, band_sig) — one row per (document, band); `kw` as
+    for `_minhash_bands`."""
+    src, sigs = _minhash_bands(docs, **kw)
+    return src.select(
+        "doc_id", F.posexplode(sigs).alias("band_idx", "band_sig")
     )
 
 
 def minhash_candidates(
-    docs: DataFrame, *, max_bucket: int = 64, _release: list | None = None,
-    base: DataFrame | None = None, **kw
+    docs: DataFrame, *, max_bucket: int = 64, **kw
 ) -> DataFrame:
-    """Candidate near-dup pairs (a < b) sharing >= 1 LSH band.
-
-    Buckets larger than `max_bucket` are dropped before pair expansion: a hot
-    bucket is quadratic (the skew hazard at scale), and an over-full bucket
-    is either a degenerate signature (low-entropy text) or a giant exact-dup
-    cluster better handled by `exact_groups`. This is the LSH analog of
-    salting a hot key — the standard web-dedup practice. NB: pairs living
-    ONLY in oversized buckets are not candidates (recall trade, documented).
-
-    Plan shape (round 6): ONE aggregation replaces the window census +
-    band self-join — each bucket collects its (value-sorted) member ids and
-    expands pairs in-row, so the band exchange happens once and there is no
-    join at all (the r5 shape relied on AQE runtime exchange reuse to keep
-    the census + two join sides at one exchange; this removes the join and
-    its ~4 s of shuffle/scheduling at sf1.0 outright — guide §2.4 "remove
-    shuffles outright"). `count(*)` (not size(collect_list)) preserves the
-    old census semantics for NULL doc_ids. `_release` is kept for caller
-    compatibility (nothing to release)."""
-    sig = minhash_signatures(docs, base=base, **kw)
-    buckets = (
-        sig.groupBy("band_idx", "band_sig")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sort_array(F.collect_list("doc_id")).alias("_ids"),
-        )
-        .filter(F.col("_n") <= max_bucket)
-    )
-    return _pair_expand(buckets, "_ids", "doc_a", "doc_b").dropDuplicates(
+    """Candidate near-dup pairs (a < b) sharing >= 1 LSH band, from the
+    banded core: one aggregation per band bucket, pairs expanded in-row, no
+    join (guide §2.4 "remove shuffles outright"). Buckets larger than
+    `max_bucket` are dropped before pair expansion (the LSH analog of
+    salting a hot key; pairs living ONLY in oversized buckets are not
+    candidates — recall trade, documented). `kw` as for `_minhash_bands`."""
+    src, sigs = _minhash_bands(docs, **kw)
+    buckets = _band_buckets(src, F.col("doc_id"), sigs, max_bucket)
+    return _pair_expand(buckets, "doc_a", "doc_b").dropDuplicates(
         ["doc_a", "doc_b"]
     )
 
@@ -388,17 +314,6 @@ def minhash_candidates(
 # driver budget and the break-even against ~6 verify stages of scheduling.
 LOCAL_VERIFY_MAX_PAIRS = 100_000
 LOCAL_VERIFY_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _round_half_up(x: float, digits: int) -> float:
-    """Mirror of Spark's round(col, n) on doubles: BigDecimal.valueOf
-    (shortest decimal repr — same contract as Python's repr) then HALF_UP.
-    Python's built-in round() is banker's rounding and would diverge on
-    exact .5 ties."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-digits)
-    return float(Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP))
 
 
 def ngram_jaccard_pairs(
@@ -422,11 +337,12 @@ def ngram_jaccard_pairs(
     AQE turns both verify joins into broadcast joins."""
     kw.setdefault("rows", 4 if threshold >= 0.7 else 2)
     spark = docs.sparkSession
-    from pyspark.sql import types as T2
-
     id_type = docs.schema["doc_id"].dataType
-    pair_schema = T2.StructType(
-        [T2.StructField("doc_a", id_type), T2.StructField("doc_b", id_type)]
+    pair_schema = T.StructType(
+        [T.StructField("doc_a", id_type), T.StructField("doc_b", id_type)]
+    )
+    out_schema = T.StructType(
+        pair_schema.fields + [T.StructField("jaccard", T.DoubleType())]
     )
     cands_df = minhash_candidates(docs, shingle_words=shingle_words, **kw)
     # Bounded candidate fetch: the pair set is tiny at any sane operating
@@ -438,13 +354,7 @@ def ngram_jaccard_pairs(
     pairs = cands_df.limit(LOCAL_VERIFY_MAX_PAIRS + 1).collect()
     local_ok = len(pairs) <= LOCAL_VERIFY_MAX_PAIRS
     if local_ok and not pairs:
-        return spark.createDataFrame(
-            [],
-            T2.StructType(
-                pair_schema.fields
-                + [T2.StructField("jaccard", T2.DoubleType())]
-            ),
-        )
+        return spark.createDataFrame([], out_schema)
     if local_ok:
         cands = spark.createDataFrame(pairs, pair_schema)
     else:
@@ -454,32 +364,24 @@ def ngram_jaccard_pairs(
     # a candidate pair are re-shingled — a broadcast semi-join on the
     # candidate ids prunes the corpus BEFORE the shingle projection, so the
     # verify costs one cheap column scan + shingling of ~|candidates| docs
-    # instead of two more full-corpus shingle passes (the r5 plan re-derived
-    # shingles for all docs on both join sides: 3x the text-processing
-    # pass). At 100 TB this is exactly the "decide with small rows, touch
-    # big rows once" discipline — the full corpus is shingled once (for the
-    # signatures), the verify touches candidates only.
+    # instead of two more full-corpus shingle passes. At 100 TB this is
+    # exactly the "decide with small rows, touch big rows once" discipline.
     ids = cands.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).dropDuplicates(["doc_id"])
+    vdocs = docs.join(F.broadcast(ids), on="doc_id", how="left_semi")
 
     if local_ok:
         # driver-local verify tier: fetch the candidate docs' hs arrays
         # (bounded: ≤ 2×|pairs| docs; byte budget re-checked on the result)
         # and compute the exact Jaccard in-process — set semantics match
         # array_intersect/union, int/int division matches the JVM Divide,
-        # HALF_UP rounding matches F.round (the simsearch local-tier
-        # contract). Duplicate doc_ids break the dict mirror (the join
-        # fans a pair out across every hs row per id) — yield to the join
-        # path instead, like simsearch's local tier does.
-        hs_rows = hashed_shingle_base(
-            docs.join(F.broadcast(ids), on="doc_id", how="left_semi"),
-            shingle_words,
-            widen=False,
-        ).collect()
+        # and Spark's own F.round rounds the driver-built frame. Duplicate
+        # doc_ids break the dict mirror (the join fans a pair out across
+        # every hs row per id) — yield to the join path instead.
         hs_map: dict = {}
         dup = False
-        for r in hs_rows:
+        for r in hashed_shingle_base(vdocs, shingle_words, widen=False).collect():
             if r[0] is None or r[1] is None:
                 continue
             if r[0] in hs_map:
@@ -489,22 +391,18 @@ def ngram_jaccard_pairs(
         n_bytes = sum(len(v) for v in hs_map.values()) * 8
         if not dup and n_bytes <= LOCAL_VERIFY_MAX_BYTES:
             out = []
-            for p in pairs:
-                sa = hs_map.get(p[0])
-                sb = hs_map.get(p[1])
+            for a, b in pairs:
+                sa = hs_map.get(a)
+                sb = hs_map.get(b)
                 if sa is None or sb is None:
                     continue  # mirror the join verify's inner-join drop
                 inter = len(sa & sb)
                 union = len(sa) + len(sb) - inter
                 jac = inter / union if union > 0 else 0.0
                 if jac >= threshold:
-                    out.append((p[0], p[1], _round_half_up(jac, round_to)))
-            return spark.createDataFrame(
-                out,
-                T2.StructType(
-                    pair_schema.fields
-                    + [T2.StructField("jaccard", T2.DoubleType())]
-                ),
+                    out.append((a, b, jac))
+            return spark.createDataFrame(out, out_schema).select(
+                "doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard")
             )
     # the repartition is a deliberate materialization BARRIER, not load
     # balancing: with candidates and vbase both broadcast-joined there is no
@@ -517,9 +415,7 @@ def ngram_jaccard_pairs(
     # materialization path bypasses AQE and cost ~4 s for the same 4,800
     # rows.)
     vbase = hashed_shingle_base(
-        docs.join(F.broadcast(ids), on="doc_id", how="left_semi"),
-        shingle_words,
-        widen=False,
+        vdocs, shingle_words, widen=False
     ).repartition("doc_id")
     j = (
         cands.join(
@@ -587,11 +483,6 @@ def jaccard_pairs_exact(
     return out
 
 
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
-
-
 @F.pandas_udf(T.LongType())
 def _simhash64_udf(texts: pd.Series) -> pd.Series:
     """64-bit simhash, Arrow-vectorized (one numpy pass per batch).
@@ -647,9 +538,8 @@ def _simhash64_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash_col(text_col, bits: int = 64):
+def simhash_col(text_col):
     """64-bit simhash over word tokens (see _simhash64_udf)."""
-    assert bits == 64
     return _simhash64_udf(text_col)
 
 
@@ -658,39 +548,22 @@ def simhash_pairs(docs: DataFrame, *, max_hamming: int = 3, bands: int = 4) -> D
 
     Blocking: split the 64-bit simhash into `bands` 16-bit bands; by
     pigeonhole, any pair within hamming distance < bands shares at least one
-    exact band -> per-band bucket, verify with bit_count(xor).
-
-    Round-6 shape: ONE aggregation per band bucket (collect the value-sorted
-    (doc_id, sh) members, expand pairs in-row) instead of the band self-join.
-    The UDF signature pass is consumed exactly once, so the persist +
-    eager localCheckpoint the r5 plan needed to stop the Python subtree
-    re-evaluating across the two join sides are gone with the join itself —
-    the whole operator is one scan + one 3 MB shuffle of (band, id, sh)
-    triples, fully lazy. Verification (exact hamming) is unchanged, so the
-    output set is provably identical: same pairs-sharing-a-band candidates,
-    same filter, dedup moved AFTER the cheap in-row verify (duplicates
-    across bands carry identical sh values, hence identical hamming)."""
+    exact band -> the banded core's per-band buckets (members are
+    value-sorted (doc_id, sh) structs, no bucket cap — the blocking must
+    stay exhaustive), verify with bit_count(xor) in-row. The UDF signature
+    pass is consumed exactly once; the whole operator is one scan + one
+    shuffle of (band, id, sh) triples, fully lazy. Dedup runs AFTER the
+    cheap verify (duplicates across bands carry identical sh values, hence
+    identical hamming)."""
     n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sh = _maybe_repartition(docs, n_part).select(
         "doc_id", simhash_col(F.col("text")).alias("sh")
     )
-    parts = sh.select(
-        F.struct("doc_id", "sh").alias("ds"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), 16 * b).bitwiseAND(F.lit(0xFFFF))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    buckets = parts.groupBy("band_idx", "band_val").agg(
-        F.sort_array(F.collect_list("ds")).alias("_ms")
+    buckets = _band_buckets(
+        sh, F.struct("doc_id", "sh"), _split_bands(F.col("sh"), bands, 16)
     )
     pairs = _pair_expand(
-        buckets, "_ms", "_a", "_b",
-        cmp=lambda a, b: a["doc_id"] < b["doc_id"],
+        buckets, "_a", "_b", cmp=lambda a, b: a["doc_id"] < b["doc_id"]
     )
     ham = F.bit_count(F.col("_a.sh").bitwiseXOR(F.col("_b.sh")))
     return (

@@ -99,9 +99,10 @@ LOCAL_VOCAB_CAP = 65_536
 # shingle with the miss (inverted-index blocking — exact, since threshold
 # > 0 means a zero-overlap pair can never link) — but adversarial inputs
 # (every miss sharing shingles with most of the dictionary) still degrade
-# to the full product. The bound is therefore on SCORED PAIRS, counted as
-# the loop runs: past this budget the local path bails (link_rows_local
-# returns None) and the distributed tiers run instead. 2M scored pairs
+# to the full product. The bound is therefore on SCORED PAIRS, summed over
+# the blocked, length-filtered candidate sets BEFORE any pair is scored:
+# past this budget the local path bails (link_rows_local returns None)
+# without scoring, and the distributed tiers run instead. 2M scored pairs
 # ≈ 1–3 s of driver CPU — comparable to the distributed tier's fixed
 # scheduling cost, i.e. the break-even point. (The r5 event-log profile
 # showed the pre-index nested loop was 4.75 s of the ~10.5 s per-leg
@@ -120,7 +121,8 @@ def link_rows_local(
     tests/test_link.py::test_local_path_agrees_with_distributed).
 
     Returns None (caller must fall back to the distributed tiers) when the
-    running count of scored (miss × candidate) pairs exceeds `fuzzy_budget`:
+    total of (miss × candidate) pairs to score exceeds `fuzzy_budget` —
+    decided from the blocked candidate sets before any pair is scored:
     the dict pass is O(surfaces) and always cheap, and the fuzzy tier blocks
     candidates through an inverted shingle index, but adversarial vocabularies
     can still degrade toward the full product.
@@ -164,7 +166,10 @@ def link_rows_local(
             index.setdefault(g, []).append(i)
     threshold = spec.JACCARD_LINK_THRESHOLD
     index_get = index.get
-    scored = 0
+    # pass 1: block every miss and length-filter its candidates, deciding
+    # the budget before any Jaccard is scored
+    blocked: list = []  # per miss: (shingles, candidates) or None
+    to_score = 0
     for s, n in misses:
         sh = _shingles_normed(n)
         cand: set[int] = set()
@@ -172,7 +177,6 @@ def link_rows_local(
             hits = index_get(g)
             if hits:
                 cand.update(hits)
-        best: tuple[float, str] | None = None
         la = len(sh)
         # length-ratio skip, arithmetic hoisted out of the candidate loop:
         # min(la,lb) < t*max(la,lb)  ⇔  lb < t*la (when lb<=la)
@@ -181,19 +185,27 @@ def link_rows_local(
         # calls per candidate (the r5 pytest wall-clock profile showed 4.7M
         # min/max calls dominating the 64k×10k blocked case).
         tla = threshold * la
+        keep = []
         for ci in cand:
             lb = dic_lens[ci]
-            if (lb < tla) if lb <= la else (la < threshold * lb):
-                continue
-            scored += 1
+            if not ((lb < tla) if lb <= la else (la < threshold * lb)):
+                keep.append(ci)
+        to_score += len(keep)
+        if fuzzy_budget is not None and to_score > fuzzy_budget:
+            return None
+        # (keeping no shingle set for candidate-free misses keeps the
+        # retained-object count, and so the GC cost, low)
+        blocked.append((sh, keep) if keep else None)
+    # pass 2: score the surviving candidates
+    for (s, n), bk in zip(misses, blocked):
+        best: tuple[float, str] | None = None
+        for ci in bk[1] if bk else ():
             dsh, _dn, eid = dic_shingles[ci]
-            j = spec.jaccard(sh, dsh)
+            j = spec.jaccard(bk[0], dsh)
             if j >= threshold and (
                 best is None or j > best[0] or (j == best[0] and eid < best[1])
             ):
                 best = (j, eid)
-        if fuzzy_budget is not None and scored > fuzzy_budget:
-            return None
         if best is not None:
             out.append((s, n, best[1], "fuzzy"))
         else:

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cie_spark.operators.dedup import _band_buckets, _pair_expand, _split_bands
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -51,39 +53,6 @@ def topk_bruteforce(
     )
 
 
-def _pack_signatures(M: np.ndarray, P: np.ndarray) -> np.ndarray:
-    """Sign-bit signatures for a batch: bit i = (row . plane_i) >= 0, packed
-    into int64. THE single definition of the signature bit layout — the two
-    pandas UDFs and the driver-local tier all call this, so their
-    bit-identity holds by construction (not by parallel-edit discipline).
-    M: batch × dim float64; P: dim × n_planes float64."""
-    n_planes = P.shape[1]
-    bits = (M @ P >= 0).astype(np.uint64)  # batch × planes
-    out = np.zeros(M.shape[0], dtype=np.uint64)
-    for i in range(n_planes):
-        out |= bits[:, i] << np.uint64(i)
-    return out.view(np.int64)
-
-
-def _hyperplane_sig(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: bit i = (vec . plane_i) >= 0.
-
-    One Arrow-batched matmul per batch. (An all-expression formulation with
-    n_planes × dim literals compiled pathologically — ~30 s of codegen for 12
-    planes × 64 dims — another 'custom operator -> vectorized UDF' case.)
-    """
-    P = np.asarray(planes, dtype=np.float64).T  # dim × n_planes
-
-    @F.pandas_udf(T.LongType())
-    def sig(vecs: pd.Series) -> pd.Series:
-        M = np.array(list(vecs), dtype=np.float64)  # batch × dim
-        if M.size == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        return pd.Series(_pack_signatures(M, P))
-
-    return sig(vec)
-
-
 def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (numpy, fixed seed)."""
 
@@ -91,25 +60,48 @@ def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
+def _signatures(M: np.ndarray, n_planes: int, seed: int) -> np.ndarray:
+    """Sign-bit signatures of a batch of equal-length vectors: bit i =
+    (row . plane_i) >= 0 against make_planes(dim, n_planes, seed), packed
+    into int64. THE single definition of the signature bit layout — the
+    signature UDF and the driver near-dup tier both call this, so their
+    bit-identity holds by construction. M: batch × dim float64."""
+    P = np.asarray(make_planes(M.shape[1], n_planes, seed), dtype=np.float64)
+    bits = (M @ P.T >= 0).astype(np.uint64)  # batch × planes
+    out = np.zeros(M.shape[0], dtype=np.uint64)
+    for i in range(n_planes):
+        out |= bits[:, i] << np.uint64(i)
+    return out.view(np.int64)
+
+
 def _hyperplane_sig_auto(vec: Column, n_planes: int, seed: int) -> Column:
-    """Sign-bit signature with the planes derived INSIDE the UDF from
-    (seed, dim-of-first-batch-vector) — bit-identical to
-    `_hyperplane_sig(vec, make_planes(dim, n_planes, seed))` (pinned by
-    tests/test_simsearch.py) but without the driver-side `.first()` job that
-    make_planes_from_df needed to learn the dimension. That probe was one of
-    ~6 fixed-overhead stages that made `cosine_near_dup_pairs` cost 6.9 s on
-    2,000 vectors (r4 verdict wrong #2); plane regeneration per executor is
-    a few µs of seeded RNG."""
+    """Sign-bit signature: bit i = (vec . plane_i) >= 0 against
+    make_planes(len(vec), n_planes, seed), the planes derived INSIDE the UDF
+    (pinned against explicit planes by tests/test_simsearch.py) — no
+    driver-side `.first()` job to learn the dimension, and plane
+    regeneration per batch is a few µs of seeded RNG. One Arrow-batched
+    matmul per batch (an all-expression formulation with n_planes × dim
+    literals compiled pathologically — ~30 s of codegen for 12 planes × 64
+    dims). A batch holding ragged or NULL vectors signs row by row, each
+    against the planes of its own length; a NULL vector signs NULL."""
 
     @F.pandas_udf(T.LongType())
     def sig(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        M = np.array(list(vecs), dtype=np.float64)
-        P = np.asarray(
-            make_planes(M.shape[1], n_planes, seed), dtype=np.float64
-        ).T
-        return pd.Series(_pack_signatures(M, P))
+        try:
+            M = np.array(list(vecs), dtype=np.float64)
+        except ValueError:  # ragged vectors, or NULL among vectors
+            M = None
+        if M is not None and M.ndim == 2:
+            return pd.Series(_signatures(M, n_planes, seed))
+        return pd.Series(
+            [
+                None if v is None else int(_signatures(
+                    np.asarray(v, dtype=np.float64)[None, :], n_planes, seed
+                )[0])
+                for v in vecs
+            ],
+            dtype=object,
+        )
 
     return sig(vec)
 
@@ -130,7 +122,7 @@ def topk_lsh(
     for i, p in enumerate(planes):
         if float(np.dot(query_vec, p)) >= 0:
             qsig |= 1 << i
-    sig = _hyperplane_sig(F.col(vec_col), planes)
+    sig = _hyperplane_sig_auto(F.col(vec_col), n_planes, seed)
     cand = vectors.withColumn("sig", sig).filter(
         F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= probe_hamming
     )
@@ -204,169 +196,139 @@ def topk_ivf(
     )
 
 
-# Input size (vectors) at or below which cosine_near_dup_pairs runs
-# driver-locally: a bounded ids-only count probe, a bounded vector fetch,
-# then the identical banded blocking + exact verify as numpy over the
-# collected matrix, returning a LocalRelation. At this size the distributed plan is ~6 stages of
-# scheduling (persist, posexplode, window census, self-join, two
-# join-backs, eager checkpoint) for ~1 ms of math — measured 3.3 s for
-# 2,000 vectors at sf0.1. Above the cap the distributed tier is unchanged
-# (the 100-TB shape). 8,192 rows × dim ≤ ~1.5k is ≤ ~100 MB of Arrow —
-# driver-bounded. Same tiering pattern as link.link_rows_local;
-# bit-agreement is pinned by
-# tests/test_simsearch.py::test_near_dup_local_tier_agrees_with_distributed.
+# Size tiers of cosine_near_dup_pairs. All three build candidates with the
+# banded core (dedup._band_buckets); the two smaller ones verify with ONE
+# numpy kernel (_verify_buckets) over a matrix fetched once via toArrow():
+#
+# - driver (<= LOCAL_MAX_VECTORS rows): signatures, buckets and verify all
+#   run in numpy on the driver, returning a LocalRelation. At this size the
+#   distributed plan is ~6 stages of scheduling for ~1 ms of math (measured
+#   3.3 s for 2,000 vectors at sf0.1). 8,192 rows × dim <= ~1.5k is
+#   <= ~100 MB of Arrow — driver-bounded.
+# - broadcast (matrix <= BROADCAST_MAX_BYTES as float64, <=
+#   BROADCAST_MAX_ROWS rows): buckets are built distributed and fed whole
+#   to the kernel over the broadcast matrix in mapInPandas, so candidate
+#   pairs cross the Python boundary as bucket arrays, never as two vectors.
+#   At sf1.0 (20k × 64 dims, 7.5M candidate pairs) this replaced ~18 s of
+#   candidate-dedup shuffle and join-backs with a ~1 s matmul verify. 64 MB
+#   at dim 64 caps it at ~131k vectors (~75 MB per Python worker).
+# - join-back (larger inputs, duplicate non-null ids, ragged or NULL
+#   vectors): candidate id pairs are deduplicated, the vectors joined back
+#   and the cosine computed in the JVM — the 100-TB shape.
+#
+# Tier agreement is pinned by
+# tests/test_simsearch.py::test_near_dup_local_tier_agrees_with_distributed;
+# tests pin a tier by monkeypatching these constants.
 LOCAL_MAX_VECTORS = 8_192
-
-# Matrix-size budget (bytes, float64) for the broadcast-verify middle tier
-# of cosine_near_dup_pairs: above LOCAL_MAX_VECTORS but while the id->vector
-# matrix still fits comfortably on the driver and in every Python worker,
-# candidates are generated distributed (banded buckets) and VERIFIED against
-# a broadcast numpy matrix — candidate pairs cross the Python boundary as
-# ids only (16 bytes/pair), never as two 64-float vectors. At sf1.0
-# (20k × 64-dim, 7.5M candidate pairs) this replaced a 6 s candidate-dedup
-# shuffle + 12 s of join-backs + interpreted higher-order cosine with a
-# ~1 s matmul verify (guide §8: "decide with small rows, move big rows
-# once" — here the big rows never move at all). 64 MB at dim 64 caps the
-# tier at ~131k vectors; per-worker footprint is matrix + id index
-# (~75 MB). Above the cap (or on duplicate ids / ragged vectors) the
-# join-back tier below is the unchanged 100-TB shape. Override via the
-# CIE_NEAR_DUP_BROADCAST_MB env (0 disables the tier).
-BROADCAST_MAX_BYTES = int(
-    float(__import__("os").environ.get("CIE_NEAR_DUP_BROADCAST_MB", "64"))
-    * 1024 * 1024
-)
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 BROADCAST_MAX_ROWS = 1 << 19
 
 
-def _round_half_up4(x: float) -> float:
-    """Mirror of Spark's round(col, 4) on doubles: BigDecimal.valueOf
-    (shortest decimal repr — same contract as Python's repr) then
-    HALF_UP. Python's built-in round() is banker's rounding and would
-    diverge on exact .5 ties."""
-    from decimal import ROUND_HALF_UP, Decimal
+def _fetch_matrix(vectors: DataFrame, id_col: str, vec_col: str, cap: int):
+    """ONE bounded Arrow fetch of the (id, vector) rows -> (key, M, norms),
+    where key = (sorted non-null ids, their rows in M). toArrow() is ~3x
+    faster than the row-path collect for a 10 MB matrix and type-exact (ids
+    stay exact with NULLs as None, none of toPandas' nullable-int
+    degradation). None when the input holds more than `cap` rows (it may be
+    nondeterministic, or have grown since the probe) or is irregular:
+    duplicate non-null ids, ragged or NULL vectors."""
+    import pyarrow.compute as pc
 
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+    tbl = vectors.select(id_col, vec_col).limit(cap + 1).toArrow()
+    vec = tbl.column(1).combine_chunks()
+    if tbl.num_rows > cap or vec.null_count:
+        return None
+    lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
+    dim = int(lens[0]) if len(lens) else 0
+    ids = tbl.column(0).to_pylist()
+    nn = [i for i in ids if i is not None]
+    if len(set(nn)) != len(nn) or (lens != dim).any():
+        return None
+    M = (
+        vec.flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(len(ids), dim)
     )
+    karr = np.asarray(nn)
+    if karr.dtype.kind not in "iuf":
+        karr = np.asarray(nn, dtype=object)
+    rows = np.flatnonzero([i is not None for i in ids])
+    order = np.argsort(karr, kind="stable")
+    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+    return (karr[order], rows[order]), M, norms
 
 
-def _near_dup_pairs_local(
-    spark, ids, M: np.ndarray, threshold: float, id_type,
-    n_planes: int, bands: int, seed: int, max_bucket: int,
-) -> DataFrame:
-    """Driver-local rendering of the banded near-dup plan below. Bit-level
-    mirror of the distributed tier: the signature matmul is the SAME numpy
-    code as `_hyperplane_sig_auto`; band split is arithmetic-shift+mask
-    (numpy int64 >> == JVM shiftright); bucket cap, id-ordered pairing and
-    HALF_UP rounding all match. The only permitted divergence is float
-    summation order in the verify dot product (numpy pairwise vs the JVM
-    sequential fold) — invisible at 4 rounded decimals away from ties,
-    and pinned on seeded data by the agreement test."""
-    from pyspark.sql import types as T2
+def _verify_buckets(buckets, key, M, norms, threshold: float):
+    """THE near-dup verify kernel of the driver and broadcast tiers.
+    `buckets` yields value-sorted arrays of unique non-null member ids, so
+    triu's i<j pairs are exactly the id_a < id_b pairs the JVM two-step
+    explode generates; pair expansion and the exact cosine both run in
+    numpy. The only divergence from the JVM verify is float summation order
+    — invisible at 4 rounded decimals away from ties. Returns the pairs
+    with sim >= threshold as a pandas frame, or None. Raises on a member id
+    the fetch did not see (an input that changed between the fetch and the
+    candidate job) instead of verifying against the wrong row."""
+    skey, srow = key
+    outs = []
+    for members in buckets:
+        m = len(members)
+        if m < 2:
+            continue
+        arr = np.asarray(members, dtype=skey.dtype)
+        pos = np.searchsorted(skey, arr)
+        if (pos >= len(skey)).any() or (skey[pos] != arr).any():
+            raise ValueError(
+                "cosine_near_dup_pairs: a candidate id is missing from the "
+                "fetched vectors (did the input change between jobs?)"
+            )
+        rows = srow[pos]
+        iu, ju = np.triu_indices(m, k=1)
+        ra, rb = rows[iu], rows[ju]
+        dots = np.einsum("ij,ij->i", M[ra], M[rb])
+        na, nb = norms[ra], norms[rb]
+        ok = (na > 0) & (nb > 0)
+        sim = np.where(ok, dots / np.where(ok, na * nb, 1.0), 0.0)
+        keep = sim >= threshold
+        if keep.any():
+            outs.append(
+                pd.DataFrame(
+                    {"id_a": arr[iu[keep]], "id_b": arr[ju[keep]], "sim": sim[keep]}
+                )
+            )
+    return pd.concat(outs, ignore_index=True) if outs else None
 
-    schema = T2.StructType(
-        [
-            T2.StructField("id_a", id_type),
-            T2.StructField("id_b", id_type),
-            T2.StructField("sim", T2.DoubleType()),
-        ]
-    )
-    if M.size == 0:
-        return spark.createDataFrame([], schema)
-    P = np.asarray(make_planes(M.shape[1], n_planes, seed), dtype=np.float64).T
-    sig = _pack_signatures(M, P)
 
-    bits = n_planes // bands
+def _local_buckets(sig: np.ndarray, key, bands: int, bits: int, max_bucket: int):
+    """numpy rendering of dedup._band_buckets + _split_bands over the
+    fetched rows: yields every kept bucket's value-sorted member ids. Band
+    split is arithmetic shift + mask (numpy int64 >> == JVM shiftright);
+    the cap counts NULL-id rows, which never become members."""
+    skey, srow = key
+    rank = np.full(len(sig), -1, dtype=np.int64)
+    rank[srow] = np.arange(len(srow))
     mask = np.int64((1 << bits) - 1)
-    cand: set = set()
     for b in range(bands):
         vals = (sig >> np.int64(bits * b)) & mask
-        buckets: dict = {}
-        for idx in range(len(ids)):
-            buckets.setdefault(int(vals[idx]), []).append(idx)
-        for members in buckets.values():
-            if len(members) > max_bucket or len(members) < 2:
-                continue
-            for i in range(len(members)):
-                for j in range(i + 1, len(members)):
-                    x, y = members[i], members[j]
-                    # pair ordered by id VALUE (not row position) — the
-                    # distributed join filters x.id < y.id, which is never
-                    # true against a NULL id (the row still occupied its
-                    # band bucket above, also like the distributed census)
-                    ia, ib = ids[x], ids[y]
-                    if ia is None or ib is None:
-                        continue
-                    if ia < ib:
-                        cand.add((x, y))
-                    elif ib < ia:
-                        cand.add((y, x))
-
-    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-    out = []
-    for x, y in cand:
-        na, nb = norms[x], norms[y]
-        s = float(M[x] @ M[y] / (na * nb)) if na > 0 and nb > 0 else 0.0
-        if s >= threshold:
-            out.append((ids[x], ids[y], _round_half_up4(s)))
-    out.sort()
-    return spark.createDataFrame(out, schema)
+        _, inv, cnt = np.unique(vals, return_inverse=True, return_counts=True)
+        rows = np.flatnonzero((rank >= 0) & (cnt[inv] <= max_bucket))
+        rows = rows[np.lexsort((rank[rows], inv[rows]))]
+        for grp in np.split(rows, np.flatnonzero(np.diff(inv[rows])) + 1):
+            yield skey[rank[grp]]
 
 
-def _bc_bucket_verify_gen(bc, threshold: float):
-    """mapInPandas generator over per-bucket member-id ARRAYS: pair
-    expansion (triu over the value-sorted members — the same a<b pairs the
-    JVM two-step explode would generate) AND the exact-cosine verify both
-    happen in numpy, so Arrow moves one row per bucket (~1 MB at sf1.0)
-    instead of one row per candidate pair (7.5M rows / ~120 MB). Caller
-    guarantees members are unique non-null ids (the tier's precondition),
-    so triu's i<j is exactly id_a < id_b."""
+def _bc_verify_gen(bc, threshold: float):
+    """mapInPandas generator: the verify kernel over each batch of bucket
+    member arrays against the broadcast (key, M, norms), so Arrow moves one
+    row per bucket (~1 MB at sf1.0) instead of one per candidate pair
+    (7.5M rows / ~120 MB)."""
 
     def gen(batches):
-        idx, M, norms = bc.value
-        skey = srow = None
-        if idx:
-            karr = np.array(list(idx.keys()))
-            if np.issubdtype(karr.dtype, np.number):
-                order = np.argsort(karr)
-                skey = karr[order]
-                srow = np.fromiter(
-                    (idx[k] for k in karr[order].tolist()),
-                    dtype=np.int64,
-                    count=len(order),
-                )
+        key, M, norms = bc.value
         for pdf in batches:
-            outs = []
-            for members in pdf["_ids"]:
-                m = len(members)
-                if m < 2:
-                    continue
-                arr = np.asarray(members)
-                if skey is not None:
-                    rows = srow[np.searchsorted(skey, arr)]
-                else:
-                    rows = np.fromiter(
-                        (idx[v] for v in members), dtype=np.int64, count=m
-                    )
-                iu, ju = np.triu_indices(m, k=1)
-                ra, rb = rows[iu], rows[ju]
-                dots = np.einsum("ij,ij->i", M[ra], M[rb])
-                na, nb = norms[ra], norms[rb]
-                ok = (na > 0) & (nb > 0)
-                sim = np.where(ok, dots / np.where(ok, na * nb, 1.0), 0.0)
-                keep = sim >= threshold
-                if keep.any():
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "id_a": arr[iu[keep]],
-                                "id_b": arr[ju[keep]],
-                                "sim": sim[keep],
-                            }
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            out = _verify_buckets(pdf["_ms"], key, M, norms, threshold)
+            if out is not None:
+                yield out
 
     return gen
 
@@ -375,8 +337,7 @@ def cosine_near_dup_pairs(
     vectors: DataFrame, threshold: float = 0.95,
     id_col: str = "vec_id", vec_col: str = "embedding",
     n_planes: int = 64, bands: int = 8, seed: int = 42,
-    max_bucket: int = 512, local_max: int = LOCAL_MAX_VECTORS,
-    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
+    max_bucket: int = 512,
 ) -> DataFrame:
     """Embedding near-dup pairs (a<b, cosine >= threshold) via BANDED
     hyperplane-signature blocking + exact verify — never an all-pairs cross
@@ -386,186 +347,88 @@ def cosine_near_dup_pairs(
     Banding selectivity (round-5 retune): the old 4 bands x 4 bits
     collided UNRELATED vectors at 1-(1-2^-4)^4 ~ 23% — on the sf0.1 bench
     that meant ~470k candidate pairs from 2,000 random vectors for an
-    output of ~1 row, and the candidate dedup + two vector join-backs
-    dominated the operator (the true cause of the 'emb_near_dup 6.9 s'
-    r4 verdict item; the cost was volume, not scheduling). 8 bands x 8
-    bits (one 64-bit signature, same LongType column) collides random
-    pairs at 1-(1-2^-8)^8 ~ 3.1% while keeping the true-pair recall bound
-    1-(1-(1-acos(s)/pi)^8)^8: ~0.93 at s = 0.9, ~0.99 at s >= 0.95 —
-    pinned empirically by the planted-pair recall pytest. Callers needing
-    a different operating point (e.g. the exact-twin-checkable driver
-    query at threshold 0.5) pass n_planes/bands explicitly.
+    output of ~1 row. 8 bands x 8 bits (one 64-bit signature, same LongType
+    column) collides random pairs at 1-(1-2^-8)^8 ~ 3.1% while keeping the
+    true-pair recall bound 1-(1-(1-acos(s)/pi)^8)^8: ~0.93 at s = 0.9,
+    ~0.99 at s >= 0.95 — pinned empirically by the planted-pair recall
+    pytest. Callers needing a different operating point (e.g. the
+    exact-twin-checkable driver query at threshold 0.5) pass
+    n_planes/bands explicitly.
 
-    Candidates = pairs agreeing on >= 1 band (equi-join per band, the same
-    blocking shape as dedup.simhash_pairs); buckets larger than `max_bucket`
-    are dropped before the self-join (hot-bucket quadratic guard — the skew
-    salting analog; recall trade documented). Verification is the exact
-    cosine, so precision is 1.0 by construction.
+    Candidates = pairs sharing >= 1 band bucket (the banded core shared
+    with dedup.simhash_pairs); buckets larger than `max_bucket` are dropped
+    (hot-bucket quadratic guard — recall trade documented). Verification
+    is the exact cosine, so precision is 1.0 by construction. The size
+    tier is chosen as described above LOCAL_MAX_VECTORS.
     """
-    # Size probes for the driver-local and broadcast-verify tiers: ids-first
-    # and bounded (a column-pruned CollectLimit — for a scan input it
-    # short-circuits at the first files; for a shuffle-derived input it
-    # costs at most one upstream pass but moves only id bytes, never the
-    # ~100 MB of vectors an over-cap fetch would have discarded). ONE ids
-    # probe at the larger cap serves both tier decisions (round 6: the
-    # separate local probe was a fourth driver job). Pass local_max=0 /
-    # broadcast_max_bytes=0 to pin the distributed tiers (plan tests, A/B).
-    bc = None
-    rows_cap = 0
-    if broadcast_max_bytes:
-        first = vectors.select(vec_col).limit(1).collect()
-        dim = len(first[0][0]) if first and first[0][0] is not None else 0
-        rows_cap = (
-            min(broadcast_max_bytes // (dim * 8), BROADCAST_MAX_ROWS)
-            if dim
-            else 0
-        )
-    probe_cap = max(local_max, rows_cap)
-    n_probe = (
-        len(vectors.select(id_col).limit(probe_cap + 1).collect())
-        if probe_cap
-        else probe_cap
+    id_type = vectors.schema[id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("sim", T.DoubleType()),
+        ]
     )
-    if local_max and n_probe <= local_max:
-        # collect(), not toPandas(): pandas degrades a nullable int64
-        # id column to float64, corrupting ids. The fetch re-applies the
-        # limit: an input whose evaluation is nondeterministic (or grew
-        # between the two jobs) must not turn this into an unbounded
-        # driver collect — an over-cap fetch falls through to the
-        # distributed tier instead.
-        head = (
-            vectors.select(id_col, vec_col).limit(local_max + 1).collect()
-        )
-        ids = [r[0] for r in head]
-        # duplicate id VALUES break the mirror (the distributed plan
-        # dedups candidate id-pairs then fans back out across every
-        # vector row per id; the local pairing is row-based) — yield to
-        # the distributed tier rather than diverge
-        if len(head) <= local_max and len(set(ids)) == len(ids):
-            M = (
-                np.array([r[1] for r in head], dtype=np.float64)
-                if head
-                else np.zeros((0, 0))
-            )
-            return _near_dup_pairs_local(
-                vectors.sparkSession, ids, M, threshold,
-                vectors.schema[id_col].dataType,
-                n_planes, bands, seed, max_bucket,
-            )
-
-    # middle tier (round 6): distributed banded candidates + broadcast-matrix
-    # verify. Any irregularity (over cap, duplicate non-null ids,
-    # ragged/NULL vectors) falls through to the join-back tier, which
-    # remains the 100-TB shape.
-    if rows_cap and n_probe <= rows_cap:
-        # Arrow fetch (Spark 4 toArrow): ~3x faster than the row-path
-        # collect for a 10 MB matrix, and type-exact (ids stay int64 with
-        # NULLs as None — none of toPandas' nullable-int degradation). A
-        # ragged or NULL vector makes the reshape throw, which falls
-        # through to the join-back tier like the old object-array path.
-        tbl = vectors.select(id_col, vec_col).limit(rows_cap + 1).toArrow()
-        ids = tbl.column(0).to_pylist()
-        nn = [i for i in ids if i is not None]
-        if tbl.num_rows <= rows_cap and len(set(nn)) == len(nn):
-            try:
-                flat = (
-                    tbl.column(1)
-                    .combine_chunks()
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                )
-                M = (
-                    flat.astype(np.float64).reshape(len(ids), -1)
-                    if len(ids)
-                    else np.zeros((0, 0))
-                )
-                norms = (
-                    np.sqrt(np.einsum("ij,ij->i", M, M))
-                    if M.size
-                    else np.zeros(0)
-                )
-                idx = {v: i for i, v in enumerate(ids) if v is not None}
-                bc = vectors.sparkSession.sparkContext.broadcast(
-                    (idx, M, norms)
-                )
-            except (TypeError, ValueError):
-                bc = None
-
     bits = n_planes // bands
-    mask = (1 << bits) - 1
-    # Candidate generation (round-6 shape, shared by both distributed
-    # tiers): ONE aggregation per band bucket collects the value-sorted
-    # member ids and expands pairs in-row — replacing the r5 census
-    # groupBy + left-semi + band self-join (3 logical passes over the
-    # exploded signatures) with a single exchange of (band, id) rows. The
-    # pandas-UDF signature subtree is consumed exactly once, so the persist
-    # + eager localCheckpoint that protected it from double evaluation
-    # across the self-join sides are gone with the join itself (guide §2.4
-    # "remove shuffles outright"). count(*) (not size(collect_list))
-    # preserves the census semantics for NULL ids: they occupy their
-    # buckets but never pair (collect_list drops them, mirroring the old
-    # null-rejecting x.id < y.id join predicate).
-    from cie_spark.operators.dedup import _pair_expand
+    # Size probes, bounded and ids-first (column-pruned CollectLimits): the
+    # first vector's dim sizes the broadcast cap, then ONE ids probe at the
+    # larger cap decides whether the vectors are fetched at all, so an
+    # over-cap input never moves vector bytes to the driver.
+    first = vectors.select(vec_col).limit(1).collect()
+    dim = len(first[0][0]) if first and first[0][0] is not None else 0
+    rows_cap = (
+        min(BROADCAST_MAX_BYTES // (dim * 8), BROADCAST_MAX_ROWS) if dim else 0
+    )
+    cap = max(LOCAL_MAX_VECTORS, rows_cap)
+    fetched = None
+    if cap and len(vectors.select(id_col).limit(cap + 1).collect()) <= cap:
+        fetched = _fetch_matrix(vectors, id_col, vec_col, cap)
+
+    if fetched is not None and len(fetched[1]) <= LOCAL_MAX_VECTORS:
+        key, M, norms = fetched
+        sig = _signatures(M, n_planes, seed)
+        out = _verify_buckets(
+            _local_buckets(sig, key, bands, bits, max_bucket),
+            key, M, norms, threshold,
+        )
+        # a pair found in several bands carries identical sims
+        pairs = {} if out is None else dict(
+            zip(zip(out["id_a"].tolist(), out["id_b"].tolist()), out["sim"].tolist())
+        )
+        return vectors.sparkSession.createDataFrame(
+            [(a, b, s) for (a, b), s in pairs.items()], out_schema
+        ).select("id_a", "id_b", F.round("sim", 4).alias("sim"))
 
     sig = vectors.select(
         F.col(id_col),
         _hyperplane_sig_auto(F.col(vec_col), n_planes, seed).alias("sig"),
     )
-    parts = sig.select(
-        id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sig"), bits * b).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    buckets = (
-        parts.groupBy("band_idx", "band_val")
-        .agg(
-            F.count("*").alias("_n"),
-            F.sort_array(F.collect_list(id_col)).alias("_ids"),
-        )
-        .filter(F.col("_n") <= max_bucket)
+    buckets = _band_buckets(
+        sig, F.col(id_col), _split_bands(F.col("sig"), bands, bits), max_bucket
     )
 
-    if bc is not None:
-        # Broadcast-matrix verify, fed whole BUCKETS: pair expansion and the
-        # exact cosine both run in numpy against the broadcast matrix (same
-        # float64 math as the local tier), so Arrow moves one row per band
-        # bucket instead of one per candidate pair. Duplicates across bands
-        # are verified redundantly (~5% extra at the sf1.0 operating point)
-        # in exchange for skipping the pre-verify dedup shuffle of the full
-        # candidate set — the dedup runs after the threshold filter, on the
-        # (tiny) surviving pairs, where duplicate rows carry identical sims.
-        id_type = vectors.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("sim", T.DoubleType()),
-            ]
-        )
+    if fetched is not None:
+        # broadcast tier. Duplicates across bands are verified redundantly
+        # (~5% extra at the sf1.0 operating point) in exchange for skipping
+        # the pre-verify dedup shuffle of the full candidate set — the
+        # dedup runs after the threshold filter, on the (tiny) surviving
+        # pairs, where duplicate rows carry identical sims.
+        bc = vectors.sparkSession.sparkContext.broadcast(fetched)
         return (
-            buckets.select("_ids")
-            .mapInPandas(_bc_bucket_verify_gen(bc, threshold), out_schema)
+            buckets.select("_ms")
+            .mapInPandas(_bc_verify_gen(bc, threshold), out_schema)
             .select("id_a", "id_b", F.round("sim", 4).alias("sim"))
             .dropDuplicates(["id_a", "id_b"])
         )
 
-    raw_pairs = _pair_expand(buckets, "_ids", "id_a", "id_b")
-
-    # join-back tier (the 100-TB shape): candidate pairs stay ids-ONLY
-    # through the dedup shuffle; vectors join back only for the verify
-    # (dragging both 64-float vectors through dropDuplicates measured 3x
-    # wall on the sf0.1 bench) — the same ids-then-payload shape as
-    # dedup.ngram_jaccard_pairs. The verify reads the vector table again
-    # rather than caching it: at scale a full-corpus persist is memory
-    # pressure, and the signature subtree no longer needs cache protection
-    # (it is consumed exactly once by the candidate aggregation).
-    cand = raw_pairs.dropDuplicates(["id_a", "id_b"])
+    # join-back tier: candidate pairs stay ids-ONLY through the dedup
+    # shuffle; vectors join back only for the verify (dragging both vectors
+    # through dropDuplicates measured 3x wall on the sf0.1 bench) — the same
+    # ids-then-payload shape as dedup.ngram_jaccard_pairs. The verify reads
+    # the vector table again rather than caching it: at scale a full-corpus
+    # persist is memory pressure, and the signature subtree is consumed
+    # exactly once by the candidate aggregation.
+    cand = _pair_expand(buckets, "id_a", "id_b").dropDuplicates(["id_a", "id_b"])
     vecs = vectors.select(F.col(id_col), F.col(vec_col))
     return (
         cand.join(

@@ -2,11 +2,46 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from cie_spark.operators import dedup
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _expr_hashed_shingle_base(docs, shingle_words=3):
+    """All-JVM expression twin of dedup.hashed_shingle_base: the reference
+    the words->shingle->hash UDF is pinned against."""
+    return docs.select(
+        "doc_id",
+        F.transform(
+            dedup._word_shingles(
+                F.coalesce(F.col("text"), F.lit("")), shingle_words
+            ),
+            lambda x: F.xxhash64(x),
+        ).alias("hs"),
+    )
+
+
+def _expr_minhash_signatures(docs, bands=16, rows=2, shingle_words=3):
+    """All-JVM expression twin of dedup.minhash_signatures: bands×rows
+    salted minima array_min(transform(xxhash64)) over the hashed shingles,
+    band sig = xxhash64 of the band's row minima."""
+    base = _expr_hashed_shingle_base(docs, shingle_words)
+
+    def salted_min(h: int):
+        # 1-arg lambda: F.transform treats 2-arg lambdas as (element, index)
+        return F.array_min(F.transform(F.col("hs"), lambda v: F.xxhash64(F.lit(h), v)))
+
+    band_cols = [
+        F.xxhash64(F.lit(b), *[salted_min(b * rows + r) for r in range(rows)])
+        for b in range(bands)
+    ]
+    return base.select(
+        "doc_id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_sig")
+    )
 
 
 def test_exact_dedup(spark):
@@ -103,7 +138,6 @@ def test_cosine_near_dup_exact(spark):
 def test_simhash_deterministic(spark):
     d = _docs(spark, [(1, "alpha beta gamma"), (2, "alpha beta gamma")])
     from cie_spark.operators.dedup import simhash_col
-    from pyspark.sql import functions as F
 
     vals = [r.sh for r in d.select(simhash_col(F.col("text")).alias("sh")).collect()]
     assert vals[0] == vals[1]
@@ -130,7 +164,7 @@ def test_minhash_bands_udf_matches_expression(spark):
     )
     ref = sorted(
         (r.doc_id, r.band_idx, r.band_sig)
-        for r in dedup.minhash_signatures(d, bands=16, rows=4, expr=True).collect()
+        for r in _expr_minhash_signatures(d, bands=16, rows=4).collect()
     )
     assert got == ref
     # and at the other operating point (the default rows=2)
@@ -140,7 +174,7 @@ def test_minhash_bands_udf_matches_expression(spark):
     )
     ref2 = sorted(
         (r.doc_id, r.band_idx, r.band_sig)
-        for r in dedup.minhash_signatures(d, expr=True).collect()
+        for r in _expr_minhash_signatures(d).collect()
     )
     assert got2 == ref2
 
@@ -152,7 +186,6 @@ def test_xxh64_bytes_matches_spark(spark):
     import random
 
     import numpy as np
-    from pyspark.sql import functions as F
 
     from cie_spark.functions import xxh64_bytes_array
 
@@ -189,7 +222,7 @@ def test_shingle_base_udf_matches_expression(spark):
     }
     ref = {
         r.doc_id: list(r.hs)
-        for r in dedup.hashed_shingle_base(d, expr=True).collect()
+        for r in _expr_hashed_shingle_base(d).collect()
     }
     assert got == ref
 
@@ -224,3 +257,30 @@ def test_jaccard_local_verify_agrees_with_join(spark, monkeypatch):
     )
     assert empty.columns == ["doc_a", "doc_b", "jaccard"]
     assert empty.count() == 0
+
+
+def test_jaccard_duplicate_doc_ids_match_join_verify(spark, monkeypatch):
+    """Duplicate doc_ids make the driver-local verify yield to the join
+    verify (the join fans a pair out across every hs row of the id), so
+    the default path must return exactly what the pinned join verify
+    returns."""
+    base = "the quick brown fox jumps over the lazy dog today"
+    rows = [
+        (1, base),
+        (1, base.replace("today", "tonight")),  # duplicate id, other text
+        (2, base),
+        (3, base.replace("dog", "cat")),
+        (4, "completely different text with no overlap at all here"),
+    ]
+    d = _docs(spark, rows)
+    fast = sorted(
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+    )
+    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
+    slow = sorted(
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+    )
+    assert fast, "agreement test must compare non-empty results"
+    assert fast == slow

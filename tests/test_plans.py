@@ -39,13 +39,10 @@ def test_dedup_candidates_never_cartesian(spark):
         [(i, f"some shared words plus unique token {i}") for i in range(30)],
         "doc_id long, text string",
     )
-    release: list = []  # lazy form — the public path checkpoints eagerly
-    plan = _physical(dedup.minhash_candidates(docs, _release=release))
-    for f in release:
-        f.unpersist()
+    plan = _physical(dedup.minhash_candidates(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the self-join is keyed on the band signature
+    # the candidate buckets are keyed on the band signature
     assert "band_sig" in plan
 
 
@@ -169,6 +166,9 @@ def test_dedup_candidates_single_aggregation_no_join(spark):
     # one exchange for the band aggregation, one for the pair dedup — the
     # signature projection itself must never require more
     assert plan.count("Exchange") <= 3
+    # the signature UDF runs once: an inferred non-empty-array filter pushed
+    # below an aliasing projection would evaluate it a second time
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def test_dedup_no_exchange_before_signature_on_well_partitioned_input(spark):

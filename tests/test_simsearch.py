@@ -72,7 +72,7 @@ def test_ivf_topk(spark, emb):
     assert full_probe == brute
 
 
-def test_near_dup_banded_recall_on_planted_pairs(spark):
+def test_near_dup_banded_recall_on_planted_pairs(spark, monkeypatch):
     """Plant known near-duplicate vectors (tiny perturbations of shared
     bases) among random noise: the banded candidate join must recover >= 90%
     of the exact-oracle pairs at threshold 0.9 — the recall guarantee the
@@ -99,18 +99,17 @@ def test_near_dup_banded_recall_on_planted_pairs(spark):
         for r in simsearch.cosine_near_dup_exact(df, threshold=0.9).collect()
     }
     assert len(exact) >= 50  # the planted pairs are really there
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)  # DISTRIBUTED tier
     banded = {
         (r.id_a, r.id_b)
-        for r in simsearch.cosine_near_dup_pairs(
-            df, threshold=0.9, local_max=0  # pin the DISTRIBUTED tier
-        ).collect()
+        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
     }
     assert banded <= exact  # exact verify => precision 1.0
     recall = len(banded & exact) / len(exact)
     assert recall >= 0.9, f"banded recall {recall:.2f} < 0.9"
 
 
-def test_near_dup_local_tier_agrees_with_distributed(spark):
+def test_near_dup_local_tier_agrees_with_distributed(spark, monkeypatch):
     """The driver-local small-input tier (default below LOCAL_MAX_VECTORS)
     must return the identical pair set AND identical rounded sims as the
     distributed banded plan — planted near-dups, noise, a zero vector and
@@ -148,16 +147,16 @@ def test_near_dup_local_tier_agrees_with_distributed(spark):
         for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
     )
     # tier 2: distributed candidates + broadcast-matrix verify
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
     mid = sorted(
         (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, local_max=0, **kw).collect()
+        for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
     )
     # tier 3: join-back verify (the 100-TB shape)
+    monkeypatch.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)
     dist = sorted(
         (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(
-            df, local_max=0, broadcast_max_bytes=0, **kw
-        ).collect()
+        for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
     )
     assert local, "agreement test must compare non-empty results"
     # the over-cap drop really engaged: the 20-member exact-dup cluster's
@@ -182,18 +181,16 @@ def test_hyperplane_sig_auto_matches_explicit_planes(spark):
             simsearch._hyperplane_sig_auto(F.col("embedding"), 12, 42).alias("s"),
         ).collect()
     }
-    planes = simsearch.make_planes(16, 12, 42)
-    b = {
-        r.vec_id: r.s
-        for r in df.select(
-            "vec_id",
-            simsearch._hyperplane_sig(F.col("embedding"), planes).alias("s"),
-        ).collect()
-    }
+    # reference: explicit planes, plain numpy sign bits packed LSB-first
+    P = np.asarray(simsearch.make_planes(16, 12, 42), dtype=np.float64)
+    b = {}
+    for vid, v in rows:
+        bits = np.asarray(v, dtype=np.float32).astype(np.float64) @ P.T >= 0
+        b[vid] = sum(1 << i for i in range(12) if bits[i])
     assert a == b
 
 
-def test_cosine_near_dup_pairs_no_dimension_probe_job(spark):
+def test_cosine_near_dup_pairs_no_dimension_probe_job(spark, monkeypatch):
     """The round-5 overhead diet kept two of its three cuts here (the
     third — removing the signature persist — was reverted by measurement;
     round 6 then removed the persist for real by making the signature
@@ -215,8 +212,87 @@ def test_cosine_near_dup_pairs_no_dimension_probe_job(spark):
         (i, [float(x) for x in rng.standard_normal(8)]) for i in range(2, 22)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)  # DISTRIBUTED tier
     got = {(r.id_a, r.id_b) for r in
-           simsearch.cosine_near_dup_pairs(
-               df, threshold=0.99, local_max=0  # pin the DISTRIBUTED tier
-           ).collect()}
+           simsearch.cosine_near_dup_pairs(df, threshold=0.99).collect()}
     assert (0, 1) in got
+
+
+def _planted(rng, dim=16, clusters=8, noise=60):
+    rows = []
+    for c in range(clusters):
+        base = rng.standard_normal(dim)
+        for j in range(3):
+            v = base + 0.02 * rng.standard_normal(dim)
+            rows.append((10 * c + j, [float(x) for x in v]))
+    for i in range(noise):
+        rows.append((1000 + i, [float(x) for x in rng.standard_normal(dim)]))
+    return rows
+
+
+def _near_dups_pinned_join_back(df, monkeypatch, **kw):
+    with monkeypatch.context() as m:
+        m.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
+        m.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)
+        return sorted(
+            (r.id_a, r.id_b, r.sim)
+            for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
+        )
+
+
+def test_near_dup_duplicate_ids_fall_through_to_join_back(spark, monkeypatch):
+    """Duplicate non-null ids make both fetched tiers yield: the default
+    call must equal the pinned join-back tier's output."""
+    rows = _planted(np.random.default_rng(3))
+    rows.append((0, [float(x) for x in rows[1][1]]))  # second row for id 0
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(
+        (r.id_a, r.id_b, r.sim)
+        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
+    )
+    ref = _near_dups_pinned_join_back(df, monkeypatch, threshold=0.9)
+    assert ref, "agreement test must compare non-empty results"
+    assert got == ref
+
+
+def test_near_dup_ragged_vector_falls_through_to_join_back(spark, monkeypatch):
+    """One vector of a different length makes both fetched tiers yield (and
+    signs against the planes of its own length): the default call must
+    equal the pinned join-back tier's output."""
+    rows = _planted(np.random.default_rng(4))
+    rows.append((999, [1.0, 2.0, 3.0]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(
+        (r.id_a, r.id_b, r.sim)
+        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
+    )
+    ref = _near_dups_pinned_join_back(df, monkeypatch, threshold=0.9)
+    assert ref, "agreement test must compare non-empty results"
+    assert got == ref
+
+
+def test_near_dup_broadcast_verify_rejects_unfetched_ids(spark, monkeypatch):
+    """The broadcast tier fetches the matrix in one job and builds buckets
+    in another, so an input that re-evaluates differently between jobs (a
+    rand() filter over a nondeterministically ordered shuffle, a growing
+    source) can hand the candidate job ids the fetch never saw. Here the
+    fetch's view of the rows passes through a rand() filter that the
+    candidate job's does not; the verify kernel must raise instead of
+    scoring a pair against a wrong matrix row."""
+    rng = np.random.default_rng(9)
+    base = rng.standard_normal(8)
+    rows = [
+        (i, [float(x) for x in base + 0.001 * rng.standard_normal(8)])
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    fetch = simsearch._fetch_matrix
+    monkeypatch.setattr(
+        simsearch, "_fetch_matrix",
+        lambda v, *a: fetch(v.filter(F.rand(7) < 0.5), *a),
+    )
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)  # broadcast tier
+    with pytest.raises(Exception, match="missing from the fetched vectors"):
+        simsearch.cosine_near_dup_pairs(
+            df, threshold=0.9, max_bucket=1000
+        ).collect()
