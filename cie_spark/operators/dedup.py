@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cie_spark.session import local_frame
+
 
 def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
     """Repartition only when the input is under-parallel (e.g. a one-file
@@ -347,16 +349,16 @@ def ngram_jaccard_pairs(
     cands_df = minhash_candidates(docs, shingle_words=shingle_words, **kw)
     # Bounded candidate fetch: the pair set is tiny at any sane operating
     # point (high-threshold banding), so pull it to the driver once — it
-    # feeds the verify AND the semi-join reduction, and as a LocalRelation
-    # it replaces the eager localCheckpoint the double consumption needed
-    # (one fewer materialization job). Over the cap, the distributed
-    # checkpoint path runs unchanged.
+    # feeds the verify AND the semi-join reduction, and as a local_frame
+    # LocalRelation it replaces the eager localCheckpoint the double
+    # consumption needed (one fewer materialization job). Over the cap, the
+    # distributed checkpoint path runs unchanged.
     pairs = cands_df.limit(LOCAL_VERIFY_MAX_PAIRS + 1).collect()
     local_ok = len(pairs) <= LOCAL_VERIFY_MAX_PAIRS
     if local_ok and not pairs:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     if local_ok:
-        cands = spark.createDataFrame(pairs, pair_schema)
+        cands = local_frame(spark, pairs, pair_schema)
     else:
         # materialize the (large) candidate set once for its two consumers
         cands = cands_df.localCheckpoint(eager=True)
@@ -401,7 +403,7 @@ def ngram_jaccard_pairs(
                 jac = inter / union if union > 0 else 0.0
                 if jac >= threshold:
                     out.append((a, b, jac))
-            return spark.createDataFrame(out, out_schema).select(
+            return local_frame(spark, out, out_schema).select(
                 "doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard")
             )
     # the repartition is a deliberate materialization BARRIER, not load

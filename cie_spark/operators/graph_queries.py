@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cie_spark.functions import mock_embedding
+from cie_spark.session import local_frame
 
 
 class GraphQueries:
@@ -149,7 +150,7 @@ class GraphQueries:
             )
         e = e.dropDuplicates(["subj", "obj"]).localCheckpoint()
         spark = e.sparkSession
-        frontier = spark.createDataFrame([(start, 0)], "node string, depth int")
+        frontier = local_frame(spark, [(start, 0)], "node string, depth int")
         visited = frontier.localCheckpoint()
         for d in range(1, max_depth + 1):
             nxt = (
@@ -592,8 +593,8 @@ class GraphQueries:
             .dropDuplicates(["subj", "obj"])
             .localCheckpoint()
         )
-        frontier = edges.sparkSession.createDataFrame(
-            [(src, [src])], "node string, path array<string>"
+        frontier = local_frame(
+            edges.sparkSession, [(src, [src])], "node string, path array<string>"
         )
         visited = frontier.select("node").localCheckpoint()
         depth_reached = 0

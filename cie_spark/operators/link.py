@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from cie_spark import spec
 from cie_spark import functions as CF
+from cie_spark.session import local_frame
 
 
 def dictionary_df(spark: SparkSession) -> DataFrame:
@@ -35,8 +36,8 @@ def dictionary_df(spark: SparkSession) -> DataFrame:
     rows = [
         (k, v, v.removeprefix("ent:")) for k, v in sorted(spec.SURFACE_TO_CANONICAL.items())
     ]
-    return spark.createDataFrame(
-        rows, "surface_norm string, entity_id string, canonical_name string"
+    return local_frame(
+        spark, rows, "surface_norm string, entity_id string, canonical_name string"
     )
 
 
@@ -333,7 +334,7 @@ def link_surfaces(
     if local:
         linked = _collect_and_link_local(distinct, dic, dictionary is None)
         if linked is not None:
-            return spark.createDataFrame(linked, LINKMAP_SCHEMA)
+            return local_frame(spark, linked, LINKMAP_SCHEMA)
         # vocabulary exceeded the cap (or the dict-miss × dictionary fuzzy
         # product exceeded LOCAL_FUZZY_BUDGET): fall through to the
         # distributed tiers (the upstream is persisted by callers, so the

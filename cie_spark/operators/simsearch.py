@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cie_spark.operators.dedup import _band_buckets, _pair_expand, _split_bands
+from cie_spark.session import local_frame
 
 
 def _as_double(col: Column) -> Column:
@@ -201,10 +202,10 @@ def topk_ivf(
 # numpy kernel (_verify_buckets) over a matrix fetched once via toArrow():
 #
 # - driver (<= LOCAL_MAX_VECTORS rows): signatures, buckets and verify all
-#   run in numpy on the driver, returning a LocalRelation. At this size the
-#   distributed plan is ~6 stages of scheduling for ~1 ms of math (measured
-#   3.3 s for 2,000 vectors at sf0.1). 8,192 rows × dim <= ~1.5k is
-#   <= ~100 MB of Arrow — driver-bounded.
+#   run in numpy on the driver, returning a local_frame LocalRelation. At
+#   this size the distributed plan is ~6 stages of scheduling for ~1 ms of
+#   math (measured 3.3 s for 2,000 vectors at sf0.1). 8,192 rows × dim
+#   <= ~1.5k is <= ~100 MB of Arrow — driver-bounded.
 # - broadcast (matrix <= BROADCAST_MAX_BYTES as float64, <=
 #   BROADCAST_MAX_ROWS rows): buckets are built distributed and fed whole
 #   to the kernel over the broadcast matrix in mapInPandas, so candidate
@@ -395,8 +396,9 @@ def cosine_near_dup_pairs(
         pairs = {} if out is None else dict(
             zip(zip(out["id_a"].tolist(), out["id_b"].tolist()), out["sim"].tolist())
         )
-        return vectors.sparkSession.createDataFrame(
-            [(a, b, s) for (a, b), s in pairs.items()], out_schema
+        return local_frame(
+            vectors.sparkSession,
+            [(a, b, s) for (a, b), s in pairs.items()], out_schema,
         ).select("id_a", "id_b", F.round("sim", 4).alias("sim"))
 
     sig = vectors.select(

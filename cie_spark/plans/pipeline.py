@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from cie_spark import schema
 from cie_spark.operators import canon, extract, link, triples, validate
+from cie_spark.session import local_frame
 from cie_spark.sources.io_snapshots import SnapshotTable
 
 RESUME_POLICIES = ("trust_checkpoint", "force_reprocess", "fail_fast")
@@ -139,7 +140,8 @@ class KGPipeline:
     # -- lineage --------------------------------------------------------
 
     def _record(self, run_id: str, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             [
                 (
                     run_id,
@@ -301,8 +303,9 @@ class KGPipeline:
             # on a link map the driver already holds as a list
             rows = link.link_surfaces_rows(self.spark, distinct)
             if rows is not None:
-                merged = self.spark.createDataFrame(
-                    canon.canonicalize_rows_local(rows), link.LINKMAP_SCHEMA
+                merged = local_frame(
+                    self.spark, canon.canonicalize_rows_local(rows),
+                    link.LINKMAP_SCHEMA,
                 )
                 self._pending_links = merged
                 return merged
@@ -461,6 +464,35 @@ class KGPipeline:
         self._set_source_snapshot(cur)
         return out
 
+    # -- vertices ---------------------------------------------------------
+
+    @staticmethod
+    def _entity_rows(linked: DataFrame) -> DataFrame:
+        """One vertex row per linked entity id, with its surface forms and
+        its name embedding."""
+        from cie_spark.functions.embedding_provider import (
+            MockEmbeddingProvider,
+            RetryingProvider,
+            embedding_udf,
+        )
+
+        # A19 provider seam IN USE: swap MockEmbeddingProvider for a real
+        # network provider here — classified retry/backoff and the Arrow
+        # batch dataflow stay identical
+        embed = embedding_udf(RetryingProvider(MockEmbeddingProvider()))
+        name = F.regexp_replace("entity_id", "^(ent:|tool:)", "")
+        return (
+            linked.groupBy("entity_id")
+            .agg(
+                F.min("kind").alias("kind"),
+                F.array_sort(F.collect_set("surface")).alias("surfaces"),
+            )
+            .select(
+                "entity_id", "kind", name.alias("canonical_name"), "surfaces",
+                embed(name).alias("embedding"),
+            )
+        )
+
     # -- run --------------------------------------------------------------
 
     def run(
@@ -521,8 +553,8 @@ class KGPipeline:
         if resume == "force_reprocess":
             # full path: the conversation-hash pass is FUSED into the
             # extraction scan (extract.py turn_rows) — the source is read
-            # exactly once; `delta` is derived from the mentions cache after
-            # the triples action materializes it. (Incremental runs keep the
+            # exactly once; `delta` is derived from the mentions cache and
+            # counted inside the write wave (step 6). (Incremental runs keep the
             # separate JVM hash pass: there the whole corpus must be hashed
             # to find the usually-tiny delta before extracting it.)
             delta = None
@@ -538,16 +570,17 @@ class KGPipeline:
             small_ids = None
             if 0 < n_delta <= SMALL_DELTA_CONVS and rows_in <= SMALL_DELTA_ROWS:
                 # small-delta fast path: the delta is driver-trivial —
-                # collect it once (bounded by the cap), turn it into a
-                # LocalRelation (the downstream purge/checkpoint merges stop
-                # re-running its lineage), scope by a literal predicate
-                # instead of a broadcast join, and run the rest under the
-                # small-run conf guard. Bucket sets for the commit merges
-                # are hashed in-process (no bucket-discovery job rounds).
+                # collect it once (bounded by the cap), re-ship it as a
+                # local_frame LocalRelation (the downstream purge/checkpoint
+                # merges stop re-running its lineage), scope by a literal
+                # predicate instead of a broadcast join, and run the rest
+                # under the small-run conf guard. Bucket sets for the commit
+                # merges are hashed in-process (no bucket-discovery jobs).
                 local_delta = delta.collect()
                 delta.unpersist()
-                delta = self.spark.createDataFrame(
-                    local_delta, "conv_id string, conv_hash string, n_turns long"
+                delta = local_frame(
+                    self.spark, local_delta,
+                    "conv_id string, conv_hash string, n_turns long",
                 )
                 small_ids = [r["conv_id"] for r in local_delta]
                 scoped = transcripts.filter(F.col("conv_id").isin(small_ids))
@@ -585,7 +618,7 @@ class KGPipeline:
         ents = mentions.filter(F.col("kind") == "entity")
         linkmap = self._link_with_dictionary(ents.select("surface"))
         if not linkmap.isLocal():
-            # a driver-local link map is a LocalRelation — caching it only
+            # a local_frame link map is a LocalRelation — caching it only
             # adds a plan-normalization round-trip (profiled ~0.24 s/call)
             linkmap = linkmap.cache()
         linked_ents = ents.join(
@@ -597,162 +630,99 @@ class KGPipeline:
             F.concat(F.lit("tool:"), link.CF.norm_col("surface")).alias("entity_id"),
             F.lit("dict").alias("link_tier"),
         )
+        linked = linked_ents.select(*tool_rows.columns).unionByName(tool_rows).cache()
         from pyspark.sql import Observation
 
         # linked-row count AND the distinct-surface lineage stat ride the
-        # triples action below via one Observation (linking is
-        # row-preserving, so two fewer driver-serialized jobs — the former
-        # linkmap.count() was one full driver job round per run; each saved
-        # job is fixed latency that would cap scaling efficiency).
-        # approx_count_distinct because observe() forbids exact distinct
-        # aggregates; the stat is observability-only.
+        # triples write below via one Observation (linking is row-preserving,
+        # so no count job of their own). approx_count_distinct because
+        # observe() forbids exact distinct aggregates; the stat is
+        # observability-only. Observed ABOVE the cache, on the triples'
+        # input only: the write wave's jobs build the `linked` cache
+        # concurrently, and an Observation inside the cached plan reports
+        # whichever query finishes first, before the other query's share of
+        # the cache build is counted.
         linked_obs = Observation("linked_rows")
-        linked = (
-            linked_ents.select(*tool_rows.columns)
-            .unionByName(tool_rows)
-            .observe(
-                linked_obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.approx_count_distinct(
-                    F.when(F.col("kind") == "entity", F.col("surface"))
-                ).alias("surfaces"),
-            )
-            .cache()
+        linked_counted = linked.observe(
+            linked_obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.approx_count_distinct(
+                F.when(F.col("kind") == "entity", F.col("surface"))
+            ).alias("surfaces"),
         )
         link_finished = _now()
 
-        # 5. triples + data-quality observation (same action as the count —
-        # the Observation rides the count job for free; fail-on-violation
-        # matches the reference's ValidateEntities step, datalog.go:62-175)
+        # 5. triples + data-quality observation (fail-on-violation matches
+        # the reference's ValidateEntities step, datalog.go:62-175). The DQ
+        # counters and the triple count ride the triples WRITE in step 6 —
+        # there is no count job; the verdict is read between that write and
+        # the first commit. Cached when the triples table exists: a merge
+        # reads its incoming frame twice (key anti-join + union), and
+        # all_triples must run once. Into an empty table the merge is a
+        # plain overwrite that reads it once, and a cache would only add a
+        # materialization job to the write's critical path.
         trips_started = _now()
-        trips_checked, dq_obs = validate.validate_triples(
-            triples.all_triples(linked, scoped)
+        trips, dq_obs = validate.validate_triples(
+            triples.all_triples(linked_counted, scoped)
         )
-        trips = trips_checked.cache()
-        if delta is None:
+        if self.triples.exists():
+            trips = trips.cache()
+        fused = delta is None
+        if fused:
             # fused path: derive the hash delta from the _turn lane rows the
             # extraction scan emitted — a cache-read aggregation over narrow
-            # rows, not a second pass over the source text. Submitted from a
-            # side thread CONCURRENTLY with the triples count: both jobs
-            # only read the already-materialized mentions cache, and the
-            # delta result is not needed until the materialize stage — run
-            # serially this was one extra driver job round of per-leg serial
-            # cost (the N→4N scaling tax).
-            from concurrent.futures import ThreadPoolExecutor
+            # rows, not a second pass over the source text. Its count job
+            # joins the write wave; the processed_convs write reads the same
+            # cache.
+            delta = self._lane_agg(
+                mentions.filter(F.col("kind") == "_turn").select(
+                    "conv_id", F.col("h1").alias("_h1"), F.col("h2").alias("_h2"),
+                )
+            ).cache()
 
-            def _fused_delta():
-                d = self._lane_agg(
-                    mentions.filter(F.col("kind") == "_turn").select(
-                        "conv_id",
-                        F.col("h1").alias("_h1"),
-                        F.col("h2").alias("_h2"),
-                    )
-                ).cache()
-                row = d.agg(
-                    F.count("*"), F.coalesce(F.sum("n_turns"), F.lit(0))
-                ).first()
-                return d, int(row[0]), int(row[1])
-
-            with ThreadPoolExecutor(max_workers=1) as _pool:
-                delta_fut = _pool.submit(_fused_delta)
-                n_triples = trips.count()
-            delta, n_delta, rows_in = delta_fut.result()
-            lineage_rows.insert(0, dict(
-                stage="source", rows_in=rows_in, rows_out=rows_in,
-                partition_key=f"convs={n_delta}", started=source_started,
-                finished=_now(),
-            ))
-            if rows_in == 0:
-                # empty source: same {skipped} short-circuit the incremental
-                # path takes — without it a full run over nothing would
-                # commit fresh empty triples/entities/processed snapshots,
-                # churning snapshot history (ADVICE r4 low). Detected from
-                # the already-materialized fused delta, so the full-run path
-                # still reads the source exactly once (no isEmpty probe).
-                for c in (delta, mentions, linkmap, linked, trips):
-                    c.unpersist()
-                self._record(run_id, lineage_rows)
-                return {"run_id": run_id, "rows_in": 0, "triples": 0,
-                        "seconds": time.time() - t0, "skipped": True}
-        else:
-            n_triples = trips.count()
-        n_linked = int(linked_obs.get["rows"])
-        n_surfaces = int(linked_obs.get["surfaces"])
-        n_mentions = n_linked  # linking is row-preserving
-        lineage_rows.append(
-            dict(stage="extract", rows_in=rows_in, rows_out=n_mentions,
-                 started=extract_started, finished=started)
-        )
-        lineage_rows.append(
-            dict(stage="link+canon", rows_in=n_mentions, rows_out=n_linked,
-                 # '~': HLL-approximate (rode the Observation, no extra job)
-                 partition_key=f"surfaces~{n_surfaces}",
-                 started=started, finished=link_finished)
-        )
-        started = trips_started
-        dq = dq_obs.get
-        n_violations = sum(v for k, v in dq.items() if k != "rows" and v)
-        lineage_rows.append(
-            dict(stage="triples", rows_in=n_linked, rows_out=n_triples,
-                 errors=n_violations,
-                 partition_key=None if not n_violations else str(
-                     {k: v for k, v in dq.items() if k != "rows" and v}),
-                 started=started, finished=_now())
-        )
-        if fail_on_violation and n_violations:
-            self._record(run_id, lineage_rows)
-            validate.assert_clean(dq)
-
-        # 6. materialize: stale-conv purge + idempotent keyed MERGE fused
-        # into ONE bucket-granular rewrite (anti-join, never a collected
-        # IN-list — driver-safe at 10^6 changed conversations)
-        started = _now()
-        from cie_spark.functions.embedding_provider import (
-            MockEmbeddingProvider,
-            RetryingProvider,
-            embedding_udf,
-        )
-
-        # A19 provider seam IN USE: swap MockEmbeddingProvider for a real
-        # network provider here — classified retry/backoff and the Arrow
-        # batch dataflow stay identical
-        embed = embedding_udf(RetryingProvider(MockEmbeddingProvider()))
-        ent_df = (
-            linked.groupBy("entity_id")
-            .agg(
-                F.min("kind").alias("kind"),
-                F.array_sort(F.collect_set("surface")).alias("surfaces"),
-            )
-            .select(
-                "entity_id",
-                "kind",
-                F.regexp_replace("entity_id", "^(ent:|tool:)", "").alias(
-                    "canonical_name"
-                ),
-                "surfaces",
-                embed(
-                    F.regexp_replace("entity_id", "^(ent:|tool:)", "")
-                ).alias("embedding"),
-            )
-        )
-        # Edge and vertex commits are independent idempotent merges into
-        # separate tables; run them from two threads so their driver-side
-        # job rounds overlap (serial commit latency is exactly what caps the
-        # N->4N scaling efficiency — the checkpoint commit stays strictly
-        # after both, preserving crash-consistency).
-        #
-        # Entities WHEN MATCHED: union the accumulated surface forms instead
-        # of replacing them — an incremental touch must not shrink an
-        # entity's alias set to just the surfaces seen in this delta. When
-        # the run linked NO new surfaces, every (entity_id <- surface) pair
-        # was already merged by the run that committed the dictionary, so
-        # the merge is a provable no-op and is skipped (saves one bucket
-        # rewrite per incremental run). Crash-safe because the dictionary
-        # commit happens only after the entities merge.
+        # 6. materialize + 7. checkpoint, as ONE write wave. Each bucketed
+        # merge fuses the stale-conv purge into its keyed upsert: ONE
+        # bucket-granular rewrite (anti-join, never a collected IN-list —
+        # driver-safe at 10^6 changed conversations).
+        pending_links, self._pending_links = self._pending_links, None
+        # The four table writes (triples, entities, surface_links,
+        # processed_convs) run at once, one thread each: every write is
+        # scheduling-bound at this size, so serial waves were serial
+        # latency. Only the manifest commits are ordered, each held by its
+        # merge's `before_commit` gate until the commits it must follow
+        # have landed — the crash-safe order:
+        #   - the DQ verdict (full path: also the empty-source check) gates
+        #     the triples commit, and every other commit follows that one;
+        #   - triples and entities commit before processed_convs: a
+        #     conversation is never marked processed before its edges and
+        #     vertices are durable;
+        #   - entities commit before surface_links: a crash in between
+        #     leaves the dictionary un-advanced, so the next run re-links
+        #     and re-merges (the skip-entities shortcut below stays
+        #     crash-safe);
+        #   - lineage is written last, after the wave.
+        # A gate that raises makes its merge remove the fileset it wrote, so
+        # an aborted run leaves every table's HEAD and data as they were.
         from concurrent.futures import ThreadPoolExecutor
 
+        wave_started = _now()
+        verdict: dict = {}
+        done: dict = {}
+
+        def _verdict() -> None:
+            if delta_fut is not None:
+                n, rows = delta_fut.result()
+                verdict.update(n_delta=int(n), rows_in=int(rows))
+                if not rows:
+                    raise _EmptySource
+            verdict["dq"] = dq_obs.get
+            verdict["linked"] = linked_obs.get
+            verdict["finished"] = _now()
+            if fail_on_violation:
+                validate.assert_clean(verdict["dq"])
+
         def _commit_edges() -> str:
-            return self.triples.merge(
+            snap = self.triples.merge(
                 trips, keys=["subj", "pred", "obj", "conv_id", "turn_idx"],
                 purge=delta.select("conv_id"), purge_keys=["conv_id"],
                 purge_covers=True,  # every emitted triple belongs to a delta conv
@@ -762,10 +732,20 @@ class KGPipeline:
                     self.triples.buckets_for_keys(small_ids)
                     if small_ids is not None else None
                 ),
+                before_commit=_verdict,
             )
+            done["triples"] = _now()
+            return snap
 
-        def _commit_vertices() -> None:
-            need_merge = self._pending_links is not None or not self.entities.exists()
+        def _commit_vertices(edges_fut) -> None:
+            # Entities WHEN MATCHED: union the accumulated surface forms
+            # instead of replacing them — an incremental touch must not
+            # shrink an entity's alias set to just the surfaces seen in this
+            # delta. When the run linked NO new surfaces, every (entity_id
+            # <- surface) pair was already merged by the run that committed
+            # the dictionary, so the merge is a provable no-op and is
+            # skipped (saves one bucket rewrite per incremental run).
+            need_merge = pending_links is not None or not self.entities.exists()
             if not need_merge:
                 # Tool vertices never ride the surface dictionary (they link
                 # deterministically as 'tool:<norm>'), so "no new entity
@@ -783,54 +763,99 @@ class KGPipeline:
                 need_merge = not new_tools.isEmpty()
             if need_merge:
                 self.entities.merge(
-                    ent_df, keys=["entity_id"], resolve=_merge_entity_surfaces
+                    self._entity_rows(linked), keys=["entity_id"],
+                    resolve=_merge_entity_surfaces,
+                    before_commit=edges_fut.result,
                 )
-            if self._pending_links is not None:
-                self.links.overwrite(self._pending_links)
-                self._pending_links = None
+            done["entities"] = _now()
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        def _commit_links(verts_fut) -> None:
+            self.links.overwrite(pending_links, before_commit=verts_fut.result)
+            done["surface_links"] = _now()
+
+        def _checkpoint(edges_fut, verts_fut) -> None:
+            self.processed.merge(
+                delta.select("conv_id", "conv_hash", "n_turns"),
+                ["conv_id"],
+                aff_hint=(
+                    self.processed.buckets_for_keys(small_ids)
+                    if small_ids is not None else None
+                ),
+                before_commit=lambda: (edges_fut.result(), verts_fut.result()),
+            )
+            done["checkpoint"] = _now()
+
+        # each task is submitted after the tasks its gate waits on
+        with ThreadPoolExecutor(max_workers=5) as pool:
+            delta_fut = pool.submit(_agg) if fused else None
             edges_fut = pool.submit(_commit_edges)
-            verts_fut = pool.submit(_commit_vertices)
-            snap_id = edges_fut.result()
-            verts_fut.result()
+            verts_fut = pool.submit(_commit_vertices, edges_fut)
+            futs = [edges_fut, verts_fut]
+            if pending_links is not None:
+                futs.append(pool.submit(_commit_links, verts_fut))
+            futs.append(pool.submit(_checkpoint, edges_fut, verts_fut))
+        for c in (delta, mentions, linkmap, linked, trips):
+            c.unpersist()
+        err = next((e for e in (f.exception() for f in futs) if e), None)
+        if fused:
+            n_delta, rows_in = verdict.get("n_delta"), verdict.get("rows_in")
+            lineage_rows.insert(0, dict(
+                stage="source", rows_in=rows_in, rows_out=rows_in,
+                partition_key=f"convs={n_delta}", started=source_started,
+                finished=verdict.get("finished"),
+            ))
+        if isinstance(err, _EmptySource):
+            # empty source: same {skipped} short-circuit the incremental
+            # path takes — without it a full run over nothing would commit
+            # fresh empty snapshots, churning snapshot history (ADVICE r4
+            # low). Detected by the fused delta count inside the wave, so
+            # the full-run path still reads the source exactly once; the
+            # vetoed gates removed the empty filesets.
+            self._record(run_id, lineage_rows)
+            return {"run_id": run_id, "rows_in": 0, "triples": 0,
+                    "seconds": time.time() - t0, "skipped": True}
+        if "dq" not in verdict:  # the triples write itself failed
+            raise err
+        dq = verdict["dq"]
+        n_triples = int(dq["rows"])
+        n_linked = int(verdict["linked"]["rows"])
+        n_surfaces = int(verdict["linked"]["surfaces"])
+        n_mentions = n_linked  # linking is row-preserving
+        lineage_rows.append(
+            dict(stage="extract", rows_in=rows_in, rows_out=n_mentions,
+                 started=extract_started, finished=started)
+        )
+        lineage_rows.append(
+            dict(stage="link+canon", rows_in=n_mentions, rows_out=n_linked,
+                 # '~': HLL-approximate (rode the Observation, no extra job)
+                 partition_key=f"surfaces~{n_surfaces}",
+                 started=started, finished=link_finished)
+        )
+        bad = {k: v for k, v in dq.items() if k != "rows" and v}
+        n_violations = sum(bad.values())
+        lineage_rows.append(
+            dict(stage="triples", rows_in=n_linked, rows_out=n_triples,
+                 errors=n_violations, partition_key=str(bad) if bad else None,
+                 started=trips_started, finished=verdict["finished"])
+        )
+        if err is not None:
+            if fail_on_violation and n_violations:
+                # the violation counts are recorded before the abort
+                self._record(run_id, lineage_rows)
+            raise err
+        snap_id = edges_fut.result()
         lineage_rows.append(
             dict(stage="materialize", rows_in=n_triples, rows_out=n_triples,
-                 started=started, finished=_now(), snapshot_id=snap_id)
+                 started=wave_started,
+                 finished=max(v for k, v in done.items() if k != "checkpoint"),
+                 snapshot_id=snap_id)
         )
-
-        # 7. checkpoint processed conversations — overlapped with the
-        # lineage append: both are small independent commits that only need
-        # to finish before return, so their driver job rounds run from two
-        # threads (two of the four formerly-sequential end-of-run commits;
-        # serial commit latency is exactly what caps N->4N scaling). The
-        # checkpoint still starts strictly AFTER the edge/vertex merges:
-        # a conversation must never be marked processed before its triples
-        # are durably committed (crash consistency). Its lineage row is
-        # recorded in-flight (finished=NULL) — the processed table's own
-        # snapshot carries the authoritative commit time.
-        started = _now()
         lineage_rows.append(
             dict(stage="checkpoint", rows_in=n_delta, rows_out=n_delta,
-                 started=started, finished=None)
+                 started=wave_started, finished=done["checkpoint"])
         )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ck_fut = pool.submit(
-                lambda: self.processed.merge(
-                    delta.select("conv_id", "conv_hash", "n_turns"),
-                    ["conv_id"],
-                    aff_hint=(
-                        self.processed.buckets_for_keys(small_ids)
-                        if small_ids is not None else None
-                    ),
-                )
-            )
-            rec_fut = pool.submit(self._record, run_id, lineage_rows)
-            ck_fut.result()
-            rec_fut.result()
+        self._record(run_id, lineage_rows)
         secs = time.time() - t0
-        for df in (delta, mentions, linkmap, linked, trips):
-            df.unpersist()
         return {
             "run_id": run_id,
             "rows_in": rows_in,
@@ -841,6 +866,11 @@ class KGPipeline:
             "triples_per_sec": n_triples / secs if secs > 0 else 0.0,
             "snapshot_id": snap_id,
         }
+
+
+class _EmptySource(Exception):
+    """Raised by the full run's triples gate when the fused delta counted no
+    source rows: vetoes every commit of the write wave."""
 
 
 def _merge_entity_surfaces(cur: DataFrame | None, new: DataFrame) -> DataFrame:

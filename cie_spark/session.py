@@ -15,9 +15,34 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held rows (tuples or Rows, in schema order),
+    shipped as one Arrow table: the plan is a LocalRelation (`isLocal()`,
+    a LocalTableScan), with exactly `schema`'s types and nullable flags.
+
+    The only way the engine turns driver-side results into a DataFrame.
+    `spark.createDataFrame(list)` is a pickled `parallelize` RDD instead:
+    every consumption of it runs one Python-worker task per default-
+    parallelism slot, ~0.5 s of scheduling for a handful of rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def get_spark(

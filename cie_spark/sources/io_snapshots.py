@@ -299,16 +299,26 @@ class SnapshotTable:
                 schema_info, new_stats,
             )
 
-    def _commit_cleaning(self, new_filesets: list[str], *args, **kwargs) -> str:
-        """_commit, but on CommitConflict first remove the fileset dirs this
-        attempt wrote: they are uuid-private to the losing attempt and no
+    def _commit_cleaning(
+        self, new_filesets: list[str], *args,
+        before_commit: Callable[[], object] | None = None, **kwargs,
+    ) -> str:
+        """_commit, run after `before_commit()` (a caller's gate between
+        the written fileset and its commit). If either raises — a lost CAS
+        race, or a gate that vetoes the commit — first remove the fileset
+        dirs this attempt wrote: they are uuid-private to the attempt and no
         manifest references them, yet expire_snapshots deliberately never
-        touches unreferenced dirs — without this every lost race leaks a full
-        fileset copy forever (ADVICE r3 low)."""
+        touches unreferenced dirs — without this every lost race or vetoed
+        write leaks a full fileset copy forever (ADVICE r3 low)."""
         try:
+            if before_commit is not None:
+                before_commit()
             return self._commit(*args, **kwargs)
-        except CommitConflict:
+        except Exception:
+            live = self._live_filesets(self.current_snapshot())
             for fs in new_filesets:
+                if fs in live:  # failed after HEAD moved: it is committed
+                    continue
                 shutil.rmtree(
                     os.path.join(self.root, "data", fs), ignore_errors=True
                 )
@@ -701,14 +711,22 @@ class SnapshotTable:
             schema_info=sinfo,
         )
 
-    def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
+    def overwrite(
+        self, df: DataFrame, partition_by: list[str] | None = None,
+        before_commit: Callable[[], object] | None = None,
+    ) -> str:
+        """`before_commit`: as in merge()."""
         # replace-everything semantics: no parent check — an overwrite wins
         # over whatever committed in between by definition
-        return self._overwrite_once(df, partition_by, expected_parent=_UNCHECKED)
+        return self._overwrite_once(
+            df, partition_by, expected_parent=_UNCHECKED,
+            before_commit=before_commit,
+        )
 
     def _overwrite_once(
         self, df: DataFrame, partition_by: list[str] | None,
         expected_parent: str | None,
+        before_commit: Callable[[], object] | None = None,
     ) -> str:
         # overwrite resets the table schema to the frame's (no old files
         # survive, so there is nothing to evolve against)
@@ -720,12 +738,13 @@ class SnapshotTable:
                 [fs],
                 [fs], "overwrite", {}, buckets, part or [],
                 expected_parent=expected_parent, schema_info=sinfo,
+                before_commit=before_commit,
             )
         fs = self._write_fileset(df, partition_by)
         return self._commit_cleaning(
             [fs],
             [fs], "overwrite", {}, expected_parent=expected_parent,
-            schema_info=sinfo,
+            schema_info=sinfo, before_commit=before_commit,
         )
 
     def merge(
@@ -738,11 +757,12 @@ class SnapshotTable:
         resolve: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         purge_covers: bool = False,
         aff_hint: set[int] | None = None,
+        before_commit: Callable[[], object] | None = None,
     ) -> str:
         return self._retrying(
             lambda: self._merge_once(
                 df, keys, partition_by, purge, purge_keys, resolve,
-                purge_covers, aff_hint,
+                purge_covers, aff_hint, before_commit,
             )
         )
 
@@ -756,6 +776,7 @@ class SnapshotTable:
         resolve: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         purge_covers: bool = False,
         aff_hint: set[int] | None = None,
+        before_commit: Callable[[], object] | None = None,
     ) -> str:
         """Copy-on-write MERGE: WHEN MATCHED UPDATE, WHEN NOT MATCHED INSERT,
         keyed on `keys` — idempotent upsert (reference :put semantics,
@@ -775,6 +796,12 @@ class SnapshotTable:
 
         On a bucketed table only the buckets containing affected keys are
         read + rewritten; every other bucket is carried forward untouched.
+
+        `before_commit()`: called once the new fileset is written, right
+        before the CAS commit (and again on each CAS retry). If it raises,
+        the fileset is removed and nothing commits — how a caller that
+        writes several tables at once holds each commit until the commits
+        it must follow have landed.
         """
         cur_snap = self.current_snapshot()
         self._adopt_spec(cur_snap)
@@ -787,7 +814,10 @@ class SnapshotTable:
             if cur_snap is None or not self._bucket_map(cur_snap):
                 if resolve is not None:
                     df = resolve(None, df)
-                return self._overwrite_once(df, partition_by, expected_parent=base)
+                return self._overwrite_once(
+                    df, partition_by, expected_parent=base,
+                    before_commit=before_commit,
+                )
             # purge_covers: caller guarantees every incoming key's bucket is
             # also a purge-key bucket (e.g. purge = changed conv_ids and
             # incoming rows all belong to changed convs) — saves one
@@ -843,6 +873,7 @@ class SnapshotTable:
                  "carried_buckets": len(new_bmap) - len(new_buckets)},
                 new_bmap, part or [],
                 expected_parent=base, schema_info=sinfo,
+                before_commit=before_commit,
             )
         # unbucketed: full-table copy-on-write (small tables only)
         cur = self.read(snapshot_id=base) if base else None
@@ -851,7 +882,10 @@ class SnapshotTable:
         if cur is None:
             if resolve is not None:
                 df = resolve(None, df)
-            return self._overwrite_once(df, partition_by, expected_parent=base)
+            return self._overwrite_once(
+                df, partition_by, expected_parent=base,
+                before_commit=before_commit,
+            )
         if purge is not None:
             cur = cur.join(
                 purge.dropDuplicates(purge_keys), on=purge_keys, how="left_anti"
@@ -864,7 +898,7 @@ class SnapshotTable:
         return self._commit_cleaning(
             [fs],
             [fs], "merge", {"keys": keys}, expected_parent=base,
-            schema_info=sinfo,
+            schema_info=sinfo, before_commit=before_commit,
         )
 
     def delete_matching(self, match_df: DataFrame, keys: list[str]) -> str:

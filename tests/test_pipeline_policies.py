@@ -4,6 +4,8 @@ incremental (run_from_table), and entity-surface accumulation."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,9 +24,29 @@ def _triple_set(p):
     }
 
 
-def test_dq_violation_fails_the_run(spark, tmp_path, monkeypatch):
-    """Injected bad triple rows (empty subj, unknown pred, negative turn)
-    must abort the run before materialize — datalog.go:62-175 semantics."""
+COMMITTED = ("triples", "entities", "processed_convs", "surface_links")
+
+
+def _tables(p):
+    return {
+        "triples": p.triples, "entities": p.entities,
+        "processed_convs": p.processed, "surface_links": p.links,
+    }
+
+
+def _filesets(p) -> dict:
+    """fs-* data directories per committed table."""
+    return {
+        name: sorted(d.name for d in (Path(t.root) / "data").glob("fs-*"))
+        for name, t in _tables(p).items()
+    }
+
+
+def _heads(p) -> dict:
+    return {name: t.current_snapshot_id() for name, t in _tables(p).items()}
+
+
+def _inject_bad_triple(monkeypatch):
     orig = pl.triples.all_triples
 
     def bad(linked, transcripts=None):
@@ -37,15 +59,79 @@ def test_dq_violation_fails_the_run(spark, tmp_path, monkeypatch):
         return df.unionByName(bad_row)
 
     monkeypatch.setattr(pl.triples, "all_triples", bad)
+
+
+def test_dq_violation_fails_the_run(spark, tmp_path, monkeypatch):
+    """Injected bad triple rows (empty subj, unknown pred, negative turn)
+    must abort the run before any commit — datalog.go:62-175 semantics —
+    and leave no staged fileset behind in any table the write wave wrote."""
+    _inject_bad_triple(monkeypatch)
     p = KGPipeline(spark, str(tmp_path / "wh"))
     t = generate_transcripts(spark, n_convs=4, avg_turns=5, seed=3)
     with pytest.raises(ValueError, match="data-quality violations"):
         p.run(t)
-    # nothing was materialized
+    # nothing was materialized, and nothing leaked
     assert p.triples.read() is None
+    assert _heads(p) == dict.fromkeys(COMMITTED)
+    assert _filesets(p) == {name: [] for name in COMMITTED}
     # the violation counts were recorded in lineage before the abort
     lin = {r.stage: r for r in p.lineage.read().collect()}
     assert lin["triples"].errors >= 3
+
+
+def test_dq_violation_on_incremental_run_keeps_every_head(
+    spark, tmp_path, monkeypatch
+):
+    """A violation arriving on an incremental run into a non-empty
+    warehouse (one edited conv, one new surface) moves no table's HEAD and
+    leaves only the filesets the healthy run committed."""
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=8)
+    base = generate_transcripts(spark, n_convs=5, avg_turns=5, seed=8).cache()
+    p.run(base)
+    heads, filesets = _heads(p), _filesets(p)
+    assert all(heads.values())
+    edited = base.withColumn(
+        "text",
+        F.when(
+            (F.col("conv_id") == "conv-000002") & (F.col("turn_idx") == 0),
+            F.lit("now about [[Grafana]] and [[Zanzibar-DB]]"),
+        ).otherwise(F.col("text")),
+    )
+    _inject_bad_triple(monkeypatch)
+    with pytest.raises(ValueError, match="data-quality violations"):
+        p.run(edited)
+    assert _heads(p) == heads
+    assert _filesets(p) == filesets
+    base.unpersist()
+
+
+def test_failed_triples_commit_blocks_later_commits(spark, tmp_path, monkeypatch):
+    """Commit order: when the triples commit raises, processed_convs and
+    surface_links (which commit after it) get no snapshot and their staged
+    filesets are removed; the next run converges to the healthy triples."""
+    t = generate_transcripts(spark, n_convs=6, avg_turns=6, seed=21).cache()
+    healthy = KGPipeline(spark, str(tmp_path / "ref"))
+    healthy.run(t)
+
+    p = KGPipeline(spark, str(tmp_path / "wh"))
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected triples commit failure")
+
+    monkeypatch.setattr(p.triples, "_commit", boom)
+    with pytest.raises(RuntimeError, match="injected triples commit failure"):
+        p.run(t)
+    for name in ("processed_convs", "surface_links"):
+        assert _tables(p)[name].current_snapshot() is None
+        assert _filesets(p)[name] == []
+    assert p.triples.current_snapshot() is None
+
+    monkeypatch.undo()
+    r = p.run(t)
+    assert not r.get("skipped")
+    assert _triple_set(p) == _triple_set(healthy)
+    assert p.run(t).get("skipped") is True
+    t.unpersist()
 
 
 def test_fail_fast_detects_checkpoint_drift(spark, tmp_path):
