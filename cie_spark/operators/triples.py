@@ -23,6 +23,12 @@ Scale design
   conversation length. This *is* the salting of the skew key: the hot
   conv_id is split across blocks, so no single reducer sees a whole
   mega-conversation.
+- Bucket alignment: when `linked` carries the triples table's `_bucket`
+  (a function of conv_id, see SnapshotTable._bucket_col), every builder adds
+  it to its grouping and join keys and passes it through. The groups do not
+  change, but an input hash-partitioned on `_bucket` then satisfies every
+  aggregation here, and the write's own `_bucket` repartition, with no
+  further exchange.
 """
 
 from __future__ import annotations
@@ -35,6 +41,11 @@ from cie_spark import spec
 TRIPLE_COLS = ["subj", "pred", "obj", "conv_id", "turn_idx", "ts", "weight"]
 
 
+def bucket_keys(df: DataFrame) -> list[str]:
+    """["_bucket"] when `df` carries the bucket column, else []."""
+    return ["_bucket"] if "_bucket" in df.columns else []
+
+
 def calls_triples(linked: DataFrame, _transcripts: DataFrame | None = None) -> DataFrame:
     """(agent:<conv>, calls, tool:<name>) one row per tool mention."""
     return linked.filter(F.col("kind") == "tool").select(
@@ -45,6 +56,7 @@ def calls_triples(linked: DataFrame, _transcripts: DataFrame | None = None) -> D
         "turn_idx",
         "ts",
         F.lit(1).cast("long").alias("weight"),
+        *bucket_keys(linked),
     )
 
 
@@ -52,7 +64,8 @@ def contains_triples(linked: DataFrame, _transcripts: DataFrame | None = None) -
     """(conv:<conv>, contains, entity) distinct per conversation; provenance
     = first mention (min turn_idx) — deterministic."""
     ents = linked.filter(F.col("kind") == "entity")
-    firsts = ents.groupBy("conv_id", "entity_id").agg(
+    b = bucket_keys(linked)
+    firsts = ents.groupBy("conv_id", "entity_id", *b).agg(
         F.min("turn_idx").alias("turn_idx"),
         F.min_by("ts", "turn_idx").alias("ts"),
         F.count("*").alias("weight"),
@@ -65,6 +78,7 @@ def contains_triples(linked: DataFrame, _transcripts: DataFrame | None = None) -
         "turn_idx",
         "ts",
         "weight",
+        *b,
     )
 
 
@@ -77,9 +91,10 @@ def mentioned_with_triples(linked: DataFrame, _transcripts: DataFrame | None = N
     # one shuffle: per-turn entity sets (mentions/turn is a small constant,
     # so collect_set cannot skew), then in-row pair expansion — replaces the
     # dedup + self-join formulation (3 shuffles) with groupBy + explode (1)
+    b = bucket_keys(linked)
     per_turn = (
         linked.filter(F.col("kind") == "entity")
-        .groupBy("conv_id", "turn_idx")
+        .groupBy("conv_id", "turn_idx", *b)
         .agg(
             F.sort_array(F.collect_set("entity_id")).alias("es"),
             F.min("ts").alias("ts"),
@@ -92,22 +107,23 @@ def mentioned_with_triples(linked: DataFrame, _transcripts: DataFrame | None = N
         )
     )
     pairs = per_turn.select(
-        "conv_id", "turn_idx", "ts", F.explode(combos).alias("p")
+        "conv_id", "turn_idx", "ts", *b, F.explode(combos).alias("p")
     ).select(
         F.col("p.s").alias("subj"),
         F.col("p.o").alias("obj"),
         "conv_id",
         "turn_idx",
         "ts",
+        *b,
     )
-    agg = pairs.groupBy("subj", "obj", "conv_id").agg(
+    agg = pairs.groupBy("subj", "obj", "conv_id", *b).agg(
         F.min("turn_idx").alias("turn_idx"),
         F.min_by("ts", "turn_idx").alias("ts"),
         F.count("*").alias("weight"),
     )
     return agg.select(
         "subj", F.lit("mentioned_with").alias("pred"), "obj",
-        "conv_id", "turn_idx", "ts", "weight",
+        "conv_id", "turn_idx", "ts", "weight", *b,
     )
 
 
@@ -133,9 +149,10 @@ def mentioned_with_windowed(
     # joined row, where array_distinct removes it. Per-turn ts is min(ts)
     # — identical to the old per-entity ts, which is constant within a
     # turn. The turn-block salting (skew story) is unchanged.
+    b = bucket_keys(linked)
     per_turn = (
         linked.filter(F.col("kind") == "entity")
-        .groupBy("conv_id", "turn_idx")
+        .groupBy("conv_id", "turn_idx", *b)
         .agg(
             F.sort_array(F.collect_set("entity_id")).alias("es"),
             F.min("ts").alias("ts"),
@@ -144,6 +161,7 @@ def mentioned_with_windowed(
     blk = (F.col("turn_idx") / w).cast("long")
     left = per_turn.select(
         "conv_id",
+        *b,
         F.col("turn_idx").alias("ti"),
         F.col("es").alias("es_i"),
         F.col("ts").alias("ts_i"),
@@ -152,6 +170,7 @@ def mentioned_with_windowed(
     )
     right = per_turn.select(
         "conv_id",
+        *b,
         F.col("turn_idx").alias("tj"),
         F.col("es").alias("es_j"),
         blk.alias("block"),
@@ -170,34 +189,37 @@ def mentioned_with_windowed(
         )
     )
     pairs = (
-        left.join(right, on=["conv_id", "block"])
+        left.join(right, on=["conv_id", "block", *b])
         .filter((F.col("tj") > F.col("ti")) & (F.col("tj") - F.col("ti") <= w))
         .select(
             "conv_id",
             F.col("ti").alias("turn_idx"),
             F.col("ts_i").alias("ts"),
+            *b,
             F.explode(combos).alias("p"),
         )
         .select(
             F.col("p.s").alias("subj"), F.col("p.o").alias("obj"),
-            "conv_id", "turn_idx", "ts",
+            "conv_id", "turn_idx", "ts", *b,
         )
     )
-    agg = pairs.groupBy("subj", "obj", "conv_id").agg(
+    agg = pairs.groupBy("subj", "obj", "conv_id", *b).agg(
         F.min("turn_idx").alias("turn_idx"),
         F.min_by("ts", "turn_idx").alias("ts"),
         F.count("*").alias("weight"),
     )
     return agg.select(
         "subj", F.lit("mentioned_with_w").alias("pred"), "obj",
-        "conv_id", "turn_idx", "ts", "weight",
+        "conv_id", "turn_idx", "ts", "weight", *b,
     )
 
 
 def all_triples(linked: DataFrame, _transcripts: DataFrame | None = None) -> DataFrame:
-    """Union of the three core predicates in schema.TRIPLES column order."""
+    """Union of the three core predicates in schema.TRIPLES column order,
+    plus `_bucket` when `linked` carries it."""
+    cols = TRIPLE_COLS + bucket_keys(linked)
     return (
-        calls_triples(linked).select(TRIPLE_COLS)
-        .unionByName(contains_triples(linked).select(TRIPLE_COLS))
-        .unionByName(mentioned_with_triples(linked).select(TRIPLE_COLS))
+        calls_triples(linked).select(cols)
+        .unionByName(contains_triples(linked).select(cols))
+        .unionByName(mentioned_with_triples(linked).select(cols))
     )

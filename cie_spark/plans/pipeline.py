@@ -4,7 +4,9 @@
 Stages (each records a lineage row with counts + timing + snapshot id):
 
   1. source      transcripts (full, or incremental delta by conv_id)
-  2. extract     mapInPandas mention extraction (operators/extract.py)
+  2. extract     mapInPandas mention extraction (operators/extract.py); the
+                 mentions are hash-partitioned ONCE, by the triples table's
+                 `_bucket` (a function of conv_id), before they are cached
   3. link        3-tier entity linking (operators/link.py)
   4. canon       connected-components alias closure (operators/canon.py)
   5. triples     (subj,pred,obj) emission + data-quality observation
@@ -13,7 +15,10 @@ Stages (each records a lineage row with counts + timing + snapshot id):
   6. materialize stale-conv purge fused with idempotent keyed MERGE into
                  bucketed triples/entities snapshot tables — only buckets
                  containing affected conv_ids are rewritten (resume safety +
-                 incremental cost O(delta), not O(table))
+                 incremental cost O(delta), not O(table)). Every conv_id-
+                 keyed frame (the triples, the processed_convs delta) keeps
+                 `_bucket` in its keys, so on a full run the step-2 exchange
+                 is the only one between the mentions and the written files
   7. checkpoint  processed-conversations table update (hash-delta analog)
 
 Incremental semantics (analog of delta.go/hash_delta.go/checkpoint.go):
@@ -38,6 +43,7 @@ import time
 import uuid
 from datetime import datetime, timezone
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -184,9 +190,10 @@ class KGPipeline:
     def _lane_agg(hashed: DataFrame) -> DataFrame:
         """(conv_id, _h1, _h2) per row -> (conv_id, conv_hash, n_turns).
         Shared by the incremental hash pass and the fused full-run path
-        (extract.py turn_rows), so both store comparable hashes."""
+        (extract.py turn_rows), so both store comparable hashes. A `_bucket`
+        column, if present, is kept as a grouping key (see triples.py)."""
         # decimal(38,0) sums cannot overflow below ~10^19 turns per conv
-        return hashed.groupBy("conv_id").agg(
+        return hashed.groupBy("conv_id", *triples.bucket_keys(hashed)).agg(
             F.sha2(
                 F.concat_ws(
                     "|",
@@ -606,11 +613,23 @@ class KGPipeline:
 
         # 2. extract (no separate count: the first linking action
         # materializes this cache, and n_mentions == n_linked by
-        # construction — linking is row-preserving)
+        # construction — linking is row-preserving). The run's one
+        # exchange: mentions hash-partitioned on the triples table's
+        # `_bucket`, as many ways as the triples write has tasks, so every
+        # conv_id aggregation below and the bucketed writes keep this
+        # partitioning instead of shuffling again (see _write_bucketed).
         started = _now()
-        mentions = extract.extract_mentions(
-            scoped, prose=prose, turn_rows=(delta is None)
-        ).cache()
+        if small_ids is not None:
+            touched = self.triples.buckets_for_keys(small_ids)
+            n_part = self.triples.write_tasks(len(touched))
+        else:
+            touched, n_part = None, self.triples.write_tasks()
+        mentions = (
+            extract.extract_mentions(scoped, prose=prose, turn_rows=(delta is None))
+            .select("*", self.triples._bucket_col())
+            .repartition(n_part, "_bucket")
+            .cache()
+        )
         extract_started = started
 
         # 3. link (+ 4. canon on the small distinct-surface link map)
@@ -676,7 +695,8 @@ class KGPipeline:
             # cache.
             delta = self._lane_agg(
                 mentions.filter(F.col("kind") == "_turn").select(
-                    "conv_id", F.col("h1").alias("_h1"), F.col("h2").alias("_h2"),
+                    "conv_id", "_bucket",
+                    F.col("h1").alias("_h1"), F.col("h2").alias("_h2"),
                 )
             ).cache()
 
@@ -728,10 +748,7 @@ class KGPipeline:
                 purge_covers=True,  # every emitted triple belongs to a delta conv
                 # small path: touched buckets hashed in-process from the
                 # collected delta ids — no bucket-discovery job
-                aff_hint=(
-                    self.triples.buckets_for_keys(small_ids)
-                    if small_ids is not None else None
-                ),
+                aff_hint=touched,
                 before_commit=_verdict,
             )
             done["triples"] = _now()
@@ -775,7 +792,10 @@ class KGPipeline:
 
         def _checkpoint(edges_fut, verts_fut) -> None:
             self.processed.merge(
-                delta.select("conv_id", "conv_hash", "n_turns"),
+                delta.select(
+                    "conv_id", "conv_hash", "n_turns",
+                    *triples.bucket_keys(delta),
+                ),
                 ["conv_id"],
                 aff_hint=(
                     self.processed.buckets_for_keys(small_ids)
@@ -785,15 +805,21 @@ class KGPipeline:
             )
             done["checkpoint"] = _now()
 
+        def submit(fn, *args):
+            # a pool thread does not inherit the caller's Spark local
+            # properties (job group, description, scheduler pool); each
+            # wrap copies them, so each task gets a private copy
+            return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+
         # each task is submitted after the tasks its gate waits on
         with ThreadPoolExecutor(max_workers=5) as pool:
-            delta_fut = pool.submit(_agg) if fused else None
-            edges_fut = pool.submit(_commit_edges)
-            verts_fut = pool.submit(_commit_vertices, edges_fut)
+            delta_fut = submit(_agg) if fused else None
+            edges_fut = submit(_commit_edges)
+            verts_fut = submit(_commit_vertices, edges_fut)
             futs = [edges_fut, verts_fut]
             if pending_links is not None:
-                futs.append(pool.submit(_commit_links, verts_fut))
-            futs.append(pool.submit(_checkpoint, edges_fut, verts_fut))
+                futs.append(submit(_commit_links, verts_fut))
+            futs.append(submit(_checkpoint, edges_fut, verts_fut))
         for c in (delta, mentions, linkmap, linked, trips):
             c.unpersist()
         err = next((e for e in (f.exception() for f in futs) if e), None)

@@ -60,6 +60,11 @@ _COMMIT_RETRIES = 5
 # sentinel: commit without a parent check (overwrite semantics)
 _UNCHECKED = "__unchecked__"
 
+# column-metadata key on a `_bucket` column: the bucket spec it was computed
+# under (see SnapshotTable._bucket_col), so a write trusts a pre-bucketed
+# frame only while the table still has that spec
+_BUCKET_SPEC = "cie.bucket_spec"
+
 
 class CommitConflict(RuntimeError):
     """HEAD moved between the snapshot read and the commit — another writer
@@ -414,9 +419,11 @@ class SnapshotTable:
     def _evolve_schema(
         self, prev: dict | None, df: DataFrame
     ) -> tuple[T.StructType, bool]:
-        """(table schema after this write, did it widen?)."""
+        """(table schema after this write, did it widen?). A `_bucket`
+        column is write routing, never part of the table schema."""
+        data = T.StructType([f for f in df.schema.fields if f.name != "_bucket"])
         if prev is None:
-            return df.schema, False
+            return data, False
         if "table_schema" not in prev:
             # legacy warehouse (manifests predate schema tracking): existing
             # data files may have a narrower schema than this frame, and we
@@ -424,12 +431,12 @@ class SnapshotTable:
             # write as widened so reads use mergeSchema and _conform NULL-fills
             # correctly instead of resolving against an arbitrary old footer
             # (ADVICE r3 low).
-            return df.schema, True
+            return data, True
         cur = T.StructType.fromJson(prev["table_schema"])
         by_name = {f.name: f for f in cur.fields}
         out = list(cur.fields)
         widened = False
-        for f in df.schema.fields:
+        for f in data.fields:
             have = by_name.get(f.name)
             if have is None:
                 out.append(f)
@@ -446,14 +453,15 @@ class SnapshotTable:
     @staticmethod
     def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto `schema`: missing columns become typed NULLs,
-        column order follows the table schema."""
+        column order follows the table schema. A `_bucket` column the frame
+        carries is kept (last): it routes the write, see _write_bucketed."""
         have = set(df.columns)
         cols = [
             F.col(f.name) if f.name in have
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields
         ]
-        return df.select(*cols)
+        return df.select(*cols, *(["_bucket"] if "_bucket" in have else []))
 
     @staticmethod
     def _referenced_filesets(bmap: dict[int, list[str]], *extra: str) -> list[str]:
@@ -476,9 +484,43 @@ class SnapshotTable:
     # -- data ---------------------------------------------------------------
 
     def _bucket_col(self):
-        return F.pmod(F.xxhash64(F.col(self.bucket_key)), F.lit(self.n_buckets)).cast(
-            "int"
+        """Each row's bucket as a `_bucket` column, tagged in its metadata
+        with the spec it was computed under. A caller that adds it before
+        its own conv_id-keyed work hands _write_bucketed a pre-bucketed
+        frame (see there)."""
+        return (
+            F.pmod(F.xxhash64(F.col(self.bucket_key)), F.lit(self.n_buckets))
+            .cast("int")
+            .alias("_bucket", metadata={_BUCKET_SPEC: self._bucket_spec()})
         )
+
+    def _bucket_spec(self) -> str:
+        return f"pmod(xxhash64({self.bucket_key}), {self.n_buckets})"
+
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        """df with this table's `_bucket`. A `_bucket` the frame already
+        carries is kept only if its tag matches the table's current spec;
+        one built under another (bucket_key, n_buckets) — say, before a
+        rebucket() committed by another handle — is recomputed."""
+        if "_bucket" in df.columns:
+            tag = df.schema["_bucket"].metadata.get(_BUCKET_SPEC)
+            if tag == self._bucket_spec():
+                return df
+        return df.withColumn("_bucket", self._bucket_col())
+
+    def write_tasks(self, n_touched: int | None = None) -> int:
+        """Tasks of a bucketed write. A full write: one per shuffle
+        partition (every core writes), at most n_buckets. A rewrite of
+        `n_touched` buckets: two per bucket, at least 8, at most n_buckets.
+        Any count keeps one file per bucket: the write hashes on `_bucket`,
+        so each bucket lands in exactly one task. A caller that pre-buckets
+        a frame for a write partitions it this many ways, so the write keeps
+        the frame's partitioning."""
+        if n_touched is None:
+            n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        else:
+            n = max(2 * n_touched, 8)
+        return min(n, self.n_buckets)
 
     def _affected_buckets(self, df: DataFrame) -> set[int]:
         """Distinct buckets touched by `df`'s bucket_key values. The collect
@@ -541,14 +583,20 @@ class SnapshotTable:
     def _write_fileset(self, df: DataFrame, partition_by: list[str] | None) -> str:
         fs = "fs-" + uuid.uuid4().hex[:12]
         path = os.path.join(self.root, "data", fs)
-        # spread the write across the cluster: AQE may coalesce the final
-        # stage to a handful of partitions (right for shuffles, wrong for
-        # the I/O-bound encode+write step, which then runs near-serially
-        # and caps scaling). Round-robin repartition = every core writes.
-        n_part = self.write_partitions or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        w = df.repartition(n_part).write.mode("overwrite")
+        if self.write_partitions:
+            # small tables (lineage, surface_links): merge the input's
+            # partitions in place — one task, one file, and no shuffle
+            df = df.coalesce(self.write_partitions)
+        else:
+            # spread the write across the cluster: AQE may coalesce the
+            # final stage to a handful of partitions (right for shuffles,
+            # wrong for the I/O-bound encode+write step, which then runs
+            # near-serially and caps scaling). Round-robin repartition =
+            # every core writes.
+            df = df.repartition(
+                int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            )
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
@@ -556,20 +604,29 @@ class SnapshotTable:
 
     def _write_bucketed(
         self, df: DataFrame, partition_by: list[str] | None,
-        n_tasks: int | None = None,
+        n_touched: int | None = None,
     ) -> tuple[str, dict[int, list[str]]]:
         """Write a fileset partitioned by _bucket (then partition_by).
 
         Shuffle keyed on _bucket alone: every bucket lands in exactly one
         task, so the fileset holds exactly one file per (bucket, partition)
-        — no small-file explosion. Parallelism = live buckets (n_buckets is
-        sized >= cluster cores, so a full write keeps every core busy; an
-        incremental write touches few buckets and is tiny by construction).
+        — no small-file explosion. Parallelism = write_tasks(n_touched):
+        the shuffle partitions for a full write, a few per bucket for a
+        rewrite of `n_touched` buckets.
+
+        Pre-bucketed input: a frame that already carries `_bucket` from
+        this table's `_bucket_col()` under its current spec keeps it (see
+        _with_bucket, which recomputes a column tagged with another spec).
+        If that frame is also hash-partitioned on `_bucket` into as many
+        partitions as this write uses — the pipeline partitions its
+        mentions so once, and every conv_id aggregation downstream keeps
+        `_bucket` in its keys — the repartition below matches the input's
+        partitioning and Spark drops it: the write adds no exchange.
         """
         fs = "fs-" + uuid.uuid4().hex[:12]
         path = os.path.join(self.root, "data", fs)
-        dfb = df.withColumn("_bucket", self._bucket_col()).repartition(
-            min(n_tasks, self.n_buckets) if n_tasks else self.n_buckets, "_bucket"
+        dfb = self._with_bucket(df).repartition(
+            self.write_tasks(n_touched), "_bucket"
         )
         w = dfb.write.mode("overwrite").partitionBy("_bucket", *(partition_by or []))
         w.parquet(path)
@@ -730,7 +787,7 @@ class SnapshotTable:
     ) -> str:
         # overwrite resets the table schema to the frame's (no old files
         # survive, so there is nothing to evolve against)
-        sinfo = (df.schema.jsonValue(), False)
+        sinfo = (self._evolve_schema(None, df)[0].jsonValue(), False)
         if self.bucket_key is not None:
             part = self._effective_partition_by(self.current_snapshot(), partition_by)
             fs, buckets = self._write_bucketed(df, part)
@@ -842,6 +899,12 @@ class SnapshotTable:
             )
             if cur is not None:
                 cur = self._conform(cur, schema)
+                if "_bucket" in df.columns:
+                    # pre-bucketed input: the carried rows get the column
+                    # too, and a stale-spec one is recomputed BEFORE the
+                    # union, whose column tag is its first input's
+                    df = self._with_bucket(df)
+                    cur = cur.select("*", self._bucket_col())
             incoming = df
             if cur is not None:
                 if purge is not None:
@@ -862,7 +925,7 @@ class SnapshotTable:
                 merged = resolve(None, df) if resolve is not None else df
             part = self._effective_partition_by(cur_snap, partition_by)
             fs, new_buckets = self._write_bucketed(
-                merged, part, n_tasks=max(2 * len(aff), 8)
+                merged, part, n_touched=len(aff)
             )
             new_bmap = {b: p for b, p in bmap.items() if b not in aff}
             new_bmap.update(new_buckets)
@@ -935,7 +998,7 @@ class SnapshotTable:
                 match_df.dropDuplicates(keys), on=keys, how="left_anti"
             )
             fs, new_buckets = self._write_bucketed(
-                remaining, part, n_tasks=max(2 * len(touched), 8)
+                remaining, part, n_touched=len(touched)
             )
             new_bmap = {b: p for b, p in bmap.items() if b not in aff}
             new_bmap.update(new_buckets)
@@ -1016,7 +1079,7 @@ class SnapshotTable:
             cur = self._conform(cur, T.StructType.fromJson(snap["table_schema"]))
         part = self._effective_partition_by(snap, None)
         fs, new_buckets = self._write_bucketed(
-            cur, part, n_tasks=max(2 * len(fat), 8)
+            cur, part, n_touched=len(fat)
         )
         new_bmap = {b: p for b, p in bmap.items() if b not in set(fat)}
         new_bmap.update(new_buckets)

@@ -598,3 +598,33 @@ def test_read_keys_matches_read_matching(spark, tmp_path):
     # only-null / empty key lists: nothing can match
     assert t.read_keys([None]) is None
     assert t.read_keys([]) is None
+
+
+def test_stale_prebucketed_frame_is_rebucketed(spark, tmp_path):
+    """A frame pre-bucketed under one spec must not be trusted after the
+    table's spec changed: here another handle rebuckets 4 -> 8 between
+    building the frame and merging it. The merge recomputes `_bucket`, so
+    every row sits in the bucket read_keys prunes to, and `_bucket` never
+    enters the table schema."""
+    root = str(tmp_path / "stale")
+    t = SnapshotTable(spark, root, bucket_key="k", n_buckets=4)
+    t.overwrite(_df(spark, [(f"k{i}", i) for i in range(40)]))
+    pre = (
+        _df(spark, [(f"k{i}", 1000 + i) for i in range(30, 60)])
+        .select("*", t._bucket_col())
+        .repartition(4, "_bucket")
+    )
+    SnapshotTable(spark, root, bucket_key="k", n_buckets=4).rebucket(8)
+    t.merge(pre, keys=["k"])
+    assert t.n_buckets == 8
+    keys = [f"k{i}" for i in range(60)]
+    want = {k: (1000 + i if i >= 30 else i) for i, k in enumerate(keys)}
+    assert {r.k: r.v for r in t.read().collect()} == want
+    for b in range(8):
+        in_b = [k for k in keys if t.buckets_for_keys([k]) == {b}]
+        if in_b:  # read_keys reads bucket b alone
+            got = {r.k: r.v for r in t.read_keys(in_b).collect()}
+            assert got == {k: want[k] for k in in_b}, b
+    snap = t.current_snapshot()
+    assert [f["name"] for f in snap["table_schema"]["fields"]] == ["k", "v"]
+    assert t.read().columns == ["k", "v"]

@@ -103,3 +103,47 @@ def test_full_run_over_empty_source_skips(spark, tmp_path):
     t = generate_transcripts(spark, n_convs=4, avg_turns=4, seed=7)
     r2 = p.run(t, incremental=False)
     assert not r2.get("skipped") and r2["triples"] > 0
+
+
+def test_full_run_writes_one_file_per_bucket(spark, tmp_path):
+    """The full index pre-buckets its mentions: every bucket of triples and
+    processed_convs is written by exactly one task, so it holds exactly one
+    parquet file, and no manifest's table schema lists `_bucket`."""
+    import json
+    import os
+
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=8)
+    t = generate_transcripts(spark, n_convs=16, avg_turns=6, seed=13)
+    p.run(t, incremental=False)
+    for tbl in (p.triples, p.processed):
+        bmap = tbl._bucket_map(tbl.current_snapshot())
+        assert len(bmap) > 1
+        for b, (path,) in bmap.items():
+            files = os.listdir(os.path.join(tbl.root, "data", path))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1, (b, files)
+        assert "_bucket" not in tbl.read().columns
+    for tbl in (p.triples, p.entities, p.lineage, p.processed, p.links):
+        for snap in tbl.snapshots():
+            assert "_bucket" not in json.dumps(snap.get("table_schema")), tbl.root
+
+
+def test_full_run_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Jobs the write wave submits from its pool threads carry the caller's
+    Spark local properties: under a job group, a full index submits no job
+    outside that group."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    t = generate_transcripts(spark, n_convs=6, avg_turns=5, seed=4)
+    bus.waitUntilEmpty()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("cie-full-index", "full index under a caller's group")
+    try:
+        KGPipeline(spark, str(tmp_path / "wh"), n_buckets=4).run(
+            t, incremental=False
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert st.getJobIdsForGroup("cie-full-index")
+    assert set(st.getJobIdsForGroup(None)) - ungrouped == set()

@@ -56,6 +56,8 @@ def _inject_bad_triple(monkeypatch):
             "subj string, pred string, obj string, conv_id string, "
             "turn_idx int, ts timestamp, weight long",
         )
+        if "_bucket" in df.columns:  # pre-bucketed pipeline input
+            bad_row = bad_row.withColumn("_bucket", F.lit(0))
         return df.unionByName(bad_row)
 
     monkeypatch.setattr(pl.triples, "all_triples", bad)

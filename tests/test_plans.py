@@ -190,3 +190,66 @@ def test_dedup_no_exchange_before_signature_on_well_partitioned_input(spark):
     assert _physical(dedup._maybe_repartition(narrow, 4)).count(
         "Exchange"
     ) == _physical(narrow).count("Exchange") + 1
+
+
+def _final_write_graphs(spark, table_dir: str) -> list[tuple[dict, dict]]:
+    """The final (post-AQE) plan of every file write into `table_dir`, as
+    (node id -> name, node id -> child ids), from the SQL status store. The
+    final plan is the one that matters: before they run, cache scans
+    report no partitioning, so the initial plan still shows exchanges that
+    AQE removes once the cache stages have materialized."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        desc = e.physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" not in desc or (
+            f"{table_dir}/data/" not in desc
+        ):
+            continue
+        g = store.planGraph(e.executionId())
+        nodes, kids = {}, {}
+        all_nodes, edges = g.allNodes(), g.edges()
+        for k in range(all_nodes.size()):
+            n = all_nodes.apply(k)
+            nodes[n.id()] = n.name()
+        for k in range(edges.size()):
+            edge = edges.apply(k)
+            kids.setdefault(edge.toId(), []).append(edge.fromId())
+        out.append((nodes, kids))
+    return out
+
+
+def _exchanges_outside_caches(nodes: dict, kids: dict) -> list[str]:
+    """Exchange nodes reachable from the plan root without passing through
+    a cache scan (whose children are the cached subplan). Query stages are
+    not graph nodes: an exchange shows as itself."""
+    child_ids = {c for cs in kids.values() for c in cs}
+    (root,) = [n for n in kids if n not in child_ids]
+    found, stack = [], [root]
+    while stack:
+        n = stack.pop()
+        if "Exchange" in nodes[n]:
+            found.append(nodes[n])
+        if nodes[n] != "InMemoryTableScan":
+            stack.extend(kids.get(n, []))
+    return found
+
+
+def test_full_index_writes_add_no_exchange(spark, tmp_path):
+    """The full index hash-partitions its mentions once, on the triples
+    table's `_bucket`, before caching them. Every conv_id aggregation keeps
+    `_bucket` in its keys, so neither the triples write nor the
+    processed_convs write shuffles again: their final plans read the caches
+    with no Exchange in between."""
+    from cie_spark.plans.pipeline import KGPipeline
+
+    t = generate_transcripts(spark, n_convs=12, avg_turns=6, seed=5)
+    wh = str(tmp_path / "wh")
+    KGPipeline(spark, wh, n_buckets=4).run(t, incremental=False)
+    for table in ("triples", "processed_convs"):
+        ((nodes, kids),) = _final_write_graphs(spark, f"{wh}/{table}")
+        assert "InMemoryTableScan" in nodes.values(), table
+        assert _exchanges_outside_caches(nodes, kids) == [], table

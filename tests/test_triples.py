@@ -72,3 +72,22 @@ def test_windowed_bounds(spark):
     linked = link_mentions(spark, extract_mentions(t))
     got = mentioned_with_windowed(linked, t, window_turns=4).collect()
     assert got == []  # distance 9 > window 4
+
+
+def test_bucket_column_changes_no_triple(spark):
+    """A `_bucket`-carrying input (the pipeline's pre-bucketed mentions)
+    yields the same rows as the same input without it, plus the column,
+    still equal to the bucket of each row's conv_id."""
+    from pyspark.sql import functions as F
+
+    t = _fixture(spark)
+    linked = link_mentions(spark, extract_mentions(t)).cache()
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(3)).cast("int")
+    pre = linked.select("*", bucket.alias("_bucket")).repartition(3, "_bucket")
+    for build in (all_triples, lambda df: mentioned_with_windowed(df, window_turns=2)):
+        plain = build(linked)
+        with_b = build(pre)
+        assert with_b.columns == plain.columns + ["_bucket"]
+        assert with_b.filter(F.col("_bucket") != bucket).isEmpty()
+        assert sorted(with_b.drop("_bucket").collect()) == sorted(plain.collect())
+    linked.unpersist()
