@@ -9,15 +9,17 @@ conversation-graph construction over tables of multi-turn transcripts
 - ``spec``       — the frozen extraction/linking spec (single source of truth,
                    rendered to Spark expressions, pandas code AND ANSI SQL)
 - ``sources``    — transcript synthesis, snapshot-manifest table IO
-- ``operators``  — extraction (pandas UDFs), entity linking (broadcast dict +
-                   MinHash-LSH), connected-components canonicalization, triple
-                   emission, dedup, similarity search, text analysis
+- ``operators``  — extraction (built-in regex expressions), entity linking
+                   (broadcast dict + MinHash-LSH), connected-components
+                   canonicalization, triple emission, dedup, similarity
+                   search, text analysis
 - ``functions``  — deterministic IDs, text normalization, mock embeddings
 - ``plans``      — end-to-end pipeline orchestration, lineage, incremental runs
 - ``streaming``  — watch-mode analog (Trigger.AvailableNow incremental)
 
 Architecture is DataFrame/SQL-first: Catalyst handles pushdown/pruning/join
-selection; Python appears only in Arrow-vectorized UDFs for span extraction.
+selection; Python appears only in Arrow-vectorized UDFs (mock embeddings,
+the distributed fuzzy-link scorer, dedup hashing, media codecs).
 """
 
 __version__ = "0.1.0"

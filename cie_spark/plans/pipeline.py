@@ -4,8 +4,9 @@
 Stages (each records a lineage row with counts + timing + snapshot id):
 
   1. source      transcripts (full, or incremental delta by conv_id)
-  2. extract     mapInPandas mention extraction (operators/extract.py); the
-                 mentions are hash-partitioned ONCE, by the triples table's
+  2. extract     mention extraction as one projection of built-in regex and
+                 array expressions, no Python worker (operators/extract.py);
+                 the mentions are hash-partitioned ONCE, by the triples table's
                  `_bucket` (a function of conv_id), before they are cached
   3. link        3-tier entity linking (operators/link.py)
   4. canon       connected-components alias closure (operators/canon.py)

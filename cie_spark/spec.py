@@ -2,7 +2,8 @@
 
 Everything that must agree between the three implementations —
 
-1. the Spark pipeline (pandas/Arrow UDF extraction, broadcast-dict linking),
+1. the Spark pipeline (built-in regex expression extraction, broadcast-dict
+   linking),
 2. the pure-pandas oracle (``cie_spark.oracle``), and
 3. the ANSI-SQL oracles run by DuckDB (``__spark_entry__.oracle_sql``)
 
@@ -156,29 +157,6 @@ _PROSE_RE = re.compile(
 
 def prose_regex() -> re.Pattern[str]:
     return _PROSE_RE
-
-
-# case-SENSITIVE rendering of the same prose pattern for scanning a
-# pre-lowercased string: IGNORECASE disables sre's literal-prefix charset
-# optimization (measured 3.5x slower on batch scans). Semantics are
-# identical when the input is text.lower() and lowercasing preserves length
-# (callers must verify and fall back to prose_regex otherwise — rare
-# non-ASCII codepoints change length under str.lower). Longest-first
-# alternation order is preserved; same-length alternatives are distinct
-# strings and cannot both match at one position, so the tie-break order is
-# irrelevant to match outcomes.
-_PROSE_RE_LOWER = re.compile(
-    r"(?<![a-z0-9])("
-    + "|".join(
-        re.escape(s)
-        for s in sorted({s.lower() for s in PROSE_SURFACES}, key=lambda s: (-len(s), s))
-    )
-    + r")(?![a-z0-9])"
-)
-
-
-def prose_regex_lower() -> re.Pattern[str]:
-    return _PROSE_RE_LOWER
 
 
 def stub_entity_id(norm_surface: str) -> str:

@@ -46,16 +46,34 @@ def test_dedup_candidates_never_cartesian(spark):
     assert "band_sig" in plan
 
 
+def _output_names_down_to(plan, node_name: str) -> list[set[str]] | None:
+    """Output attribute names of every physical node on a path from `plan`
+    down to the first `node_name` node (inclusive); None if there is none."""
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    out = plan.output()
+    names = {out.apply(i).name() for i in range(out.size())}
+    if plan.nodeName() == node_name:
+        return [names]
+    children = plan.children()
+    for i in range(children.size()):
+        below = _output_names_down_to(children.apply(i), node_name)
+        if below is not None:
+            return [names] + below
+    return None
+
+
 def test_text_column_pruned_after_extraction(spark):
     """Downstream of extraction only mention columns flow — the fat text
-    column must not appear in the aggregate's input."""
+    column is not an output of the extraction (Generate) node or of any
+    node above it."""
     t = generate_transcripts(spark, n_convs=4, avg_turns=5, seed=3)
     m = extract_mentions(t).groupBy("surface").count()
-    opt = _optimized(m)
-    # text enters the mapInPandas but is not an output attribute anywhere
-    assert "count" in opt
-    out_attrs = _physical(m)
-    assert "text" not in out_attrs.split("MapInPandas")[0]
+    assert "count" in _optimized(m)
+    plan = m._jdf.queryExecution().executedPlan()
+    outputs = _output_names_down_to(plan, "Generate")
+    assert outputs, "no Generate node in the plan"
+    assert all("text" not in names for names in outputs), outputs
 
 
 def test_warehouse_scan_pushes_filters(spark, tmp_path):
