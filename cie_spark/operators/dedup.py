@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -375,23 +375,26 @@ def ngram_jaccard_pairs(
 
     if local_ok:
         # driver-local verify tier: fetch the candidate docs' hs arrays
-        # (bounded: ≤ 2×|pairs| docs; byte budget re-checked on the result)
-        # and compute the exact Jaccard in-process — set semantics match
-        # array_intersect/union, int/int division matches the JVM Divide,
-        # and Spark's own F.round rounds the driver-built frame. Duplicate
-        # doc_ids break the dict mirror (the join fans a pair out across
-        # every hs row per id) — yield to the join path instead.
-        hs_map: dict = {}
-        dup = False
-        for r in hashed_shingle_base(vdocs, shingle_words, widen=False).collect():
-            if r[0] is None or r[1] is None:
-                continue
-            if r[0] in hs_map:
-                dup = True
-                break
-            hs_map[r[0]] = frozenset(r[1])
-        n_bytes = sum(len(v) for v in hs_map.values()) * 8
-        if not dup and n_bytes <= LOCAL_VERIFY_MAX_BYTES:
+        # (≤ 2×|pairs| docs) and compute the exact Jaccard in-process — set
+        # semantics match array_intersect/union, int/int division matches
+        # the JVM Divide, and Spark's own F.round rounds the result. The
+        # byte budget is decided before any hs row reaches the driver: a
+        # whole-frame window sum (no second UDF pass) filters every row out
+        # over budget. Nothing fetched, or a duplicate doc_id (the join fans
+        # a pair out across every hs row per id), takes the join verify.
+        # No NULL filter (the semi-join drops NULL ids, the UDF returns no
+        # NULL array): a filter on `hs` made this fetch ~1 s slower.
+        hs_rows = (
+            hashed_shingle_base(vdocs, shingle_words, widen=False)
+            .withColumn(
+                "_n", F.sum(F.size("hs")).over(Window.partitionBy())
+            )
+            .filter(F.col("_n") * 8 <= LOCAL_VERIFY_MAX_BYTES)
+            .select("doc_id", "hs")
+            .collect()
+        )
+        hs_map = {doc_id: frozenset(hs) for doc_id, hs in hs_rows}
+        if hs_map and len(hs_map) == len(hs_rows):
             out = []
             for a, b in pairs:
                 sa = hs_map.get(a)

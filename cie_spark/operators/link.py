@@ -1,24 +1,32 @@
-"""Entity linking: dictionary broadcast join + MinHash-LSH fuzzy tier + stubs.
+"""Entity linking: one path from surfaces to a canonical link map.
 
 Analog of the reference's call resolution (resolver.go:83-303: import-alias
 dictionary lookup), interface dispatch (resolver.go:364-501: 1->N candidate
 linking), and external-stub synthesis (resolver.go:461-527: deterministic
-IDs for out-of-vocabulary targets).
+IDs for out-of-vocabulary targets). Like the reference's single in-memory
+resolver, every caller links through `link_map` (distinct surfaces, with an
+optional stored dictionary -> canonical link map) and `apply_links` (the
+map onto the mention stream); `link_mentions` is the two in sequence.
 
-Scale design
-------------
-- The alias dictionary is tiny (10^2..10^6 rows) vs mentions (10^12):
-  `F.broadcast` makes tier-1 linking a map-side hash join — zero shuffle.
-- The fuzzy tier only sees *distinct unmatched surfaces* (bounded by
-  vocabulary size, not corpus size): `dropDuplicates` first, link once,
-  broadcast the resulting (surface -> entity) mapping back. At 100 TB the
-  expensive join runs over thousands of rows, not trillions.
-- LSH blocking: explode each surface into MINHASH_BANDS band signatures,
-  equi-join candidate×dictionary per band (hash join on band value), then
-  exact Jaccard scoring on the candidate pairs only — the classic
-  blocking-then-verify shape, never an all-pairs cross join.
-- Determinism: best candidate by (jaccard DESC, canonical_id ASC) via one
-  window — partition-order independent.
+Tiers, in the order they run
+----------------------------
+1. Local (`link_surfaces_rows`): ONE bounded collect of the distinct
+   surfaces (LOCAL_VOCAB_CAP), then dictionary hit, exact best-Jaccard
+   fuzzy match and stub in-process (`link_rows_local`), with canon over the
+   rows (`canon.canonicalize_rows_local`). The result ships back as one
+   LocalRelation.
+2. Distributed (`_link_distributed`), the fallback when the vocabulary or
+   the fuzzy work (LOCAL_FUZZY_BUDGET) exceeds the local budgets, or the
+   dictionary exceeds AUTO_LSH_DICT_SIZE: a broadcast dictionary join, an
+   exact broadcast nested-loop Jaccard over (distinct misses × dictionary),
+   stubs, then the distributed connected-components canon.
+3. LSH: only above AUTO_LSH_DICT_SIZE dictionary entries, the distributed
+   fuzzy tier blocks candidates by MinHash band signatures (an equi-join
+   per band) before the exact verify — never an all-pairs cross join.
+
+Determinism: best candidate by (jaccard DESC, entity_id ASC) on every tier
+— partition-order independent, and the local and distributed renderings
+agree bit for bit (tests/test_link.py).
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from pyspark.sql import functions as F
 
 from cie_spark import spec
 from cie_spark import functions as CF
+from cie_spark.operators import canon
 from cie_spark.session import local_frame
 
 
@@ -81,33 +90,28 @@ def _jaccard_udf():
     return jacc
 
 
-# above this many dictionary entries, the fuzzy tier switches from the
-# exact broadcast nested-loop to MinHash-LSH band blocking automatically:
+# above this many dictionary entries, linking skips the local tier and the
+# distributed fuzzy tier switches from the exact broadcast nested-loop to
+# MinHash-LSH band blocking automatically:
 # the nested loop is (distinct unmatched surfaces × dictionary) — fine for a
 # 10^2-entry vocabulary, silently quadratic at 10^6
 AUTO_LSH_DICT_SIZE = 10_000
 
-# distinct-surface sets at or below this size take the driver-local linking
-# path: one collect (bounded by the cap) replaces the ~10 tiny driver job
-# rounds of the distributed tier DAG (persist, broadcast builds, window,
-# eager checkpoint). Those rounds are pure per-leg serial cost — the profile
-# that motivated this showed ~13 s of the link stage not scaling 2->8 cores
-# while the actual fuzzy work was 48 rows. 64k surfaces x ~32 B collect
-# ~2 MB — driver-safe; bigger vocabularies stay on the distributed tier.
+# distinct-surface sets (and stored dictionaries) at or below this size take
+# the driver-local linking path: one collect (bounded by the cap) replaces
+# the ~10 tiny driver job rounds of the distributed tier DAG (persist,
+# broadcast builds, window, eager checkpoint), which are pure serial cost.
+# 64k surfaces x ~32 B collect ~2 MB — driver-safe; bigger vocabularies
+# stay on the distributed tier.
 LOCAL_VOCAB_CAP = 65_536
 
 # the local fuzzy tier scores only dictionary entries that share >= 1
-# shingle with the miss (inverted-index blocking — exact, since threshold
-# > 0 means a zero-overlap pair can never link) — but adversarial inputs
-# (every miss sharing shingles with most of the dictionary) still degrade
-# to the full product. The bound is therefore on SCORED PAIRS, summed over
-# the blocked, length-filtered candidate sets BEFORE any pair is scored:
-# past this budget the local path bails (link_rows_local returns None)
-# without scoring, and the distributed tiers run instead. 2M scored pairs
-# ≈ 1–3 s of driver CPU — comparable to the distributed tier's fixed
-# scheduling cost, i.e. the break-even point. (The r5 event-log profile
-# showed the pre-index nested loop was 4.75 s of the ~10.5 s per-leg
-# serial term at the 50k-conv benchmark regime.)
+# shingle with the miss (exact blocking: threshold > 0), but adversarial
+# inputs still degrade to the full product. The bound is on SCORED PAIRS,
+# summed BEFORE any pair is scored: past it the local path bails
+# (link_rows_local returns None) and the distributed tiers run. 2M scored
+# pairs ≈ 1–3 s of driver CPU — the distributed tier's fixed scheduling
+# cost, i.e. the break-even point.
 LOCAL_FUZZY_BUDGET = 2_000_000
 
 
@@ -220,125 +224,66 @@ LINKMAP_SCHEMA = (
 )
 
 
-def _collect_and_link_local(
-    distinct: DataFrame, dic: DataFrame, spec_dictionary: bool,
-) -> list[tuple[str, str, str, str]] | None:
-    """Collect distinct surfaces (bounded by LOCAL_VOCAB_CAP) and link them
-    driver-side; None when the cap or fuzzy budget forces the distributed
-    tiers. The ONE collect here is the unavoidable parallel corpus scan —
-    everything after it is in-process.
+def _bounded_rows(df: DataFrame, cap: int) -> list | None:
+    """At most `cap` rows of `df` on the driver, or None past the cap.
 
-    The CollectLimit below runs ALL partitions in one job round
+    The CollectLimit runs ALL partitions in one job round
     (initialNumPartitions) instead of the 1, 4, 16… take escalation: the
-    limit only trips on the oversized-vocabulary bail-out, so the common
-    case pays every partition anyway, and each escalation round is a
-    driver-scheduled job of pure serial cost (event-log profile: 2 extra
-    rounds + gaps ≈ 1 s per scaling leg). Scoped HERE, not session-wide:
-    globally it would de-short-circuit every other limit/first/isEmpty
-    probe in the engine (CLI row caps, verify_consistency's limit(1), the
-    small-delta and local-tier probes), taxing interactive queries with
-    near-full scans."""
-    spark = distinct.sparkSession
+    limit only trips on the oversized bail-out, so the common case pays
+    every partition anyway, and each escalation round is a driver-scheduled
+    job of pure serial cost. Scoped HERE, not session-wide: globally it
+    would de-short-circuit every other limit/first/isEmpty probe in the
+    engine (CLI row caps, verify_consistency's limit(1), the small-delta
+    probe), taxing interactive queries with near-full scans."""
+    spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
     saved = spark.conf.get(key, None)
     try:
         spark.conf.set(key, "10000")
-        rows = distinct.select("surface").limit(LOCAL_VOCAB_CAP + 1).collect()
+        rows = df.limit(cap + 1).collect()
     finally:
         if saved is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, saved)
-    if len(rows) > LOCAL_VOCAB_CAP:
-        return None
-    if spec_dictionary:
-        dic_map = dict(spec.SURFACE_TO_CANONICAL)
-    else:
-        dic_map = {
-            r["surface_norm"]: r["entity_id"]
-            for r in dic.select("surface_norm", "entity_id").collect()
-        }
-    return link_rows_local(
-        sorted(r[0] for r in rows), dic_map, fuzzy_budget=LOCAL_FUZZY_BUDGET
-    )
+    return rows if len(rows) <= cap else None
 
 
 def link_surfaces_rows(
     spark: SparkSession, surfaces: DataFrame,
 ) -> list[tuple[str, str, str, str]] | None:
-    """Driver-local end of link_surfaces for callers that want the rows
-    themselves (the pipeline canonicalizes + re-ships them as ONE local
-    relation instead of paying per-stage driver job rounds). Returns None
-    when the vocabulary or the fuzzy work exceeds the local budgets — the
-    caller must then use link_surfaces(), which runs the distributed tiers.
-    Spec-dictionary only (callers with override dictionaries take
-    link_surfaces)."""
+    """The local tier: collect the distinct surfaces of a (surface) frame
+    (bounded by LOCAL_VOCAB_CAP) and link them in-process with
+    link_rows_local. None when the dictionary is past AUTO_LSH_DICT_SIZE or
+    the vocabulary or fuzzy work exceeds the local budgets — link_map then
+    runs the distributed tiers."""
     if len(spec.SURFACE_TO_CANONICAL) > AUTO_LSH_DICT_SIZE:
         return None
-    distinct = surfaces.select("surface").dropDuplicates(["surface"])
-    return _collect_and_link_local(distinct, None, True)
+    rows = _bounded_rows(
+        surfaces.select("surface").dropDuplicates(["surface"]), LOCAL_VOCAB_CAP
+    )
+    if rows is None:
+        return None
+    return link_rows_local(
+        sorted(r[0] for r in rows), dict(spec.SURFACE_TO_CANONICAL),
+        fuzzy_budget=LOCAL_FUZZY_BUDGET,
+    )
 
 
-def link_surfaces(
-    spark: SparkSession,
-    surfaces: DataFrame,
-    *,
-    use_lsh: bool | None = None,
-    dictionary: DataFrame | None = None,
-    dictionary_size: int | None = None,
-    local: bool | None = None,
-) -> DataFrame:
-    """(surface) -> (surface, surface_norm, entity_id, link_tier).
-
-    `surfaces` must have a single `surface` string column (distinct not
-    required; we dedup internally). link_tier in {'dict','fuzzy','stub'}.
-
-    Fuzzy tier: SPEC semantics are *exact* best-Jaccard >= threshold over the
-    dictionary. With a broadcastable dictionary (the common case — vocab is
-    bounded) we score every (distinct unmatched surface × dictionary) pair
-    exactly: both sides are vocabulary-bounded, so this stays tiny at any
-    corpus scale. `use_lsh=True` — or automatically when the dictionary
-    exceeds AUTO_LSH_DICT_SIZE entries — inserts MinHash-LSH band blocking
-    before scoring: a recall<1.0 approximation traded for sub-quadratic
-    candidate generation.
-
-    `dictionary`: (surface_norm, entity_id[, canonical_name]) override of the
-    spec dictionary (tests / alternative vocabularies). `dictionary_size`:
-    row-count hint for the auto-switch when passing a DataFrame whose size
-    isn't known driver-side (avoids a count action).
-    """
-    if dictionary is None:
-        dic = dictionary_df(spark)
-        dic_size = len(spec.SURFACE_TO_CANONICAL)
-    else:
-        dic = dictionary
-        dic_size = dictionary_size if dictionary_size is not None else dic.count()
-    if use_lsh is None:
-        use_lsh = dic_size > AUTO_LSH_DICT_SIZE
-
+def _link_distributed(spark: SparkSession, surfaces: DataFrame) -> DataFrame:
+    """The distributed tiers over the distinct surfaces of a (surface)
+    frame, checkpointed: dictionary broadcast join, then exact best-Jaccard
+    over (distinct misses × dictionary) — MinHash-LSH band blocking first
+    when the dictionary exceeds AUTO_LSH_DICT_SIZE, a recall<1.0
+    approximation traded for sub-quadratic candidate generation — then
+    deterministic stubs."""
+    dic = dictionary_df(spark)
+    use_lsh = len(spec.SURFACE_TO_CANONICAL) > AUTO_LSH_DICT_SIZE
     distinct = (
         surfaces.select("surface")
         .dropDuplicates(["surface"])
         .withColumn("surface_norm", CF.norm_col("surface"))
     )
-
-    # driver-local fast path (see LOCAL_VOCAB_CAP): ONE action collects the
-    # distinct surfaces (the unavoidable parallel scan of the corpus); the
-    # vocabulary-bounded tiers then run in-process instead of as ~10 tiny
-    # Spark jobs whose fixed scheduling latency is per-leg serial cost. The
-    # reference resolves calls from an in-memory index the same way
-    # (resolver.go:83-176). `local=False` forces the distributed tiers
-    # (bigger-than-cap vocabularies take them automatically).
-    if local is None:
-        local = not use_lsh
-    if local:
-        linked = _collect_and_link_local(distinct, dic, dictionary is None)
-        if linked is not None:
-            return local_frame(spark, linked, LINKMAP_SCHEMA)
-        # vocabulary exceeded the cap (or the dict-miss × dictionary fuzzy
-        # product exceeded LOCAL_FUZZY_BUDGET): fall through to the
-        # distributed tiers (the upstream is persisted by callers, so the
-        # re-scan of the distinct shuffle is the only repeated work)
 
     # tier 1: exact dictionary broadcast join. The distinct-surface frame is
     # vocabulary-bounded (not corpus-bounded) and feeds several tiers below —
@@ -406,36 +351,66 @@ def link_surfaces(
     return out
 
 
-def link_mentions(spark: SparkSession, mentions: DataFrame) -> DataFrame:
-    """mentions (schema.MENTIONS) -> linked mentions with entity_id.
+def link_map(
+    spark: SparkSession, surfaces: DataFrame, stored: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """(surface) -> (link map, new dictionary), both LINKMAP_SCHEMA frames
+    of canonicalized (surface, surface_norm, entity_id, link_tier) rows.
 
-    Tool mentions link trivially as 'tool:<name>'; entity mentions go through
-    the 3-tier linker. The surface->entity map is small (distinct surfaces),
-    so the final join back onto the 10^12-row mention stream is broadcast.
+    `stored`: a dictionary committed by an earlier run (the reference's
+    persistent symbol index). Its surfaces are answered from it, and only
+    never-before-seen surfaces are linked. The new dictionary is
+    stored ∪ fresh, canonicalized together so alias chains that bridge old
+    and new surfaces still collapse; it is None when every surface was
+    stored (the map is then `stored` semi-joined to the surfaces).
 
-    The mention stream feeds the linker's distinct-surface scan and the
-    final link application — persist it so extraction (the expensive
-    UDF-over-full-text pass) runs exactly once.
+    Local-sized vocabularies (the fresh surfaces, and `stored`, each within
+    LOCAL_VOCAB_CAP) are linked and canonicalized in-process and shipped
+    back as ONE local_frame, which is then both the map and the new
+    dictionary: a semi-join would only turn the driver-held rows back into
+    a distributed plan, and extra dictionary rows never match a surface the
+    run does not have. Otherwise the distributed tiers and the distributed
+    canon run, and the map is semi-joined to the surfaces."""
+    fresh_in = surfaces
+    if stored is not None:
+        stored = stored.select("surface", "surface_norm", "entity_id", "link_tier")
+        fresh_in = surfaces.join(
+            stored.select("surface"), on="surface", how="left_anti"
+        )
+    rows = link_surfaces_rows(spark, fresh_in)
+    if rows is not None:
+        if not rows and stored is not None:
+            return stored.join(surfaces, on="surface", how="left_semi"), None
+        old = [] if stored is None else _bounded_rows(stored, LOCAL_VOCAB_CAP)
+        if old is not None:
+            merged = local_frame(
+                spark, canon.canonicalize_rows_local(old + rows), LINKMAP_SCHEMA
+            )
+            return merged, merged
+        fresh = local_frame(spark, rows, LINKMAP_SCHEMA)
+    else:
+        fresh = _link_distributed(spark, fresh_in)
+    raw = fresh if stored is None else stored.unionByName(fresh)
+    merged = canon.canonicalize_linkmap(raw)
+    if merged is not raw:
+        # alias chains existed: checkpoint the closed map (the tiers' output
+        # is already checkpointed or local, so the common no-chain path
+        # skips this extra materialization job)
+        merged = merged.localCheckpoint(eager=True)
+    if stored is None:
+        return merged, merged
+    return merged.join(surfaces, on="surface", how="left_semi"), merged
 
-    Round 6: the entity/tool branches are fused into ONE pass — a single
-    broadcast left join of the link map plus kind-conditional projections —
-    instead of union(entity-branch, tool-branch), which scanned the mention
-    cache twice. Output rows and columns are identical (kind='_turn' rows
-    were dropped by both branch filters and still are).
 
-    NB the persist is deliberately NOT released here: the returned frame is
-    lazy and recomputes through it, and repeated same-plan invocations
-    (bench repetitions) legitimately re-bind to the existing cache entry
-    via the CacheManager's canonical-plan dedup — an eviction-on-next-call
-    variant was measured 3 s/rep slower at sf1.0 for exactly that reason.
-    Memory is bounded by the storage-fraction LRU, as in prior rounds."""
-    mentions = mentions.persist()
-    both = mentions.filter(F.col("kind").isin("entity", "tool"))
-    linkmap = link_surfaces(
-        spark, mentions.filter(F.col("kind") == "entity").select("surface")
-    )
+def apply_links(mentions: DataFrame, linkmap: DataFrame) -> DataFrame:
+    """mentions (schema.MENTIONS, extra columns kept) + a link map ->
+    entity and tool mentions with (entity_id, link_tier); `_turn` rows are
+    dropped. Tool mentions link trivially as 'tool:<norm>'. ONE pass: a
+    single broadcast left join of the (vocabulary-bounded) map plus
+    kind-conditional projections, so the mention stream is scanned once
+    and keeps its partitioning."""
     is_tool = F.col("kind") == "tool"
-    joined = both.join(
+    joined = mentions.filter(F.col("kind").isin("entity", "tool")).join(
         F.broadcast(
             linkmap.select(
                 "surface",
@@ -455,3 +430,24 @@ def link_mentions(spark: SparkSession, mentions: DataFrame) -> DataFrame:
             "link_tier"
         ),
     )
+
+
+def link_mentions(spark: SparkSession, mentions: DataFrame) -> DataFrame:
+    """mentions (schema.MENTIONS) -> linked mentions with entity_id: the
+    entity surfaces through link_map (no stored dictionary), then
+    apply_links — the path KGPipeline.run takes on a full index.
+
+    The mention stream feeds the linker's distinct-surface scan and the
+    link application — persist it so extraction runs exactly once.
+
+    NB the persist is deliberately NOT released here: the returned frame is
+    lazy and recomputes through it, and repeated same-plan invocations
+    (bench repetitions) legitimately re-bind to the existing cache entry
+    via the CacheManager's canonical-plan dedup — an eviction-on-next-call
+    variant was measured 3 s/rep slower at sf1.0 for exactly that reason.
+    Memory is bounded by the storage-fraction LRU."""
+    mentions = mentions.persist()
+    linkmap, _ = link_map(
+        spark, mentions.filter(F.col("kind") == "entity").select("surface")
+    )
+    return apply_links(mentions, linkmap)

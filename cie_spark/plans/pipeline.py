@@ -8,8 +8,10 @@ Stages (each records a lineage row with counts + timing + snapshot id):
                  array expressions, no Python worker (operators/extract.py);
                  the mentions are hash-partitioned ONCE, by the triples table's
                  `_bucket` (a function of conv_id), before they are cached
-  3. link        3-tier entity linking (operators/link.py)
-  4. canon       connected-components alias closure (operators/canon.py)
+  3. link        link.link_map links the surfaces the stored surface_links
+                 dictionary lacks; link.apply_links joins the map onto the
+                 mentions (the two calls of link.link_mentions)
+  4. canon       alias closure over stored + fresh links, inside link_map
   5. triples     (subj,pred,obj) emission + data-quality observation
                  (operators/validate.py — fail-on-violation, the analog of
                  ValidateEntities, datalog.go:62-175)
@@ -49,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cie_spark import schema
-from cie_spark.operators import canon, extract, link, triples, validate
+from cie_spark.operators import extract, link, triples, validate
 from cie_spark.session import local_frame
 from cie_spark.sources.io_snapshots import SnapshotTable
 
@@ -83,8 +85,6 @@ def _now() -> datetime:
 
 
 class KGPipeline:
-    _pending_links: DataFrame | None = None
-
     def __init__(
         self,
         spark: SparkSession,
@@ -271,61 +271,6 @@ class KGPipeline:
                 f"fail_fast: conv {row[0]['conv_id']} is indexed in the "
                 "warehouse but missing from the processed checkpoint"
             )
-
-    # -- linking with the persistent surface dictionary --------------------
-
-    def _link_with_dictionary(self, surfaces: DataFrame) -> DataFrame:
-        """Link distinct surfaces, reusing the warehouse surface_links table.
-
-        Linking cost is per-DISTINCT-surface (vocabulary-bounded), and the
-        fuzzy tier's expression DAG is the most expensive codegen in the
-        pipeline — so surfaces already linked in a previous run are answered
-        from the stored dictionary (the reference's persistent symbol index,
-        embedded.go :put dictionary), and only never-before-seen surfaces go
-        through link_surfaces. Alias-closure (canon) reruns over the merged
-        map when new surfaces arrive, so chains that bridge old and new
-        surfaces still collapse.
-        """
-        from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
-        distinct = surfaces.dropDuplicates(["surface"])
-        stored = self.links.read()
-        # _pending_links: the updated dictionary, committed only AFTER the
-        # entities merge (see run() step 6) — so a crash in between leaves
-        # the dictionary un-advanced and the next run re-links + re-merges
-        # (the skip-entities-when-no-new-surfaces shortcut stays crash-safe)
-        self._pending_links: DataFrame | None = None
-        if stored is not None:
-            missing = distinct.join(
-                stored.select("surface"), on="surface", how="left_anti"
-            )
-            if missing.isEmpty():
-                return stored.join(distinct, on="surface", how="left_semi")
-            fresh = link.link_surfaces(self.spark, missing)
-            raw = stored.unionByName(fresh)
-        else:
-            # empty dictionary (first / benchmark full run): link AND
-            # canonicalize driver-side when the vocabulary is local-sized —
-            # the distributed canon alone is 2+ driver job rounds (the
-            # isEmpty chain probe profiled at 1.9 s) of per-leg serial cost
-            # on a link map the driver already holds as a list
-            rows = link.link_surfaces_rows(self.spark, distinct)
-            if rows is not None:
-                merged = local_frame(
-                    self.spark, canon.canonicalize_rows_local(rows),
-                    link.LINKMAP_SCHEMA,
-                )
-                self._pending_links = merged
-                return merged
-            raw = link.link_surfaces(self.spark, distinct)
-        merged = canon.canonicalize_linkmap(raw)
-        if merged is not raw:
-            # alias chains existed: checkpoint the closed map (link_surfaces
-            # output is already checkpointed, so the common no-chain path
-            # skips this extra materialization job)
-            merged = merged.localCheckpoint(eager=True)
-        self._pending_links = merged
-        return merged.join(distinct, on="surface", how="left_semi")
 
     # -- small-run conf guard ----------------------------------------------
 
@@ -633,24 +578,19 @@ class KGPipeline:
         )
         extract_started = started
 
-        # 3. link (+ 4. canon on the small distinct-surface link map)
+        # 3. link + 4. canon. `new_links` (None when every surface was
+        # stored) is committed in step 6, after the entities
         started = _now()
-        ents = mentions.filter(F.col("kind") == "entity")
-        linkmap = self._link_with_dictionary(ents.select("surface"))
+        linkmap, new_links = link.link_map(
+            self.spark,
+            mentions.filter(F.col("kind") == "entity").select("surface"),
+            self.links.read(),
+        )
         if not linkmap.isLocal():
             # a local_frame link map is a LocalRelation — caching it only
             # adds a plan-normalization round-trip (profiled ~0.24 s/call)
             linkmap = linkmap.cache()
-        linked_ents = ents.join(
-            F.broadcast(linkmap.select("surface", "entity_id", "link_tier")),
-            on="surface", how="left",
-        )
-        tool_rows = mentions.filter(F.col("kind") == "tool").select(
-            *mentions.columns,
-            F.concat(F.lit("tool:"), link.CF.norm_col("surface")).alias("entity_id"),
-            F.lit("dict").alias("link_tier"),
-        )
-        linked = linked_ents.select(*tool_rows.columns).unionByName(tool_rows).cache()
+        linked = link.apply_links(mentions, linkmap).cache()
         from pyspark.sql import Observation
 
         # linked-row count AND the distinct-surface lineage stat ride the
@@ -705,7 +645,6 @@ class KGPipeline:
         # merge fuses the stale-conv purge into its keyed upsert: ONE
         # bucket-granular rewrite (anti-join, never a collected IN-list —
         # driver-safe at 10^6 changed conversations).
-        pending_links, self._pending_links = self._pending_links, None
         # The four table writes (triples, entities, surface_links,
         # processed_convs) run at once, one thread each: every write is
         # scheduling-bound at this size, so serial waves were serial
@@ -763,7 +702,7 @@ class KGPipeline:
             # <- surface) pair was already merged by the run that committed
             # the dictionary, so the merge is a provable no-op and is
             # skipped (saves one bucket rewrite per incremental run).
-            need_merge = pending_links is not None or not self.entities.exists()
+            need_merge = new_links is not None or not self.entities.exists()
             if not need_merge:
                 # Tool vertices never ride the surface dictionary (they link
                 # deterministically as 'tool:<norm>'), so "no new entity
@@ -788,7 +727,7 @@ class KGPipeline:
             done["entities"] = _now()
 
         def _commit_links(verts_fut) -> None:
-            self.links.overwrite(pending_links, before_commit=verts_fut.result)
+            self.links.overwrite(new_links, before_commit=verts_fut.result)
             done["surface_links"] = _now()
 
         def _checkpoint(edges_fut, verts_fut) -> None:
@@ -818,7 +757,7 @@ class KGPipeline:
             edges_fut = submit(_commit_edges)
             verts_fut = submit(_commit_vertices, edges_fut)
             futs = [edges_fut, verts_fut]
-            if pending_links is not None:
+            if new_links is not None:
                 futs.append(submit(_commit_links, verts_fut))
             futs.append(submit(_checkpoint, edges_fut, verts_fut))
         for c in (delta, mentions, linkmap, linked, trips):

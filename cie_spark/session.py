@@ -84,7 +84,7 @@ def get_spark(
         # limit/first/isEmpty probe (CLI row caps, consistency checks, the
         # local-tier size probes). The one caller that wants all-partitions-
         # in-one-round semantics (the vocabulary-bounded surface collect)
-        # scopes it locally: link.py::_collect_and_link_local.
+        # scopes it locally: link.py::_bounded_rows.
         # TIMESTAMP_MICROS, not the INT96 default: INT96 parquet columns
         # carry no footer min/max statistics (pyarrow: has_min_max=False),
         # which silently disabled the manifest ts-bounds harvesting that

@@ -284,3 +284,44 @@ def test_jaccard_duplicate_doc_ids_match_join_verify(spark, monkeypatch):
     )
     assert fast, "agreement test must compare non-empty results"
     assert fast == slow
+
+
+def test_jaccard_local_verify_budget_is_decided_before_the_fetch(
+    spark, monkeypatch
+):
+    """Over LOCAL_VERIFY_MAX_BYTES the verify takes the join path, and the
+    budget is decided before any hs array reaches the driver: no collect
+    returns an `hs` row."""
+    base = "the quick brown fox jumps over the lazy dog today"
+    rows = [
+        (1, base),
+        (2, base),
+        (3, base.replace("dog", "cat")),
+        (4, "completely different text with no overlap at all here"),
+    ]
+    d = _docs(spark, rows)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
+        want = sorted(
+            (r.doc_a, r.doc_b, r.jaccard)
+            for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+        )
+
+    fetched = []
+    frame_cls = type(d)  # the concrete (classic) DataFrame class
+    collect = frame_cls.collect
+
+    def spy(self):
+        out = collect(self)
+        fetched.extend(r for r in out if "hs" in r.asDict())
+        return out
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_BYTES", 8)
+    got = sorted(
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+    )
+    assert want, "the test must compare non-empty results"
+    assert got == want
+    assert not fetched

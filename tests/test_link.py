@@ -1,16 +1,21 @@
-"""Entity linking tiers: dict broadcast join, fuzzy Jaccard, OOV stubs."""
+"""Entity linking tiers: dict broadcast join, fuzzy Jaccard, OOV stubs.
+
+Tests pin a tier by monkeypatching the module's budgets: LOCAL_VOCAB_CAP=0
+forces the distributed tiers, AUTO_LSH_DICT_SIZE=-1 the LSH blocking, and
+a custom dictionary replaces spec.SURFACE_TO_CANONICAL."""
 
 from __future__ import annotations
 
 from cie_spark import spec
-from cie_spark.operators.link import link_surfaces
+from cie_spark.operators import link as L
+from cie_spark.operators.link import link_map
 
 
-def _link(spark, surfaces, **kw):
+def _link(spark, surfaces):
     df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
     return {
         r.surface: (r.entity_id, r.link_tier)
-        for r in link_surfaces(spark, df, **kw).collect()
+        for r in link_map(spark, df)[0].collect()
     }
 
 
@@ -39,10 +44,11 @@ def test_stub_tier_deterministic(spark):
     assert again["FrobnicatorX"] == got["FrobnicatorX"]
 
 
-def test_lsh_blocking_is_subset_of_exact(spark):
+def test_lsh_blocking_is_subset_of_exact(spark, monkeypatch):
     surfaces = ["PostgreSQL 14", "clickhouse cluster", "FrobnicatorX", "kafka!"]
-    exact = _link(spark, surfaces, use_lsh=False)
-    lsh = _link(spark, surfaces, use_lsh=True)
+    exact = _link(spark, surfaces)
+    monkeypatch.setattr(L, "AUTO_LSH_DICT_SIZE", -1)
+    lsh = _link(spark, surfaces)
     # LSH may demote a fuzzy hit to stub (blocking miss) but never invents a
     # different fuzzy target
     for s in surfaces:
@@ -51,33 +57,28 @@ def test_lsh_blocking_is_subset_of_exact(spark):
         assert exact[s][1] in ("dict", "fuzzy", "stub")
 
 
-def test_auto_lsh_switch_on_large_dictionary(spark):
+def test_auto_lsh_switch_on_large_dictionary(spark, monkeypatch):
     """With a dictionary above AUTO_LSH_DICT_SIZE the fuzzy tier must take
     the LSH-blocked path (no broadcast nested-loop / cartesian product in
     the plan); below it, the exact path. Results on the fixture vocab agree
     either way."""
-    from pyspark.sql import functions as F
+    small_exact = _link(spark, ["PostgreSQL 14", "kafka!"])
 
-    from cie_spark.operators import link
-
-    big = spark.range(link.AUTO_LSH_DICT_SIZE + 1).select(
-        F.concat(F.lit("synth-entry-"), F.col("id")).alias("surface_norm"),
-        F.concat(F.lit("ent:synth-"), F.col("id")).alias("entity_id"),
-        F.concat(F.lit("synth-"), F.col("id")).alias("canonical_name"),
-    )
+    big = {
+        f"synth-entry-{i}": f"ent:synth-{i}"
+        for i in range(L.AUTO_LSH_DICT_SIZE + 1)
+    }
     surfaces = spark.createDataFrame(
         [("synth entry 7",), ("unrelated-thing",)], "surface string"
     )
-    auto = link.link_surfaces(
-        spark, surfaces, dictionary=big,
-        dictionary_size=link.AUTO_LSH_DICT_SIZE + 1,
-    )
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert auto.count() == 2  # both surfaces linked (fuzzy or stub)
+    with monkeypatch.context() as m:
+        m.setattr(spec, "SURFACE_TO_CANONICAL", big)
+        auto = link_map(spark, surfaces)[0]
+        plan = auto._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert auto.count() == 2  # both surfaces linked (fuzzy or stub)
 
-    small_exact = _link(spark, ["PostgreSQL 14", "kafka!"], use_lsh=False)
     small_auto = _link(spark, ["PostgreSQL 14", "kafka!"])  # vocab < threshold
     assert small_auto == small_exact  # auto picks the exact path here
 
@@ -94,13 +95,11 @@ def test_oracle_link_agrees_with_spark(spark):
         assert got[s][0] == oracle.link_surface(s), s
 
 
-def test_local_path_agrees_with_distributed(spark):
+def test_local_path_agrees_with_distributed(spark, monkeypatch):
     """The driver-local linker (link_rows_local) must be bit-identical to
     the distributed tiers on every tier: dict hit, fuzzy (incl. the
     (jaccard DESC, entity_id ASC) tie-break), and OOV stub."""
     import random
-
-    from cie_spark.operators.link import link_surfaces
 
     rng = random.Random(7)
     words = [
@@ -110,27 +109,20 @@ def test_local_path_agrees_with_distributed(spark):
         "".join(rng.choice("abcdefgh -_") for _ in range(rng.randint(2, 14)))
         for _ in range(40)
     ]
-    loc = _link(spark, words, local=True)
-    dist = _link(spark, words, local=False, use_lsh=False)
+    loc = _link(spark, words)
+    with monkeypatch.context() as m:
+        m.setattr(L, "LOCAL_VOCAB_CAP", 0)
+        dist = _link(spark, words)
     assert loc == dist
 
     # adversarial tie: both dictionary entries score jaccard 0.5 against the
     # surface; the winner must be the lexicographically smaller entity_id
-    dic = spark.createDataFrame(
-        [("abcde", "ent:zz", "zz"), ("abcdf", "ent:aa", "aa")],
-        "surface_norm string, entity_id string, canonical_name string",
+    monkeypatch.setattr(
+        spec, "SURFACE_TO_CANONICAL", {"abcde": "ent:zz", "abcdf": "ent:aa"}
     )
-    s2 = spark.createDataFrame([("abcdg",)], "surface string")
-    l2 = {
-        r.surface: (r.entity_id, r.link_tier)
-        for r in link_surfaces(spark, s2, dictionary=dic, local=True).collect()
-    }
-    d2 = {
-        r.surface: (r.entity_id, r.link_tier)
-        for r in link_surfaces(
-            spark, s2, dictionary=dic, local=False, use_lsh=False
-        ).collect()
-    }
+    l2 = _link(spark, ["abcdg"])
+    monkeypatch.setattr(L, "LOCAL_VOCAB_CAP", 0)
+    d2 = _link(spark, ["abcdg"])
     assert l2 == d2 == {"abcdg": ("ent:aa", "fuzzy")}
 
 
@@ -149,8 +141,6 @@ def test_local_fuzzy_budget_bounds_scored_pairs(spark):
        full product; past LOCAL_FUZZY_BUDGET scored pairs the path must
        bail (return None) fast, not stall the driver for minutes."""
     import time
-
-    from cie_spark.operators import link as L
 
     dic = {f"dictword{i:05d}": f"ent:d{i:05d}" for i in range(10_000)}
     surfaces = [f"zz unmatched surface {i}" for i in range(65_000)]
@@ -182,20 +172,13 @@ def test_local_fuzzy_budget_bounds_scored_pairs(spark):
 
 
 def test_link_surfaces_falls_back_when_budget_exceeded(spark, monkeypatch):
-    """When the product guard trips, link_surfaces must transparently take
-    the distributed tiers and produce the same rows."""
-    from cie_spark.operators import link as L
-
+    """When the product guard trips, link_map must transparently take the
+    distributed tiers and produce the same rows."""
     surfaces = ["PostgreSQL", "PostgreSQL 14", "no-such-surface-xyz"]
-    df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    want = {
-        (r.surface, r.entity_id, r.link_tier)
-        for r in L.link_surfaces(spark, df, local=False, use_lsh=False).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(L, "LOCAL_VOCAB_CAP", 0)
+        want = _link(spark, surfaces)
     # force the guard to trip on ANY miss
     monkeypatch.setattr(L, "LOCAL_FUZZY_BUDGET", 0)
-    got = {
-        (r.surface, r.entity_id, r.link_tier)
-        for r in L.link_surfaces(spark, df, local=True).collect()
-    }
+    got = _link(spark, surfaces)
     assert got == want

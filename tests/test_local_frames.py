@@ -91,7 +91,7 @@ def test_local_link_map_is_local(spark):
         spark, [(s,) for s in ["Postgres", "K8S", "PostgreSQL 14", "zzqx"]],
         "surface string",
     )
-    m = link.link_surfaces(spark, surfaces)
+    m, _ = link.link_map(spark, surfaces)
     assert m.isLocal()
     _assert_local(m, link.LINKMAP_SCHEMA)
 
@@ -99,10 +99,41 @@ def test_local_link_map_is_local(spark):
 def test_first_run_dictionary_link_map_is_local(spark, tmp_path):
     p = KGPipeline(spark, str(tmp_path / "wh"))
     surfaces = local_frame(spark, [("Postgres",), ("Kafka",)], "surface string")
-    m = p._link_with_dictionary(surfaces)
+    m, new = link.link_map(spark, surfaces, p.links.read())
     assert m.isLocal()
     _assert_local(m, link.LINKMAP_SCHEMA)
-    assert p._pending_links is m
+    assert new is m
+
+
+def test_incremental_link_map_is_local(
+    spark, tmp_path, monkeypatch, add_new_surfaces_turn
+):
+    """An incremental run that links new surfaces (a fuzzy, a stub and a
+    dict one) canonicalizes them with the stored dictionary in-process:
+    the map it applies, which is also the dictionary it commits, is one
+    LocalRelation."""
+    src = SnapshotTable(
+        spark, str(tmp_path / "src"), bucket_key="conv_id", n_buckets=8
+    )
+    src.overwrite(generate_transcripts(spark, n_convs=6, avg_turns=4, seed=5))
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=8)
+    p.run_from_table(src)
+    new = add_new_surfaces_turn(src)
+
+    maps = []
+    apply_links = link.apply_links
+
+    def spy(mentions, linkmap):
+        maps.append(linkmap)
+        return apply_links(mentions, linkmap)
+
+    monkeypatch.setattr(link, "apply_links", spy)
+    r = p.run_from_table(src)
+    assert not r.get("skipped")
+    assert len(maps) == 1
+    _assert_local(maps[0], link.LINKMAP_SCHEMA)
+    tiers = {row.surface: row.link_tier for row in maps[0].collect()}
+    assert {s: tiers[s] for s in new} == new
 
 
 def test_jaccard_local_verify_is_local(spark):

@@ -147,3 +147,59 @@ def test_full_run_jobs_keep_the_callers_job_group(spark, tmp_path):
     bus.waitUntilEmpty()
     assert st.getJobIdsForGroup("cie-full-index")
     assert set(st.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_incremental_new_surfaces_commit_like_a_full_index(
+    spark, tmp_path, add_new_surfaces_turn
+):
+    """An incremental run whose edit adds a new fuzzy, stub and dict
+    surface commits the same surface_links and entities rows as a fresh
+    full index of the edited input: linking the new surfaces against the
+    stored dictionary is the full index's linking, restricted."""
+    from cie_spark.sources.io_snapshots import SnapshotTable
+
+    src = SnapshotTable(
+        spark, str(tmp_path / "src"), bucket_key="conv_id", n_buckets=8
+    )
+    src.overwrite(generate_transcripts(spark, n_convs=6, avg_turns=4, seed=5))
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=8)
+    p.run_from_table(src)
+    new = add_new_surfaces_turn(src)
+    assert not p.run_from_table(src).get("skipped")
+    full = KGPipeline(spark, str(tmp_path / "full"), n_buckets=8)
+    full.run(src.read(), incremental=False)
+
+    def links(q):
+        return sorted(
+            tuple(r) for r in q.links.read()
+            .select("surface", "surface_norm", "entity_id", "link_tier").collect()
+        )
+
+    def entities(q):
+        return sorted(
+            (r.entity_id, r.kind, r.canonical_name, tuple(r.surfaces),
+             tuple(r.embedding))
+            for r in q.entities.read().collect()
+        )
+
+    got = links(p)
+    assert {r[0]: r[3] for r in got if r[0] in new} == new
+    assert got == links(full)
+    assert entities(p) == entities(full)
+
+
+def test_full_index_links_like_link_mentions(spark, tmp_path):
+    """The triples a full index commits are all_triples over link_mentions:
+    the pipeline and the operator link through the same path."""
+    from cie_spark.operators.extract import extract_mentions
+    from cie_spark.operators.link import link_mentions
+    from cie_spark.operators.triples import all_triples
+
+    t = generate_transcripts(spark, n_convs=10, avg_turns=6, seed=23)
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=8)
+    p.run(t, incremental=False)
+    want = {
+        (r.subj, r.pred, r.obj, r.conv_id, r.turn_idx, r.weight)
+        for r in all_triples(link_mentions(spark, extract_mentions(t))).collect()
+    }
+    assert want and _triple_set(p) == want
