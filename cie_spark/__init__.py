@@ -10,7 +10,7 @@ conversation-graph construction over tables of multi-turn transcripts
                    rendered to Spark expressions, pandas code AND ANSI SQL)
 - ``sources``    — transcript synthesis, snapshot-manifest table IO
 - ``operators``  — extraction (built-in regex expressions), entity linking
-                   (broadcast dict + MinHash-LSH), connected-components
+                   (dict + exact fuzzy Jaccard), connected-components
                    canonicalization, triple emission, dedup, similarity
                    search, text analysis
 - ``functions``  — deterministic IDs, text normalization, mock embeddings
@@ -19,7 +19,7 @@ conversation-graph construction over tables of multi-turn transcripts
 
 Architecture is DataFrame/SQL-first: Catalyst handles pushdown/pruning/join
 selection; Python appears only in Arrow-vectorized UDFs (mock embeddings,
-the distributed fuzzy-link scorer, dedup hashing, media codecs).
+the distributed linking kernel, dedup hashing, media codecs).
 """
 
 __version__ = "0.1.0"

@@ -28,49 +28,9 @@ def norm_col(col: Column | str) -> Column:
     )
 
 
-def stub_entity_id_col(norm_surface: Column) -> Column:
-    """'ent:' + sha256(norm)[:16] — deterministic OOV stub, vectorized sha2."""
-    return F.concat(F.lit("ent:"), F.substring(F.sha2(norm_surface, 256), 1, 16))
-
-
 def edge_id_col(subj: Column, pred: Column, obj: Column) -> Column:
     """Stable edge identity (analog of datalog.go:292,316 edge IDs)."""
     return F.sha2(F.concat_ws("|", subj, pred, obj), 256)
-
-
-def minhash_band_cols(norm_surface: Column, *, bands: int | None = None,
-                      rows: int | None = None) -> list[Column]:
-    """MinHash band signatures over character 3-gram shingles — pure built-ins.
-
-    For each band b we take ROWS independent min-hashes (xxhash64 of the
-    shingle salted with the hash index) and hash the concatenation; two
-    surfaces collide in band b iff all ROWS min-hashes agree. Used for LSH
-    blocking of fuzzy link candidates (the scale path; candidates are then
-    exactly scored with Jaccard).
-    """
-    bands = bands or spec.MINHASH_BANDS
-    rows = rows or spec.MINHASH_ROWS
-    sh = F.array_distinct(
-        F.when(
-            F.length(norm_surface) >= spec.SHINGLE_K,
-            F.transform(
-                F.sequence(F.lit(1), F.length(norm_surface) - (spec.SHINGLE_K - 1)),
-                lambda i: norm_surface.substr(i, F.lit(spec.SHINGLE_K)),
-            ),
-        ).otherwise(F.array(norm_surface))
-    )
-    def salted_hash(h: int):
-        # NB: F.transform treats 2-arg lambdas as (element, index) — keep 1-arg
-        return lambda x: F.xxhash64(F.lit(h), x)
-
-    out = []
-    for b in range(bands):
-        mins = [
-            F.array_min(F.transform(sh, salted_hash(b * rows + r)))
-            for r in range(rows)
-        ]
-        out.append(F.xxhash64(F.lit(b), *mins).alias(f"band_{b}"))
-    return out
 
 
 def row_lane_cols() -> list[Column]:

@@ -8,99 +8,43 @@ resolver, every caller links through `link_map` (distinct surfaces, with an
 optional stored dictionary -> canonical link map) and `apply_links` (the
 map onto the mention stream); `link_mentions` is the two in sequence.
 
-Tiers, in the order they run
-----------------------------
-1. Local (`link_surfaces_rows`): ONE bounded collect of the distinct
-   surfaces (LOCAL_VOCAB_CAP), then dictionary hit, exact best-Jaccard
-   fuzzy match and stub in-process (`link_rows_local`), with canon over the
-   rows (`canon.canonicalize_rows_local`). The result ships back as one
-   LocalRelation.
-2. Distributed (`_link_distributed`), the fallback when the vocabulary or
-   the fuzzy work (LOCAL_FUZZY_BUDGET) exceeds the local budgets, or the
-   dictionary exceeds AUTO_LSH_DICT_SIZE: a broadcast dictionary join, an
-   exact broadcast nested-loop Jaccard over (distinct misses × dictionary),
-   stubs, then the distributed connected-components canon.
-3. LSH: only above AUTO_LSH_DICT_SIZE dictionary entries, the distributed
-   fuzzy tier blocks candidates by MinHash band signatures (an equi-join
-   per band) before the exact verify — never an all-pairs cross join.
+Tiers: one kernel, two places to run it
+---------------------------------------
+Every surface is linked by `link_rows_local`: dictionary hit, then the
+exact best-Jaccard fuzzy match over an inverted shingle index, then the
+deterministic stub. The input size only decides where that kernel runs.
 
-Determinism: best candidate by (jaccard DESC, entity_id ASC) on every tier
-— partition-order independent, and the local and distributed renderings
-agree bit for bit (tests/test_link.py).
+1. Local (`link_surfaces_rows`): ONE bounded collect of the distinct
+   surfaces (LOCAL_VOCAB_CAP), the kernel in-process under
+   LOCAL_FUZZY_BUDGET, and canon over the rows
+   (`canon.canonicalize_rows_local`). The result ships back as one
+   LocalRelation.
+2. Distributed (`_link_distributed`), when the vocabulary or the fuzzy work
+   exceeds those budgets: the same kernel, unbudgeted, in one `mapInArrow`
+   over the distinct surfaces, then the distributed connected-components
+   canon.
+
+Determinism: best candidate by (jaccard DESC, entity_id ASC), compared
+pairwise, so the result is independent of batch and partition order and
+both tiers agree bit for bit (tests/test_link.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cie_spark import spec
 from cie_spark import functions as CF
 from cie_spark.operators import canon
-from cie_spark.session import local_frame
+from cie_spark.session import arrow_table, local_frame
 
-
-def dictionary_df(spark: SparkSession) -> DataFrame:
-    """(surface_norm, entity_id, canonical_name) from the frozen spec."""
-    rows = [
-        (k, v, v.removeprefix("ent:")) for k, v in sorted(spec.SURFACE_TO_CANONICAL.items())
-    ]
-    return local_frame(
-        spark, rows, "surface_norm string, entity_id string, canonical_name string"
-    )
-
-
-def _band_explode(df: DataFrame, surf_col: str) -> DataFrame:
-    """Explode a (surface_norm) df into (surface_norm, band_idx, band_sig)."""
-    bands = CF.minhash_band_cols(F.col(surf_col))
-    sig = df.select(surf_col, F.array(*bands).alias("sig"))
-    return sig.select(
-        surf_col,
-        F.posexplode("sig").alias("band_idx", "band_sig"),
-    )
-
-
-def _jaccard_udf():
-    """Exact 3-gram Jaccard of two normalized strings, as an Arrow-batched
-    pandas UDF implementing spec.shingles/spec.jaccard directly.
-
-    Deliberately NOT a Column expression: the expression rendering
-    (transform/sequence/array_intersect over both sides) compiles to a
-    janino codegen unit that costs several seconds of DRIVER time on a cold
-    JVM — a pure serial term that caps N->4N scaling efficiency — while the
-    frame it runs on is vocabulary-bounded (distinct unmatched surfaces x
-    dictionary), so expression-vs-UDF throughput is irrelevant. The python
-    workers are already warm from the extraction stage."""
-    import pandas as pd
-
-    # NB: no type annotations — `from __future__ import annotations` turns
-    # them into strings pyspark cannot resolve against the local `pd`
-    @F.pandas_udf("double")
-    def jacc(a, b):
-        return pd.Series(
-            [
-                spec.jaccard(spec.shingles(x), spec.shingles(y))
-                if isinstance(x, str) and isinstance(y, str)
-                else 0.0
-                for x, y in zip(a, b)
-            ],
-            dtype="float64",
-        )
-
-    return jacc
-
-
-# above this many dictionary entries, linking skips the local tier and the
-# distributed fuzzy tier switches from the exact broadcast nested-loop to
-# MinHash-LSH band blocking automatically:
-# the nested loop is (distinct unmatched surfaces × dictionary) — fine for a
-# 10^2-entry vocabulary, silently quadratic at 10^6
-AUTO_LSH_DICT_SIZE = 10_000
 
 # distinct-surface sets (and stored dictionaries) at or below this size take
 # the driver-local linking path: one collect (bounded by the cap) replaces
-# the ~10 tiny driver job rounds of the distributed tier DAG (persist,
-# broadcast builds, window, eager checkpoint), which are pure serial cost.
+# the driver job rounds of the distributed tier (the distinct-surface
+# exchange, the mapInArrow stage, the eager checkpoint): pure serial cost.
 # 64k surfaces x ~32 B collect ~2 MB — driver-safe; bigger vocabularies
 # stay on the distributed tier.
 LOCAL_VOCAB_CAP = 65_536
@@ -109,9 +53,9 @@ LOCAL_VOCAB_CAP = 65_536
 # shingle with the miss (exact blocking: threshold > 0), but adversarial
 # inputs still degrade to the full product. The bound is on SCORED PAIRS,
 # summed BEFORE any pair is scored: past it the local path bails
-# (link_rows_local returns None) and the distributed tiers run. 2M scored
-# pairs ≈ 1–3 s of driver CPU — the distributed tier's fixed scheduling
-# cost, i.e. the break-even point.
+# (link_rows_local returns None) and the distributed tier runs the same
+# kernel on the executors. 2M scored pairs ≈ 1–3 s of driver CPU — the
+# distributed tier's fixed scheduling cost, i.e. the break-even point.
 LOCAL_FUZZY_BUDGET = 2_000_000
 
 
@@ -119,13 +63,14 @@ def link_rows_local(
     surfaces: list[str], dic: dict[str, str],
     fuzzy_budget: int | None = None,
 ) -> list[tuple[str, str, str, str]] | None:
-    """Driver-local rendering of the 3-tier linker over a distinct-surface
-    list: same frozen spec functions (spec.norm/shingles/jaccard), same
-    tie-breaks (best Jaccard, then lexicographic entity_id), same stub ids —
-    bit-identical to the distributed tiers (pinned by
-    tests/test_link.py::test_local_path_agrees_with_distributed).
+    """The linking kernel over a distinct-surface list, (surface,
+    surface_norm, entity_id, link_tier) per surface: dictionary hit, exact
+    best-Jaccard fuzzy match (spec.norm/shingles/jaccard; ties to the
+    lexicographically smaller entity_id), else spec.stub_entity_id. Both
+    tiers run it: the local tier on the driver, the distributed tier per
+    Arrow batch on the executors.
 
-    Returns None (caller must fall back to the distributed tiers) when the
+    Returns None (the caller then takes the distributed tier) when the
     total of (miss × candidate) pairs to score exceeds `fuzzy_budget` —
     decided from the blocked candidate sets before any pair is scored:
     the dict pass is O(surfaces) and always cheap, and the fuzzy tier blocks
@@ -138,8 +83,6 @@ def link_rows_local(
     jaccard <= min(|a|,|b|)/max(|a|,|b|), candidates failing that length-ratio
     bound are skipped without scoring. Tie-breaks compare (jaccard DESC,
     entity_id ASC) pairwise, so candidate enumeration order is irrelevant."""
-    import hashlib
-
     k = spec.SHINGLE_K
 
     def _shingles_normed(n: str) -> set[str]:
@@ -214,8 +157,7 @@ def link_rows_local(
         if best is not None:
             out.append((s, n, best[1], "fuzzy"))
         else:
-            stub = "ent:" + hashlib.sha256(n.encode()).hexdigest()[:16]
-            out.append((s, n, stub, "stub"))
+            out.append((s, n, spec.stub_entity_id(n), "stub"))
     return out
 
 
@@ -254,11 +196,8 @@ def link_surfaces_rows(
 ) -> list[tuple[str, str, str, str]] | None:
     """The local tier: collect the distinct surfaces of a (surface) frame
     (bounded by LOCAL_VOCAB_CAP) and link them in-process with
-    link_rows_local. None when the dictionary is past AUTO_LSH_DICT_SIZE or
-    the vocabulary or fuzzy work exceeds the local budgets — link_map then
-    runs the distributed tiers."""
-    if len(spec.SURFACE_TO_CANONICAL) > AUTO_LSH_DICT_SIZE:
-        return None
+    link_rows_local. None when the vocabulary or the fuzzy work exceeds the
+    local budgets — link_map then runs the distributed tier."""
     rows = _bounded_rows(
         surfaces.select("surface").dropDuplicates(["surface"]), LOCAL_VOCAB_CAP
     )
@@ -270,85 +209,27 @@ def link_surfaces_rows(
     )
 
 
-def _link_distributed(spark: SparkSession, surfaces: DataFrame) -> DataFrame:
-    """The distributed tiers over the distinct surfaces of a (surface)
-    frame, checkpointed: dictionary broadcast join, then exact best-Jaccard
-    over (distinct misses × dictionary) — MinHash-LSH band blocking first
-    when the dictionary exceeds AUTO_LSH_DICT_SIZE, a recall<1.0
-    approximation traded for sub-quadratic candidate generation — then
-    deterministic stubs."""
-    dic = dictionary_df(spark)
-    use_lsh = len(spec.SURFACE_TO_CANONICAL) > AUTO_LSH_DICT_SIZE
-    distinct = (
+def _link_distributed(surfaces: DataFrame) -> DataFrame:
+    """The distributed tier over the distinct surfaces of a (surface)
+    frame, checkpointed: link_rows_local, unbudgeted, per Arrow batch. The
+    dictionary is read on the driver and ships inside the closure."""
+    dic = dict(spec.SURFACE_TO_CANONICAL)
+    # parsed here: parsing a DDL string needs the driver's SparkContext
+    schema = T._parse_datatype_string(LINKMAP_SCHEMA)
+
+    def link_batches(batches):
+        for b in batches:
+            rows = link_rows_local(b.column(0).to_pylist(), dic)
+            yield from arrow_table(rows, schema).to_batches()
+
+    # materialize the (vocabulary-bounded) link map eagerly: callers read it
+    # more than once (canon, the semi-join, the mention join)
+    return (
         surfaces.select("surface")
         .dropDuplicates(["surface"])
-        .withColumn("surface_norm", CF.norm_col("surface"))
+        .mapInArrow(link_batches, schema)
+        .localCheckpoint(eager=True)
     )
-
-    # tier 1: exact dictionary broadcast join. The distinct-surface frame is
-    # vocabulary-bounded (not corpus-bounded) and feeds several tiers below —
-    # persist it so the (potentially 100-TB) upstream is computed once.
-    t1 = distinct.join(F.broadcast(dic), on="surface_norm", how="left").persist()
-    hit = t1.filter(F.col("entity_id").isNotNull()).select(
-        "surface", "surface_norm", "entity_id", F.lit("dict").alias("link_tier")
-    )
-    miss = t1.filter(F.col("entity_id").isNull()).select("surface", "surface_norm")
-
-    # tier 2: candidate generation (LSH blocking or exact broadcast
-    # nested-loop over the bounded dictionary), then exact-Jaccard verify
-    if use_lsh:
-        cand_bands = _band_explode(miss, "surface_norm")
-        dict_bands = _band_explode(
-            dic.select(F.col("surface_norm").alias("dict_norm")), "dict_norm"
-        ).join(
-            F.broadcast(
-                dic.select(F.col("surface_norm").alias("dict_norm"), "entity_id")
-            ),
-            on="dict_norm",
-        )
-        candidates = (
-            cand_bands.join(
-                F.broadcast(dict_bands), on=["band_idx", "band_sig"], how="inner"
-            )
-            .select("surface_norm", "dict_norm", "entity_id")
-            .dropDuplicates(["surface_norm", "entity_id"])
-        )
-    else:
-        candidates = miss.select("surface_norm").crossJoin(
-            F.broadcast(
-                dic.select(F.col("surface_norm").alias("dict_norm"), "entity_id")
-            )
-        )
-    pairs = candidates.withColumn(
-        "jacc", _jaccard_udf()(F.col("surface_norm"), F.col("dict_norm"))
-    ).filter(F.col("jacc") >= spec.JACCARD_LINK_THRESHOLD)
-    w = Window.partitionBy("surface_norm").orderBy(
-        F.desc("jacc"), F.asc("entity_id")
-    )
-    fuzzy = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("surface_norm", "entity_id")
-    )
-    t2 = miss.join(fuzzy, on="surface_norm", how="left")
-    fuzzy_hit = t2.filter(F.col("entity_id").isNotNull()).select(
-        "surface", "surface_norm", "entity_id", F.lit("fuzzy").alias("link_tier")
-    )
-
-    # tier 3: deterministic OOV stubs (anti-join result -> synthesized id)
-    stub = t2.filter(F.col("entity_id").isNull()).select(
-        "surface",
-        "surface_norm",
-        CF.stub_entity_id_col(F.col("surface_norm")).alias("entity_id"),
-        F.lit("stub").alias("link_tier"),
-    )
-
-    # materialize the (vocabulary-bounded) link map eagerly, then release the
-    # t1 cache — long-running callers (streaming watch) would otherwise leak
-    # one cached frame per micro-batch
-    out = hit.unionByName(fuzzy_hit).unionByName(stub).localCheckpoint(eager=True)
-    t1.unpersist()
-    return out
 
 
 def link_map(
@@ -369,7 +250,7 @@ def link_map(
     back as ONE local_frame, which is then both the map and the new
     dictionary: a semi-join would only turn the driver-held rows back into
     a distributed plan, and extra dictionary rows never match a surface the
-    run does not have. Otherwise the distributed tiers and the distributed
+    run does not have. Otherwise the distributed tier and the distributed
     canon run, and the map is semi-joined to the surfaces."""
     fresh_in = surfaces
     if stored is not None:
@@ -389,7 +270,7 @@ def link_map(
             return merged, merged
         fresh = local_frame(spark, rows, LINKMAP_SCHEMA)
     else:
-        fresh = _link_distributed(spark, fresh_in)
+        fresh = _link_distributed(fresh_in)
     raw = fresh if stored is None else stored.unionByName(fresh)
     merged = canon.canonicalize_linkmap(raw)
     if merged is not raw:

@@ -57,7 +57,7 @@ def extract_mentions(transcripts: pd.DataFrame, prose: bool = True) -> pd.DataFr
 
 def link_surface(surface: str) -> str:
     """3-tier linking for one surface: dict -> fuzzy (exact Jaccard over the
-    whole dictionary — the oracle needs no LSH since it's small) -> stub."""
+    whole dictionary, no blocking) -> stub."""
     n = spec.norm(surface)
     hit = spec.SURFACE_TO_CANONICAL.get(n)
     if hit:

@@ -21,6 +21,19 @@ from pyspark.sql import types as T
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def arrow_table(rows, schema: T.StructType):
+    """Driver-held rows (tuples or Rows, in schema order) as one Arrow
+    table with exactly `schema`'s types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
 def local_frame(
     spark: SparkSession, rows, schema: T.StructType | str
 ) -> DataFrame:
@@ -32,17 +45,9 @@ def local_frame(
     `spark.createDataFrame(list)` is a pickled `parallelize` RDD instead:
     every consumption of it runs one Python-worker task per default-
     parallelism slot, ~0.5 s of scheduling for a handful of rows."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema=schema)
 
 
 def get_spark(

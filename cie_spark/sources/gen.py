@@ -25,8 +25,8 @@ from cie_spark import spec
 # OOV surfaces that are NOT in the dictionary -> exercise stub synthesis
 OOV_SURFACES = ["FrobnicatorX", "quantum-widget", "zz-internal-svc"]
 
-# near-miss variants of dictionary surfaces -> exercise the MinHash-LSH
-# fuzzy tier (3-gram Jaccard vs the dictionary >= threshold)
+# near-miss variants of dictionary surfaces -> exercise the fuzzy tier
+# (3-gram Jaccard vs the dictionary >= threshold)
 FUZZY_SURFACES = ["PostgreSQL 14", "clickhouse cluster", "kubernetes!", "apache_kafka_broker"]
 
 _ENTS = [s for forms in spec.ENTITY_VOCAB.values() for s in forms]

@@ -2,8 +2,8 @@
 
 Everything that must agree between the three implementations —
 
-1. the Spark pipeline (built-in regex expression extraction, broadcast-dict
-   linking),
+1. the Spark pipeline (built-in regex expression extraction, the
+   ``link_rows_local`` linking kernel),
 2. the pure-pandas oracle (``cie_spark.oracle``), and
 3. the ANSI-SQL oracles run by DuckDB (``__spark_entry__.oracle_sql``)
 
@@ -37,12 +37,13 @@ Mention extraction (per turn, over ``text``):
 Normalization: ``norm(s)`` lowercases, maps every run of non-alphanumeric
 chars to a single ``-``, strips leading/trailing ``-``.
 
-Linking: ``norm(surface)`` looked up in the alias dictionary (broadcast
-join); unmatched surfaces go to the fuzzy tier (MinHash-LSH over character
-3-gram shingles, Jaccard >= JACCARD_LINK_THRESHOLD, best candidate wins with
-tie-break (jaccard DESC, canonical_id ASC)); still-unmatched surfaces become
-deterministic out-of-vocabulary stubs ``ent:sha256(norm)[:16]`` (analog of
-external-stub synthesis, resolver.go:461-527).
+Linking: ``norm(surface)`` looked up in the alias dictionary; unmatched
+surfaces go to the fuzzy tier (exact Jaccard of character 3-gram shingles
+against every dictionary entry, Jaccard >= JACCARD_LINK_THRESHOLD, best
+candidate wins with tie-break (jaccard DESC, canonical_id ASC));
+still-unmatched surfaces become deterministic out-of-vocabulary stubs
+``ent:sha256(norm)[:16]`` (analog of external-stub synthesis,
+resolver.go:461-527).
 
 Canonical entity IDs: ``ent:<canonical-key>`` for dictionary entities (the
 canonical key is itself ``norm(canonical name)``), ``tool:<name>`` for tools,
@@ -79,8 +80,6 @@ MARKER_SQL_PATTERN = r"\[\[([^\]]+)\]\]"
 # fuzzy-link threshold on 3-gram Jaccard
 JACCARD_LINK_THRESHOLD = 0.5
 SHINGLE_K = 3
-MINHASH_BANDS = 8
-MINHASH_ROWS = 2  # hashes per band -> 16 minhash functions total
 
 # co-occurrence window (turns) for the windowed mentioned_with variant;
 # bounded so a mega-conversation costs O(turns * W), never O(turns^2)

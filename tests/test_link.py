@@ -1,8 +1,10 @@
-"""Entity linking tiers: dict broadcast join, fuzzy Jaccard, OOV stubs.
+"""Entity linking: dict hit, exact fuzzy Jaccard, OOV stubs — one kernel
+(link_rows_local) run on the driver (local tier) or per Arrow batch on the
+executors (distributed tier).
 
 Tests pin a tier by monkeypatching the module's budgets: LOCAL_VOCAB_CAP=0
-forces the distributed tiers, AUTO_LSH_DICT_SIZE=-1 the LSH blocking, and
-a custom dictionary replaces spec.SURFACE_TO_CANONICAL."""
+forces the distributed tier, and a custom dictionary replaces
+spec.SURFACE_TO_CANONICAL."""
 
 from __future__ import annotations
 
@@ -44,43 +46,18 @@ def test_stub_tier_deterministic(spark):
     assert again["FrobnicatorX"] == got["FrobnicatorX"]
 
 
-def test_lsh_blocking_is_subset_of_exact(spark, monkeypatch):
-    surfaces = ["PostgreSQL 14", "clickhouse cluster", "FrobnicatorX", "kafka!"]
-    exact = _link(spark, surfaces)
-    monkeypatch.setattr(L, "AUTO_LSH_DICT_SIZE", -1)
-    lsh = _link(spark, surfaces)
-    # LSH may demote a fuzzy hit to stub (blocking miss) but never invents a
-    # different fuzzy target
-    for s in surfaces:
-        if lsh[s][1] == "fuzzy":
-            assert lsh[s] == exact[s]
-        assert exact[s][1] in ("dict", "fuzzy", "stub")
-
-
-def test_auto_lsh_switch_on_large_dictionary(spark, monkeypatch):
-    """With a dictionary above AUTO_LSH_DICT_SIZE the fuzzy tier must take
-    the LSH-blocked path (no broadcast nested-loop / cartesian product in
-    the plan); below it, the exact path. Results on the fixture vocab agree
-    either way."""
-    small_exact = _link(spark, ["PostgreSQL 14", "kafka!"])
-
-    big = {
-        f"synth-entry-{i}": f"ent:synth-{i}"
-        for i in range(L.AUTO_LSH_DICT_SIZE + 1)
-    }
-    surfaces = spark.createDataFrame(
-        [("synth entry 7",), ("unrelated-thing",)], "surface string"
-    )
-    with monkeypatch.context() as m:
-        m.setattr(spec, "SURFACE_TO_CANONICAL", big)
-        auto = link_map(spark, surfaces)[0]
-        plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert auto.count() == 2  # both surfaces linked (fuzzy or stub)
-
-    small_auto = _link(spark, ["PostgreSQL 14", "kafka!"])  # vocab < threshold
-    assert small_auto == small_exact  # auto picks the exact path here
+def test_large_dictionary_links_exactly(spark, monkeypatch):
+    """Fuzzy linking is the exact best Jaccard at every dictionary size, on
+    both tiers: past 10,000 entries a surface one letter off a dictionary
+    entry (jaccard 7/13 with apache-kafka) still links to it, not to a
+    stub."""
+    big = {f"synth-entry-{i}": f"ent:synth-{i}" for i in range(10_001)}
+    big["apache-kafka"] = "ent:apache-kafka"
+    monkeypatch.setattr(spec, "SURFACE_TO_CANONICAL", big)
+    want = {"apache-kzfka": ("ent:apache-kafka", "fuzzy")}
+    assert _link(spark, ["apache-kzfka"]) == want
+    monkeypatch.setattr(L, "LOCAL_VOCAB_CAP", 0)
+    assert _link(spark, ["apache-kzfka"]) == want
 
 
 def test_oracle_link_agrees_with_spark(spark):

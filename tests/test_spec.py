@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cie_spark import spec
 from cie_spark import functions as CF
 
@@ -59,13 +57,6 @@ def test_canonical_case_sql_matches_dict():
     )
     got = dict(rel.fetchall())
     assert got == spec.SURFACE_TO_CANONICAL
-
-
-def test_stub_id_python_vs_column(spark):
-    surfaces = ["frobnicatorx", "quantum-widget", "x"]
-    df = spark.createDataFrame([(s,) for s in surfaces], "s string")
-    got = [r[0] for r in df.select(CF.stub_entity_id_col(F.col("s"))).collect()]
-    assert got == [spec.stub_entity_id(s) for s in surfaces]
 
 
 def test_jaccard_examples():
