@@ -62,20 +62,21 @@ def _band_buckets(df: DataFrame, member, bands, max_bucket: int | None = None):
     the value-sorted `member` values into `_ms`. With `max_bucket` set,
     buckets of more rows are dropped (the hot-bucket quadratic guard — a
     degenerate signature or an exact-dup cluster; pairs living only there
-    are a documented recall trade). `count(*)`, not size(collect_list),
-    counts the rows, so NULL members occupy their buckets but never pair:
-    collect_list drops them."""
+    are a documented recall trade). The drop runs BEFORE the collect: a
+    window count over the band exchange filters the rows of a hot bucket
+    out, so no aggregation buffer ever holds its member list (the window
+    buffer spills; a collect_list buffer cannot split one group).
+    `count(*)`, not size(collect_list), counts the rows, so NULL members
+    occupy their buckets but never pair: collect_list drops them."""
     parts = df.select(
         member.alias("_m"),
         F.posexplode(bands).alias("band_idx", "band_sig"),
     )
-    ms = F.sort_array(F.collect_list("_m")).alias("_ms")
-    if max_bucket is None:
-        return parts.groupBy("band_idx", "band_sig").agg(ms)
-    return (
-        parts.groupBy("band_idx", "band_sig")
-        .agg(F.count("*").alias("_n"), ms)
-        .filter(F.col("_n") <= max_bucket)
+    if max_bucket is not None:
+        n = F.count("*").over(Window.partitionBy("band_idx", "band_sig"))
+        parts = parts.withColumn("_n", n).filter(F.col("_n") <= max_bucket)
+    return parts.groupBy("band_idx", "band_sig").agg(
+        F.sort_array(F.collect_list("_m")).alias("_ms")
     )
 
 

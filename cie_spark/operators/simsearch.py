@@ -9,7 +9,10 @@ kNN + over-fetch + post-filter). Spark has no built-in ANN, so per SURVEY
 - LSH-bucketed approximate search: random-hyperplane signatures (built-in
   expressions) -> candidate bucket join -> exact re-score (the over-fetch +
   verify shape of the reference), sub-linear candidate generation at scale;
-- cosine near-dup pairs for embedding-based dedup.
+- cosine near-dup pairs for embedding-based dedup: banded signatures
+  (candidate generation), then one numpy kernel re-scores each bucket's
+  own vectors exactly — on the driver for small regular inputs, per bucket
+  in one mapInArrow otherwise.
 
 All math is promoted to double so results are stable across engines.
 """
@@ -18,11 +21,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cie_spark.operators.dedup import _band_buckets, _pair_expand, _split_bands
+from cie_spark.operators.dedup import _band_buckets, _split_bands
 from cie_spark.session import local_frame
 
 
@@ -197,117 +202,104 @@ def topk_ivf(
     )
 
 
-# Size tiers of cosine_near_dup_pairs. All three build candidates with the
-# banded core (dedup._band_buckets); the two smaller ones verify with ONE
-# numpy kernel (_verify_buckets) over a matrix fetched once via toArrow():
+# Tiers of cosine_near_dup_pairs. Both build candidates with the banded
+# core and verify with ONE numpy kernel (_verify_bucket), run per bucket
+# over that bucket's own member ids and vector rows:
 #
-# - driver (<= LOCAL_MAX_VECTORS rows): signatures, buckets and verify all
-#   run in numpy on the driver, returning a local_frame LocalRelation. At
-#   this size the distributed plan is ~6 stages of scheduling for ~1 ms of
-#   math (measured 3.3 s for 2,000 vectors at sf0.1). 8,192 rows × dim
-#   <= ~1.5k is <= ~100 MB of Arrow — driver-bounded.
-# - broadcast (matrix <= BROADCAST_MAX_BYTES as float64, <=
-#   BROADCAST_MAX_ROWS rows): buckets are built distributed and fed whole
-#   to the kernel over the broadcast matrix in mapInPandas, so candidate
-#   pairs cross the Python boundary as bucket arrays, never as two vectors.
-#   At sf1.0 (20k × 64 dims, 7.5M candidate pairs) this replaced ~18 s of
-#   candidate-dedup shuffle and join-backs with a ~1 s matmul verify. 64 MB
-#   at dim 64 caps it at ~131k vectors (~75 MB per Python worker).
-# - join-back (larger inputs, duplicate non-null ids, ragged or NULL
-#   vectors): candidate id pairs are deduplicated, the vectors joined back
-#   and the cosine computed in the JVM — the 100-TB shape.
+# - driver (<= LOCAL_MAX_VECTORS rows of regular input: unique non-null
+#   ids, one vector length, no NULL vector): one ids-only probe, one
+#   bounded toArrow() fetch, then signatures, buckets and the kernel all run
+#   in numpy on the driver, returning a local_frame LocalRelation. At this
+#   size the distributed plan is ~6 stages of scheduling for ~1 ms of math
+#   (measured 3.3 s for 2,000 vectors at sf0.1). 8,192 rows × dim <= ~1.5k
+#   is <= ~100 MB of Arrow — driver-bounded.
+# - distributed (everything else): bucket members are (id, vector)
+#   structs, and one mapInArrow runs the kernel per bucket, so candidates
+#   cross the Python boundary as bucket arrays, never as pairs, and no
+#   vector is looked up or joined back. Irregular input verifies as
+#   `cosine_sim` scores it: NULL ids never pair, a NULL or zero vector
+#   scores 0.0, and a ragged pair of nonzero vectors has no cosine.
 #
 # Tier agreement is pinned by
 # tests/test_simsearch.py::test_near_dup_local_tier_agrees_with_distributed;
-# tests pin a tier by monkeypatching these constants.
+# tests force the distributed tier with LOCAL_MAX_VECTORS = 0.
 LOCAL_MAX_VECTORS = 8_192
-BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-BROADCAST_MAX_ROWS = 1 << 19
+
+
+def _matrix(vecs):
+    """(float64 rows, lengths) of an Arrow list array of vectors. Rows of
+    one length come back as they are, with lengths None; otherwise every
+    row is zero-padded to the longest (a NULL vector is all zeros) and the
+    lengths (NULL -> 0) come back too — the padding changes no dot product
+    and no norm."""
+    n = len(vecs)
+    lens = pc.list_value_length(vecs).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    width = int(lens.max()) if n else 0
+    if not vecs.null_count and (lens == width).all():
+        return flat.reshape(n, width), None
+    M = np.zeros((n, width))
+    M[np.repeat(np.arange(n), lens),
+      np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)] = flat
+    return M, lens
 
 
 def _fetch_matrix(vectors: DataFrame, id_col: str, vec_col: str, cap: int):
-    """ONE bounded Arrow fetch of the (id, vector) rows -> (key, M, norms),
-    where key = (sorted non-null ids, their rows in M). toArrow() is ~3x
-    faster than the row-path collect for a 10 MB matrix and type-exact (ids
-    stay exact with NULLs as None, none of toPandas' nullable-int
-    degradation). None when the input holds more than `cap` rows (it may be
-    nondeterministic, or have grown since the probe) or is irregular:
-    duplicate non-null ids, ragged or NULL vectors."""
-    import pyarrow.compute as pc
-
+    """ONE bounded Arrow fetch of the (id, vector) rows -> (ids, rank, M):
+    the ids as a numpy array, rank[i] the place of row i in id order (-1 for
+    a NULL id, which never pairs), and the vectors as float64 rows.
+    toArrow() is ~3x faster than the row-path collect for a 10 MB matrix
+    and type-exact (ids stay exact with NULLs as None, none of toPandas'
+    nullable-int degradation). None when the input holds more than `cap`
+    rows (it may be nondeterministic, or have grown since the probe) or is
+    irregular: duplicate non-null ids, ragged or NULL vectors."""
     tbl = vectors.select(id_col, vec_col).limit(cap + 1).toArrow()
-    vec = tbl.column(1).combine_chunks()
-    if tbl.num_rows > cap or vec.null_count:
+    if tbl.num_rows > cap:
         return None
-    lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
-    dim = int(lens[0]) if len(lens) else 0
+    M, lens = _matrix(tbl.column(1).combine_chunks())
     ids = tbl.column(0).to_pylist()
     nn = [i for i in ids if i is not None]
-    if len(set(nn)) != len(nn) or (lens != dim).any():
+    if lens is not None or len(set(nn)) != len(nn):
         return None
-    M = (
-        vec.flatten()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(ids), dim)
-    )
     karr = np.asarray(nn)
     if karr.dtype.kind not in "iuf":
         karr = np.asarray(nn, dtype=object)
     rows = np.flatnonzero([i is not None for i in ids])
-    order = np.argsort(karr, kind="stable")
+    rank = np.full(len(ids), -1, dtype=np.int64)
+    rank[rows[np.argsort(karr, kind="stable")]] = np.arange(len(nn))
+    idarr = np.empty(len(ids), dtype=karr.dtype)
+    idarr[rows] = karr
+    return idarr, rank, M
+
+
+def _verify_bucket(ids, M, threshold: float, lens=None):
+    """THE near-dup verify kernel of both tiers: one bucket's value-sorted
+    member ids and their float64 vector rows -> (id_a, id_b, sim) arrays of
+    the i<j pairs with id_a < id_b (equal ids never pair) and exact cosine
+    >= threshold. The cosine is `cosine_sim`'s: a zero row scores 0.0
+    against anything, and with `lens` given (rows zero-padded by _matrix)
+    a pair of nonzero rows of different lengths has none and drops out.
+    The only divergence from the JVM cosine is float summation order —
+    invisible at 4 rounded decimals away from ties."""
+    iu, ju = np.triu_indices(len(ids), k=1)
     norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-    return (karr[order], rows[order]), M, norms
+    dots = np.einsum("ij,ij->i", M[iu], M[ju])
+    na, nb = norms[iu], norms[ju]
+    ok = (na > 0) & (nb > 0)
+    sim = np.where(ok, dots / np.where(ok, na * nb, 1.0), 0.0)
+    keep = (sim >= threshold) & (ids[iu] < ids[ju])
+    if lens is not None:
+        keep &= ~ok | (lens[iu] == lens[ju])
+    return ids[iu[keep]], ids[ju[keep]], sim[keep]
 
 
-def _verify_buckets(buckets, key, M, norms, threshold: float):
-    """THE near-dup verify kernel of the driver and broadcast tiers.
-    `buckets` yields value-sorted arrays of unique non-null member ids, so
-    triu's i<j pairs are exactly the id_a < id_b pairs the JVM two-step
-    explode generates; pair expansion and the exact cosine both run in
-    numpy. The only divergence from the JVM verify is float summation order
-    — invisible at 4 rounded decimals away from ties. Returns the pairs
-    with sim >= threshold as a pandas frame, or None. Raises on a member id
-    the fetch did not see (an input that changed between the fetch and the
-    candidate job) instead of verifying against the wrong row."""
-    skey, srow = key
-    outs = []
-    for members in buckets:
-        m = len(members)
-        if m < 2:
-            continue
-        arr = np.asarray(members, dtype=skey.dtype)
-        pos = np.searchsorted(skey, arr)
-        if (pos >= len(skey)).any() or (skey[pos] != arr).any():
-            raise ValueError(
-                "cosine_near_dup_pairs: a candidate id is missing from the "
-                "fetched vectors (did the input change between jobs?)"
-            )
-        rows = srow[pos]
-        iu, ju = np.triu_indices(m, k=1)
-        ra, rb = rows[iu], rows[ju]
-        dots = np.einsum("ij,ij->i", M[ra], M[rb])
-        na, nb = norms[ra], norms[rb]
-        ok = (na > 0) & (nb > 0)
-        sim = np.where(ok, dots / np.where(ok, na * nb, 1.0), 0.0)
-        keep = sim >= threshold
-        if keep.any():
-            outs.append(
-                pd.DataFrame(
-                    {"id_a": arr[iu[keep]], "id_b": arr[ju[keep]], "sim": sim[keep]}
-                )
-            )
-    return pd.concat(outs, ignore_index=True) if outs else None
-
-
-def _local_buckets(sig: np.ndarray, key, bands: int, bits: int, max_bucket: int):
+def _local_buckets(sig: np.ndarray, rank: np.ndarray, bands: int, bits: int,
+                   max_bucket: int):
     """numpy rendering of dedup._band_buckets + _split_bands over the
-    fetched rows: yields every kept bucket's value-sorted member ids. Band
-    split is arithmetic shift + mask (numpy int64 >> == JVM shiftright);
-    the cap counts NULL-id rows, which never become members."""
-    skey, srow = key
-    rank = np.full(len(sig), -1, dtype=np.int64)
-    rank[srow] = np.arange(len(srow))
+    fetched rows: yields every kept bucket of two or more members as its
+    row indices in id order. Band split is arithmetic shift + mask (numpy
+    int64 >> == JVM shiftright); the cap counts NULL-id rows, which never
+    become members."""
     mask = np.int64((1 << bits) - 1)
     for b in range(bands):
         vals = (sig >> np.int64(bits * b)) & mask
@@ -315,21 +307,37 @@ def _local_buckets(sig: np.ndarray, key, bands: int, bits: int, max_bucket: int)
         rows = np.flatnonzero((rank >= 0) & (cnt[inv] <= max_bucket))
         rows = rows[np.lexsort((rank[rows], inv[rows]))]
         for grp in np.split(rows, np.flatnonzero(np.diff(inv[rows])) + 1):
-            yield skey[rank[grp]]
+            if len(grp) > 1:
+                yield grp
 
 
-def _bc_verify_gen(bc, threshold: float):
-    """mapInPandas generator: the verify kernel over each batch of bucket
-    member arrays against the broadcast (key, M, norms), so Arrow moves one
-    row per bucket (~1 MB at sf1.0) instead of one per candidate pair
-    (7.5M rows / ~120 MB)."""
+def _verify_batches(threshold: float):
+    """mapInArrow body of the distributed tier: each row of a batch is one
+    bucket's value-sorted (id, vector) members; the batch's members are
+    converted once and the kernel runs per bucket on its slice."""
 
     def gen(batches):
-        key, M, norms = bc.value
-        for pdf in batches:
-            out = _verify_buckets(pdf["_ms"], key, M, norms, threshold)
-            if out is not None:
-                yield out
+        for rb in batches:
+            ms = rb.column(0)
+            sizes = pc.list_value_length(ms).to_numpy(zero_copy_only=False)
+            ends = np.cumsum(sizes)
+            id_arr, vecs = ms.flatten().flatten()
+            ids = id_arr.to_numpy(zero_copy_only=False)
+            M, lens = _matrix(vecs)
+            outs = [
+                _verify_bucket(
+                    ids[s:e], M[s:e], threshold, None if lens is None else lens[s:e]
+                )
+                for s, e in zip(ends - sizes, ends)
+                if e - s > 1
+            ]
+            if outs:
+                a, b, sim = (np.concatenate(x) for x in zip(*outs))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(a, id_arr.type), pa.array(b, id_arr.type),
+                     pa.array(sim, pa.float64())],
+                    names=["id_a", "id_b", "sim"],
+                )
 
     return gen
 
@@ -359,8 +367,10 @@ def cosine_near_dup_pairs(
     Candidates = pairs sharing >= 1 band bucket (the banded core shared
     with dedup.simhash_pairs); buckets larger than `max_bucket` are dropped
     (hot-bucket quadratic guard — recall trade documented). Verification
-    is the exact cosine, so precision is 1.0 by construction. The size
-    tier is chosen as described above LOCAL_MAX_VECTORS.
+    is the exact cosine of each bucket's own member vectors, so precision
+    is 1.0 by construction; a pair found in several bands carries the same
+    sim in each. The driver or the distributed tier runs the verify, as
+    described above LOCAL_MAX_VECTORS.
     """
     id_type = vectors.schema[id_col].dataType
     out_schema = T.StructType(
@@ -371,31 +381,20 @@ def cosine_near_dup_pairs(
         ]
     )
     bits = n_planes // bands
-    # Size probes, bounded and ids-first (column-pruned CollectLimits): the
-    # first vector's dim sizes the broadcast cap, then ONE ids probe at the
-    # larger cap decides whether the vectors are fetched at all, so an
-    # over-cap input never moves vector bytes to the driver.
-    first = vectors.select(vec_col).limit(1).collect()
-    dim = len(first[0][0]) if first and first[0][0] is not None else 0
-    rows_cap = (
-        min(BROADCAST_MAX_BYTES // (dim * 8), BROADCAST_MAX_ROWS) if dim else 0
-    )
-    cap = max(LOCAL_MAX_VECTORS, rows_cap)
+    # ids-first size probe (a column-pruned CollectLimit): an over-cap input
+    # never moves vector bytes to the driver
     fetched = None
+    cap = LOCAL_MAX_VECTORS
     if cap and len(vectors.select(id_col).limit(cap + 1).collect()) <= cap:
         fetched = _fetch_matrix(vectors, id_col, vec_col, cap)
 
-    if fetched is not None and len(fetched[1]) <= LOCAL_MAX_VECTORS:
-        key, M, norms = fetched
+    if fetched is not None:
+        ids, rank, M = fetched
         sig = _signatures(M, n_planes, seed)
-        out = _verify_buckets(
-            _local_buckets(sig, key, bands, bits, max_bucket),
-            key, M, norms, threshold,
-        )
-        # a pair found in several bands carries identical sims
-        pairs = {} if out is None else dict(
-            zip(zip(out["id_a"].tolist(), out["id_b"].tolist()), out["sim"].tolist())
-        )
+        pairs = {}
+        for rows in _local_buckets(sig, rank, bands, bits, max_bucket):
+            a, b, sim = _verify_bucket(ids[rows], M[rows], threshold)
+            pairs.update(zip(zip(a.tolist(), b.tolist()), sim.tolist()))
         return local_frame(
             vectors.sparkSession,
             [(a, b, s) for (a, b), s in pairs.items()], out_schema,
@@ -403,47 +402,23 @@ def cosine_near_dup_pairs(
 
     sig = vectors.select(
         F.col(id_col),
+        F.col(vec_col),
         _hyperplane_sig_auto(F.col(vec_col), n_planes, seed).alias("sig"),
     )
-    buckets = _band_buckets(
-        sig, F.col(id_col), _split_bands(F.col("sig"), bands, bits), max_bucket
+    member = F.when(
+        F.col(id_col).isNotNull(),
+        F.struct(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
     )
-
-    if fetched is not None:
-        # broadcast tier. Duplicates across bands are verified redundantly
-        # (~5% extra at the sf1.0 operating point) in exchange for skipping
-        # the pre-verify dedup shuffle of the full candidate set — the
-        # dedup runs after the threshold filter, on the (tiny) surviving
-        # pairs, where duplicate rows carry identical sims.
-        bc = vectors.sparkSession.sparkContext.broadcast(fetched)
-        return (
-            buckets.select("_ms")
-            .mapInPandas(_bc_verify_gen(bc, threshold), out_schema)
-            .select("id_a", "id_b", F.round("sim", 4).alias("sim"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
-    # join-back tier: candidate pairs stay ids-ONLY through the dedup
-    # shuffle; vectors join back only for the verify (dragging both vectors
-    # through dropDuplicates measured 3x wall on the sf0.1 bench) — the same
-    # ids-then-payload shape as dedup.ngram_jaccard_pairs. The verify reads
-    # the vector table again rather than caching it: at scale a full-corpus
-    # persist is memory pressure, and the signature subtree is consumed
-    # exactly once by the candidate aggregation.
-    cand = _pair_expand(buckets, "id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-    vecs = vectors.select(F.col(id_col), F.col(vec_col))
+    buckets = _band_buckets(
+        sig, member, _split_bands(F.col("sig"), bands, bits), max_bucket
+    )
+    # duplicate ids aside, every band finds a pair with the same sim, so the
+    # dedup after the threshold runs on the (tiny) surviving pairs
     return (
-        cand.join(
-            vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")),
-            on="id_a",
-        )
-        .join(
-            vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")),
-            on="id_b",
-        )
-        .withColumn("sim", cosine_sim(F.col("va"), F.col("vb")))
-        .filter(F.col("sim") >= threshold)
+        buckets.select("_ms")
+        .mapInArrow(_verify_batches(threshold), out_schema)
         .select("id_a", "id_b", F.round("sim", 4).alias("sim"))
+        .dropDuplicates()
     )
 
 

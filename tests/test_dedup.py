@@ -78,6 +78,20 @@ def test_ngram_jaccard_near_dup(spark):
     assert all(3 not in p for p in pairs)
 
 
+def test_minhash_all_empty_corpus_is_one_hot_bucket_per_band(spark):
+    """Every empty (or NULL) text has the same shingles, so all documents
+    share one band signature per band: each band is a single bucket over
+    max_bucket, dropped before any pair is expanded."""
+    d = _docs(spark, [(i, "" if i % 3 else None) for i in range(100)])
+    sigs = dedup.minhash_signatures(d)
+    assert sigs.groupBy("band_idx").agg(
+        F.countDistinct("band_sig").alias("n")
+    ).filter("n != 1").count() == 0
+    assert dedup.minhash_candidates(d, max_bucket=64).count() == 0
+    # the cap, not the signatures, is what drops them
+    assert dedup.minhash_candidates(d, max_bucket=100).count() == 100 * 99 // 2
+
+
 def test_simhash_near_dup(spark):
     base = " ".join(f"word{i}" for i in range(60))
     d = _docs(

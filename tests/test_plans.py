@@ -6,6 +6,8 @@ cartesian product) fails here long before it fails at scale."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from cie_spark.operators import dedup, link
@@ -187,6 +189,55 @@ def test_dedup_candidates_single_aggregation_no_join(spark):
     # the signature UDF runs once: an inferred non-empty-array filter pushed
     # below an aliasing projection would evaluate it a second time
     assert plan.count("ArrowEvalPython") == 1
+
+
+def test_band_buckets_drop_hot_buckets_before_the_collect(spark):
+    """The hot-bucket cap filters rows by a window count BELOW the
+    collect_list, over the band exchange the collect reuses: a hot bucket's
+    member list never reaches an aggregation buffer."""
+    docs = spark.createDataFrame(
+        [(i, f"shared shingle words alpha beta gamma delta {i % 9}")
+         for i in range(300)],
+        "doc_id long, text string",
+    )
+    lines = _physical(dedup.minhash_candidates(docs)).splitlines()
+    cap = [
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and re.search(r"_n#\d+L <= 64", ln)
+    ]
+    collects = [i for i, ln in enumerate(lines) if "collect_list" in ln]
+    assert len(cap) == 1 and collects
+    assert max(collects) < cap[0]  # the plan prints parents first
+    assert sum("Exchange hashpartitioning(band_idx" in ln for ln in lines) == 1
+
+
+def test_near_dup_distributed_tier_is_one_exchange_and_one_verify(
+    spark, monkeypatch
+):
+    """The distributed near-dup tier: the signature UDF evaluated once, one
+    band exchange up to the per-bucket mapInArrow verify, no join and no
+    broadcast (members carry their own vectors), and one exchange more for
+    the dedup of the surviving pairs."""
+    import numpy as np
+
+    from cie_spark.operators import simsearch
+
+    rng = np.random.default_rng(1)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(50)],
+        "vec_id long, embedding array<float>",
+    )
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
+    plan = _physical(simsearch.cosine_near_dup_pairs(df, threshold=0.9))
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInArrow") == 1
+    lines = plan.splitlines()
+    verify = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    sig = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    assert sum("Exchange" in ln for ln in lines[verify:sig]) == 1
+    assert plan.count("Exchange") == 2
 
 
 def test_dedup_no_exchange_before_signature_on_well_partitioned_input(spark):

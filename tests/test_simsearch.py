@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -146,14 +148,7 @@ def test_near_dup_local_tier_agrees_with_distributed(spark, monkeypatch):
         (r.id_a, r.id_b, r.sim)
         for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
     )
-    # tier 2: distributed candidates + broadcast-matrix verify
     monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
-    mid = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
-    )
-    # tier 3: join-back verify (the 100-TB shape)
-    monkeypatch.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)
     dist = sorted(
         (r.id_a, r.id_b, r.sim)
         for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
@@ -162,7 +157,7 @@ def test_near_dup_local_tier_agrees_with_distributed(spark, monkeypatch):
     # the over-cap drop really engaged: the 20-member exact-dup cluster's
     # buckets exceed max_bucket in every band, so neither tier pairs them
     assert not any(a >= hot_start and b >= hot_start for a, b, _ in local)
-    assert local == mid == dist
+    assert local == dist
 
 
 def test_hyperplane_sig_auto_matches_explicit_planes(spark):
@@ -191,16 +186,11 @@ def test_hyperplane_sig_auto_matches_explicit_planes(spark):
 
 
 def test_cosine_near_dup_pairs_no_dimension_probe_job(spark, monkeypatch):
-    """The round-5 overhead diet kept two of its three cuts here (the
-    third — removing the signature persist — was reverted by measurement;
-    round 6 then removed the persist for real by making the signature
-    subtree single-consumer). This pins the surviving cut: the SIGNATURE
-    planes derive from (seed, dim) inside the UDF, so the plane definition
-    never needs the old make_planes_from_df `.first()` probe. (The round-6
-    broadcast-verify tier makes its own deliberate, bounded size probes —
-    dim + ids — before choosing a tier; that is a measured gate, not a
-    plane-definition dependency.) Bit-identity of the auto-derived planes
-    is pinned separately above; here we pin that the operator still
+    """The signature planes derive from (seed, dim) inside the UDF, so
+    neither tier needs a `.first()` job to learn the vector dimension: the
+    distributed tier runs no probe at all, and the driver tier's only probe
+    is its ids-first size check. Bit-identity of the auto-derived planes is
+    pinned separately above; here we pin that the distributed tier still
     returns the exact verified pairs."""
     import numpy as np
 
@@ -230,69 +220,62 @@ def _planted(rng, dim=16, clusters=8, noise=60):
     return rows
 
 
-def _near_dups_pinned_join_back(df, monkeypatch, **kw):
-    with monkeypatch.context() as m:
-        m.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
-        m.setattr(simsearch, "BROADCAST_MAX_BYTES", 0)
-        return sorted(
-            (r.id_a, r.id_b, r.sim)
-            for r in simsearch.cosine_near_dup_pairs(df, **kw).collect()
-        )
+def _assert_distributed_equals_exact(df, threshold=0.9):
+    """The default call on irregular input runs the distributed tier, and
+    its output equals the exact twin's as a set (the twin repeats a pair
+    once per row pair of a duplicated id)."""
+    got = simsearch.cosine_near_dup_pairs(df, threshold=threshold)
+    assert "MapInArrow" in got._jdf.queryExecution().executedPlan().toString()
+    got = sorted((r.id_a, r.id_b, r.sim) for r in got.collect())
+    ref = sorted({
+        (r.id_a, r.id_b, r.sim)
+        for r in simsearch.cosine_near_dup_exact(df, threshold=threshold).collect()
+    })
+    assert ref, "agreement test must compare non-empty results"
+    assert got == ref
 
 
-def test_near_dup_duplicate_ids_fall_through_to_join_back(spark, monkeypatch):
-    """Duplicate non-null ids make both fetched tiers yield: the default
-    call must equal the pinned join-back tier's output."""
+def test_near_dup_duplicate_ids_run_the_distributed_tier(spark):
+    """A second row for id 0 (a near-dup of id 1) and a NULL id: id 0's
+    two vectors are each scored, equal ids never pair, and the NULL id
+    pairs with nothing."""
     rows = _planted(np.random.default_rng(3))
     rows.append((0, [float(x) for x in rows[1][1]]))  # second row for id 0
+    rows.append((None, [float(x) for x in rows[2][1]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
-    )
-    ref = _near_dups_pinned_join_back(df, monkeypatch, threshold=0.9)
-    assert ref, "agreement test must compare non-empty results"
-    assert got == ref
+    _assert_distributed_equals_exact(df)
 
 
-def test_near_dup_ragged_vector_falls_through_to_join_back(spark, monkeypatch):
-    """One vector of a different length makes both fetched tiers yield (and
-    signs against the planes of its own length): the default call must
-    equal the pinned join-back tier's output."""
+def test_near_dup_ragged_vector_runs_the_distributed_tier(spark):
+    """One vector of a different length (it signs against the planes of its
+    own length) and a NULL vector (it signs NULL): only members of equal
+    length are scored, and the NULL vector scores 0.0, below threshold."""
     rows = _planted(np.random.default_rng(4))
     rows.append((999, [1.0, 2.0, 3.0]))
+    rows.append((998, None))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = sorted(
-        (r.id_a, r.id_b, r.sim)
-        for r in simsearch.cosine_near_dup_pairs(df, threshold=0.9).collect()
-    )
-    ref = _near_dups_pinned_join_back(df, monkeypatch, threshold=0.9)
-    assert ref, "agreement test must compare non-empty results"
-    assert got == ref
+    _assert_distributed_equals_exact(df)
 
 
-def test_near_dup_broadcast_verify_rejects_unfetched_ids(spark, monkeypatch):
-    """The broadcast tier fetches the matrix in one job and builds buckets
-    in another, so an input that re-evaluates differently between jobs (a
-    rand() filter over a nondeterministically ordered shuffle, a growing
-    source) can hand the candidate job ids the fetch never saw. Here the
-    fetch's view of the rows passes through a rand() filter that the
-    candidate job's does not; the verify kernel must raise instead of
-    scoring a pair against a wrong matrix row."""
-    rng = np.random.default_rng(9)
-    base = rng.standard_normal(8)
-    rows = [
-        (i, [float(x) for x in base + 0.001 * rng.standard_normal(8)])
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    fetch = simsearch._fetch_matrix
-    monkeypatch.setattr(
-        simsearch, "_fetch_matrix",
-        lambda v, *a: fetch(v.filter(F.rand(7) < 0.5), *a),
-    )
-    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)  # broadcast tier
-    with pytest.raises(Exception, match="missing from the fetched vectors"):
-        simsearch.cosine_near_dup_pairs(
-            df, threshold=0.9, max_bucket=1000
-        ).collect()
+def test_near_dup_oracle_operating_point_on_distributed_tier(spark, monkeypatch):
+    """The emb_near_dup oracle's operating point (threshold 0.5, 8 bands of
+    2 bits) returns the exact pair set on the distributed tier too; the
+    oracle gate itself only reaches the driver tier at the local scale
+    factors. sf0.001 has no pair at 0.5, so sf0.01 (one pair) is checked
+    as well."""
+    monkeypatch.setattr(simsearch, "LOCAL_MAX_VECTORS", 0)
+    seen = 0
+    for sf in (SF, os.path.join(os.path.dirname(SF), "sf0.01")):
+        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+        got = simsearch.cosine_near_dup_pairs(
+            emb, threshold=0.5, n_planes=16, bands=8
+        )
+        assert "MapInArrow" in got._jdf.queryExecution().executedPlan().toString()
+        got = sorted((r.id_a, r.id_b, r.sim) for r in got.collect())
+        ref = sorted(
+            (r.id_a, r.id_b, r.sim)
+            for r in simsearch.cosine_near_dup_exact(emb, threshold=0.5).collect()
+        )
+        assert got == ref, sf
+        seen += len(ref)
+    assert seen, "oracle-point test must compare non-empty results"
