@@ -28,11 +28,6 @@ def norm_col(col: Column | str) -> Column:
     )
 
 
-def edge_id_col(subj: Column, pred: Column, obj: Column) -> Column:
-    """Stable edge identity (analog of datalog.go:292,316 edge IDs)."""
-    return F.sha2(F.concat_ws("|", subj, pred, obj), 256)
-
-
 def row_lane_cols() -> list[Column]:
     """Two independent xxhash64 lanes over a transcript row's content —
     the per-row half of the constant-space conversation hash. ONE shared

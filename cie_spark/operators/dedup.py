@@ -1,15 +1,17 @@
 """Deduplication operators over document tables.
 
-Five tiers, cheap to expensive, all shuffle-conscious:
+Four operator families, cheap to expensive, all shuffle-conscious:
 
 - exact          hash-groupBy on normalized-text digest (one shuffle)
-- ngram_jaccard  word-shingle Jaccard >= threshold within LSH buckets
-- minhash_lsh    MinHash band signatures -> band buckets -> verify
+- ngram_jaccard  one Python pass per document (hashed word shingles +
+                 MinHash band signatures) -> band buckets -> exact
+                 shingle Jaccard >= threshold in one JVM join
+                 (`jaccard_pairs_exact` is its exact inverted-index twin)
 - simhash        64-bit simhash, hamming-distance candidate pairs by
                  band-rotation blocking
 - embedding      cosine near-dup over an embedding column (see simsearch)
 
-The scale story for every near-dup tier is the same: NEVER all-pairs.
+The scale story for every near-dup operator is the same: NEVER all-pairs.
 Candidates come from ONE banded core (`_band_buckets` + `_pair_expand`):
 rows sharing a (band_idx, band_sig) key are collected into one
 value-sorted member array per bucket and paired in-row, so the only
@@ -26,7 +28,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cie_spark.session import local_frame
+from cie_spark.session import bounded_rows, local_frame
+
+
+def _slots(spark) -> int:
+    """Tasks the cluster runs at once (4 under local[4], where
+    defaultParallelism reads spark.default.parallelism, e.g. 8). A Python
+    stage pays a fixed worker cost per wave, so the signature and band
+    stages are sized to one wave of this many tasks."""
+    sc = spark.sparkContext._jsc.sc()
+    rp = sc.resourceProfileManager().defaultResourceProfile()
+    return max(1, sc.maxNumConcurrentTasks(rp))
 
 
 def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
@@ -35,8 +47,9 @@ def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
     blanket repartition(n) is a full shuffle of all text bytes before a
     map-side projection (r5 verdict "what's wrong" #3 / guide §2.4) — so the
     exchange is inserted ONLY when the scan would otherwise serialize the
-    CPU-heavy signature projection. Pinned by
-    tests/test_plans.py::test_dedup_no_exchange_on_well_partitioned_input."""
+    CPU-heavy signature projection. Callers pass `_slots`: more partitions
+    than slots run the Python stage in two or more waves. Pinned by
+    tests/test_plans.py::test_dedup_no_exchange_before_signature_on_well_partitioned_input."""
     if n_part <= 0 or df.rdd.getNumPartitions() >= n_part:
         return df
     return df.repartition(n_part)
@@ -65,16 +78,24 @@ def _band_buckets(df: DataFrame, member, bands, max_bucket: int | None = None):
     are a documented recall trade). The drop runs BEFORE the collect: a
     window count over the band exchange filters the rows of a hot bucket
     out, so no aggregation buffer ever holds its member list (the window
-    buffer spills; a collect_list buffer cannot split one group).
-    `count(*)`, not size(collect_list), counts the rows, so NULL members
-    occupy their buckets but never pair: collect_list drops them."""
+    buffer spills; a collect_list buffer cannot split one group). The same
+    filter drops single-row buckets, which cannot pair. `count(*)`, not
+    size(collect_list), counts the rows, so NULL members occupy their
+    buckets but never pair: collect_list drops them.
+
+    The band rows are hash-partitioned on the bucket key to `_slots`
+    partitions: a repartition by number, which AQE does not coalesce, so
+    the window/collect stage runs one task per slot instead of being
+    folded into a single task."""
     parts = df.select(
         member.alias("_m"),
         F.posexplode(bands).alias("band_idx", "band_sig"),
-    )
+    ).repartition(_slots(df.sparkSession), "band_idx", "band_sig")
     if max_bucket is not None:
         n = F.count("*").over(Window.partitionBy("band_idx", "band_sig"))
-        parts = parts.withColumn("_n", n).filter(F.col("_n") <= max_bucket)
+        parts = parts.withColumn("_n", n).filter(
+            (F.col("_n") >= 2) & (F.col("_n") <= max_bucket)
+        )
     return parts.groupBy("band_idx", "band_sig").agg(
         F.sort_array(F.collect_list("_m")).alias("_ms")
     )
@@ -176,73 +197,43 @@ def _shingle_flat(word_lists, k: int):
     return xxh64_bytes_array(sh_flat), np.asarray(counts, dtype=np.int64)
 
 
-def _words_to_hs_udf(k: int):
-    """words array -> xxhash64'd distinct shingle array, Arrow-vectorized.
-    BIT-IDENTICAL to transform(_word_shingles(text), xxhash64) — pinned by
-    tests/test_dedup.py::test_shingle_base_udf_matches_expression. The JVM
-    expression chain (sequence/slice/concat_ws over every shingle position)
-    was the dominant term of the minhash signature pass (~2 s of string
-    allocation at sf1.0); here shingles are joined and hashed in one numpy
-    pass (guide §4.2)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def hs(words: pd.Series) -> pd.Series:
-        lists = words.tolist()
-        flat, counts = _shingle_flat(lists, k)
-        signed = flat.view(np.int64)
-        out = []
-        o = 0
-        for c in counts.tolist():
-            out.append(signed[o : o + c])
-            o += c
-        return pd.Series(out)
-
-    return hs
-
-
-def hashed_shingle_base(
-    docs: DataFrame, shingle_words: int = 3, *, widen: bool = True
-) -> DataFrame:
-    """(doc_id, hs) — per-document array of xxhash64'd word shingles, the
-    input of the exact-Jaccard verify. Everything downstream moves 8-byte
-    longs, never shingle strings (guide §2.3 "narrower types / shuffle keys
-    instead of payloads"). `widen=False` skips the under-parallelism check
-    for inputs known to be tiny (the semi-join-reduced verify side)."""
-    n_part = (
-        int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        if widen
-        else 0
-    )
-    return _maybe_repartition(docs, n_part).select(
-        "doc_id", _words_to_hs_udf(shingle_words)(_words_col()).alias("hs")
-    )
-
-
 def _minhash_bands_udf(bands: int, rows: int, shingle_words: int):
-    """Arrow-vectorized minhash banding over the WORDS array: shingle
-    construction, hashing, all bands×rows salted minima and the band
-    signatures in one numpy pass per batch (no hs arrays ever materialize)
-    — BIT-IDENTICAL to the F.xxhash64 expression formulation kept in
-    tests/test_dedup.py, pinned by
-    tests/test_dedup.py::test_minhash_bands_udf_matches_expression.
+    """Arrow-vectorized shingling + minhash banding over the WORDS array, in
+    one numpy pass per batch -> struct<hs, sigs>:
+
+    - `hs`: the document's distinct shingles (first-occurrence order, the
+      array_distinct contract), xxhash64'd — BIT-IDENTICAL to
+      transform(_word_shingles(text), xxhash64), pinned by
+      tests/test_dedup.py::test_shingle_base_udf_matches_expression. The
+      exact-Jaccard verify reads these, so a minhash call shingles each
+      document once.
+    - `sigs`: the `bands` band signatures over bands×rows salted minima —
+      BIT-IDENTICAL to the F.xxhash64 expression formulation kept in
+      tests/test_dedup.py, pinned by
+      tests/test_dedup.py::test_minhash_bands_udf_matches_expression.
 
     Why a UDF (guide §4.2): the expression form evaluates 64 separate
     transform/array_min traversals per document (~166M xxhash64 calls at
-    sf1.0, the dominant term of the signature pass); here the flattened
-    token-hash array is re-mixed per salt with ~10 vectorized uint64 ops and
-    segment-reduced with np.minimum.reduceat. Salt constants are pre-folded
-    driver-side: F.xxhash64(F.lit(h), v) chains hashInt(h, 42) (IntegerType
-    literal -> 4-byte path) into hashLong(v, ·), so the per-salt seed is a
-    constant. array_min compares SIGNED longs — the reduceat runs on the
-    int64 view. Empty hs arrays chain zero mins: sig = hashInt(b, 42)."""
+    sf1.0, the dominant term of the signature pass) over a sequence/slice/
+    concat_ws shingle chain; here the flattened token-hash array is
+    re-mixed per salt with ~10 vectorized uint64 ops and segment-reduced
+    with np.minimum.reduceat. Salt constants are pre-folded driver-side:
+    F.xxhash64(F.lit(h), v) chains hashInt(h, 42) (IntegerType literal ->
+    4-byte path) into hashLong(v, ·), so the per-salt seed is a constant.
+    array_min compares SIGNED longs — the reduceat runs on the int64 view.
+    Empty hs arrays chain zero mins: sig = hashInt(b, 42)."""
     from cie_spark.functions import xxh64_int, xxh64_long_array
 
     n_fn = bands * rows
     salt_seeds = [np.uint64(xxh64_int(h, 42)) for h in range(n_fn)]
     band_seeds = [np.uint64(xxh64_int(b, 42)) for b in range(bands)]
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sigs(words: pd.Series) -> pd.Series:
+    longs = T.ArrayType(T.LongType())
+
+    @F.pandas_udf(
+        T.StructType([T.StructField("hs", longs), T.StructField("sigs", longs)])
+    )
+    def shingle_sigs(words: pd.Series) -> pd.DataFrame:
         flat, lens = _shingle_flat(words.tolist(), shingle_words)
         n = len(lens)
         nonzero = lens > 0
@@ -264,33 +255,52 @@ def _minhash_bands_udf(bands: int, rows: int, shingle_words: int):
                     acc = xxh64_long_array(mins[b * rows + r_i], acc)
                 sig_nz[:, b] = acc
             out[nonzero] = sig_nz
-        return pd.Series([row for row in out.view(np.int64)])
+        hs = np.split(flat.view(np.int64), np.cumsum(lens)[:-1]) if n else []
+        return pd.DataFrame({"hs": hs, "sigs": list(out.view(np.int64))})
 
-    return sigs
+    return shingle_sigs
 
 
 def _minhash_bands(
     docs: DataFrame, *, bands: int = 16, rows: int = 2, shingle_words: int = 3
 ):
-    """(source, band-signature array column) for LSH banding of word-shingle
-    minhashes. The source is repartitioned before the CPU-heavy projection
-    ONLY when the input scan is under-parallel (guide §2.4; r5 verdict
-    wrong #3). Callers explode the UDF column in place: aliased in a
-    projection first, the optimizer's inferred non-empty-array filter is
-    pushed below it and evaluates the UDF twice."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    """(source, struct<hs, sigs> column of `_minhash_bands_udf`). The source
+    is repartitioned before the CPU-heavy projection ONLY when the input
+    scan is under-parallel (guide §2.4; r5 verdict wrong #3). Callers
+    explode the `sigs` field in place: aliased in a projection first, the
+    optimizer's inferred non-empty-array filter is pushed below it and
+    evaluates the UDF twice."""
     return (
-        _maybe_repartition(docs, n_part),
+        _maybe_repartition(docs, _slots(docs.sparkSession)),
         _minhash_bands_udf(bands, rows, shingle_words)(_words_col()),
     )
+
+
+def hashed_shingle_base(
+    docs: DataFrame, shingle_words: int = 3, *, widen: bool = True
+) -> DataFrame:
+    """(doc_id, hs) — per-document array of xxhash64'd word shingles, the
+    `hs` field of the minhash UDF. Everything downstream moves 8-byte
+    longs, never shingle strings (guide §2.3 "narrower types / shuffle keys
+    instead of payloads"). `widen=False` skips the under-parallelism check
+    for inputs known to be tiny."""
+    src, s = _minhash_bands(docs, shingle_words=shingle_words)
+    return (src if widen else docs).select("doc_id", s["hs"].alias("hs"))
 
 
 def minhash_signatures(docs: DataFrame, **kw) -> DataFrame:
     """(doc_id, band_idx, band_sig) — one row per (document, band); `kw` as
     for `_minhash_bands`."""
-    src, sigs = _minhash_bands(docs, **kw)
+    src, s = _minhash_bands(docs, **kw)
     return src.select(
-        "doc_id", F.posexplode(sigs).alias("band_idx", "band_sig")
+        "doc_id", F.posexplode(s["sigs"]).alias("band_idx", "band_sig")
+    )
+
+
+def _candidates(src: DataFrame, sigs, max_bucket: int) -> DataFrame:
+    buckets = _band_buckets(src, F.col("doc_id"), sigs, max_bucket)
+    return _pair_expand(buckets, "doc_a", "doc_b").dropDuplicates(
+        ["doc_a", "doc_b"]
     )
 
 
@@ -303,20 +313,14 @@ def minhash_candidates(
     `max_bucket` are dropped before pair expansion (the LSH analog of
     salting a hot key; pairs living ONLY in oversized buckets are not
     candidates — recall trade, documented). `kw` as for `_minhash_bands`."""
-    src, sigs = _minhash_bands(docs, **kw)
-    buckets = _band_buckets(src, F.col("doc_id"), sigs, max_bucket)
-    return _pair_expand(buckets, "doc_a", "doc_b").dropDuplicates(
-        ["doc_a", "doc_b"]
-    )
+    src, s = _minhash_bands(docs, **kw)
+    return _candidates(src, s["sigs"], max_bucket)
 
 
-# caps for the driver-local verify tier of ngram_jaccard_pairs: candidate
-# pairs and their shingle-hash arrays are pulled to the driver only while
-# bounded; above either cap the distributed join verify runs (the 100-TB
-# shape). 100k pairs × 16 B and 64 MB of hs longs are both well inside the
-# driver budget and the break-even against ~6 verify stages of scheduling.
+# cap on the verified pairs ngram_jaccard_pairs fetches to the driver and
+# returns as a local_frame; over it the result is localCheckpoint-ed. 100k
+# pairs × ~24 B is well inside the driver budget.
 LOCAL_VERIFY_MAX_PAIRS = 100_000
-LOCAL_VERIFY_MAX_BYTES = 64 * 1024 * 1024
 
 
 def ngram_jaccard_pairs(
@@ -327,119 +331,61 @@ def ngram_jaccard_pairs(
     on LSH candidates only (blocking-then-verify). Band rows auto-tighten
     for high thresholds (S-curve: collision p = 1-(1-j^rows)^bands).
     `round_to` controls the jaccard column's rounding (4 = the exact
-    oracle-twin's precision, for subset/equality comparison).
+    oracle-twin's precision, for subset/equality comparison); `kw` takes
+    `max_bucket` as for `minhash_candidates` and the rest as for
+    `_minhash_bands`.
 
-    Round-6 verify diet (r5 verdict Next #3): the exact Jaccard is computed
-    over the already-hashed shingle arrays (`hs`) instead of re-deriving the
-    shingle STRINGS in a second text pass — |hs_a ∩ hs_b| / |hs_a ∪ hs_b|
-    equals the string-shingle Jaccard since xxhash64 is collision-free on
-    the observed shingle sets (a cross-doc collision has probability
-    ~|shingles|²/2^64; equality with the string-based DuckDB oracle twin is
-    re-verified at every driver SF). The join-backs move long arrays, not
-    string arrays (guide §2.3), and the candidate side is small enough that
-    AQE turns both verify joins into broadcast joins."""
+    One Python pass: the minhash UDF shingles every document once and
+    returns its hashed shingles (`hs`) with its band signatures; the
+    (doc_id, hs, sigs) rows are kept for the call. The candidates come
+    from `sigs`, and ONE JVM query joins them to the kept `hs` of both
+    sides: |hs_a ∩ hs_b| / |hs_a ∪ hs_b| equals the string-shingle Jaccard
+    since xxhash64 is collision-free on the observed shingle sets (a
+    cross-doc collision has probability ~|shingles|²/2^64; equality with
+    the string-based DuckDB oracle twin is re-verified at every driver SF).
+    The result is materialized before the rows are released: up to
+    LOCAL_VERIFY_MAX_PAIRS pairs as a local_frame, beyond that by
+    localCheckpoint. A duplicate doc_id pairs every one of its rows."""
     kw.setdefault("rows", 4 if threshold >= 0.7 else 2)
-    spark = docs.sparkSession
+    max_bucket = kw.pop("max_bucket", 64)
     id_type = docs.schema["doc_id"].dataType
-    pair_schema = T.StructType(
-        [T.StructField("doc_a", id_type), T.StructField("doc_b", id_type)]
-    )
     out_schema = T.StructType(
-        pair_schema.fields + [T.StructField("jaccard", T.DoubleType())]
+        [
+            T.StructField("doc_a", id_type),
+            T.StructField("doc_b", id_type),
+            T.StructField("jaccard", T.DoubleType()),
+        ]
     )
-    cands_df = minhash_candidates(docs, shingle_words=shingle_words, **kw)
-    # Bounded candidate fetch: the pair set is tiny at any sane operating
-    # point (high-threshold banding), so pull it to the driver once — it
-    # feeds the verify AND the semi-join reduction, and as a local_frame
-    # LocalRelation it replaces the eager localCheckpoint the double
-    # consumption needed (one fewer materialization job). Over the cap, the
-    # distributed checkpoint path runs unchanged.
-    pairs = cands_df.limit(LOCAL_VERIFY_MAX_PAIRS + 1).collect()
-    local_ok = len(pairs) <= LOCAL_VERIFY_MAX_PAIRS
-    if local_ok and not pairs:
-        return local_frame(spark, [], out_schema)
-    if local_ok:
-        cands = local_frame(spark, pairs, pair_schema)
-    else:
-        # materialize the (large) candidate set once for its two consumers
-        cands = cands_df.localCheckpoint(eager=True)
-    # Verify-side diet (guide §3.2 shape): only documents actually named by
-    # a candidate pair are re-shingled — a broadcast semi-join on the
-    # candidate ids prunes the corpus BEFORE the shingle projection, so the
-    # verify costs one cheap column scan + shingling of ~|candidates| docs
-    # instead of two more full-corpus shingle passes. At 100 TB this is
-    # exactly the "decide with small rows, touch big rows once" discipline.
-    ids = cands.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    ).dropDuplicates(["doc_id"])
-    vdocs = docs.join(F.broadcast(ids), on="doc_id", how="left_semi")
+    src, s = _minhash_bands(docs, shingle_words=shingle_words, **kw)
+    # an eager local checkpoint, not persist(): the verify scans the rows
+    # three times, and AQE runs one job per scan of a cached relation
+    base = src.select("doc_id", s.alias("_s")).localCheckpoint(eager=True)
+    try:
+        def side(x):
+            return base.select(
+                F.col("doc_id").alias(f"doc_{x}"), F.col("_s.hs").alias(f"hs_{x}")
+            )
 
-    if local_ok:
-        # driver-local verify tier: fetch the candidate docs' hs arrays
-        # (≤ 2×|pairs| docs) and compute the exact Jaccard in-process — set
-        # semantics match array_intersect/union, int/int division matches
-        # the JVM Divide, and Spark's own F.round rounds the result. The
-        # byte budget is decided before any hs row reaches the driver: a
-        # whole-frame window sum (no second UDF pass) filters every row out
-        # over budget. Nothing fetched, or a duplicate doc_id (the join fans
-        # a pair out across every hs row per id), takes the join verify.
-        # No NULL filter (the semi-join drops NULL ids, the UDF returns no
-        # NULL array): a filter on `hs` made this fetch ~1 s slower.
-        hs_rows = (
-            hashed_shingle_base(vdocs, shingle_words, widen=False)
-            .withColumn(
-                "_n", F.sum(F.size("hs")).over(Window.partitionBy())
+        j = (
+            _candidates(base, F.col("_s.sigs"), max_bucket)
+            .join(side("a"), on="doc_a")
+            .join(side("b"), on="doc_b")
+        )
+        inter = F.size(F.array_intersect("hs_a", "hs_b"))
+        union = F.size(F.array_union("hs_a", "hs_b"))
+        out = (
+            j.withColumn(
+                "jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
             )
-            .filter(F.col("_n") * 8 <= LOCAL_VERIFY_MAX_BYTES)
-            .select("doc_id", "hs")
-            .collect()
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard"))
         )
-        hs_map = {doc_id: frozenset(hs) for doc_id, hs in hs_rows}
-        if hs_map and len(hs_map) == len(hs_rows):
-            out = []
-            for a, b in pairs:
-                sa = hs_map.get(a)
-                sb = hs_map.get(b)
-                if sa is None or sb is None:
-                    continue  # mirror the join verify's inner-join drop
-                inter = len(sa & sb)
-                union = len(sa) + len(sb) - inter
-                jac = inter / union if union > 0 else 0.0
-                if jac >= threshold:
-                    out.append((a, b, jac))
-            return local_frame(spark, out, out_schema).select(
-                "doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard")
-            )
-    # the repartition is a deliberate materialization BARRIER, not load
-    # balancing: with candidates and vbase both broadcast-joined there is no
-    # exchange between the shingle projection and the jaccard expression, so
-    # ProjectCollapsing inlines the whole per-text shingle chain into the
-    # jaccard filter (evaluated several times per row — measured 7 s for
-    # 2,577 pairs); a tiny keyed exchange (~2 MB of hs arrays) makes the
-    # verify read stored arrays, and AQE reuses the one exchange for both
-    # join sides. (localCheckpoint was tried and rejected: its RDD
-    # materialization path bypasses AQE and cost ~4 s for the same 4,800
-    # rows.)
-    vbase = hashed_shingle_base(
-        vdocs, shingle_words, widen=False
-    ).repartition("doc_id")
-    j = (
-        cands.join(
-            vbase.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")),
-            on="doc_a",
-        )
-        .join(
-            vbase.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")),
-            on="doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.size(F.array_union("hs_a", "hs_b"))
-    return (
-        j.withColumn("jaccard", F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard"))
-    )
+        rows = bounded_rows(out, LOCAL_VERIFY_MAX_PAIRS)
+        if rows is not None:
+            return local_frame(docs.sparkSession, rows, out_schema)
+        return out.localCheckpoint(eager=True)
+    finally:
+        base._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def jaccard_pairs_exact(
@@ -454,7 +400,7 @@ def jaccard_pairs_exact(
     variant (`ngram_jaccard_pairs`) is the sub-linear approximate path.
     This exact form is the correctness baseline and the DuckDB-oracle twin.
     """
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = _slots(docs.sparkSession)
     sh = (
         _maybe_repartition(docs, n_part)
         .select(
@@ -561,7 +507,7 @@ def simhash_pairs(docs: DataFrame, *, max_hamming: int = 3, bands: int = 4) -> D
     shuffle of (band, id, sh) triples, fully lazy. Dedup runs AFTER the
     cheap verify (duplicates across bands carry identical sh values, hence
     identical hamming)."""
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = _slots(docs.sparkSession)
     sh = _maybe_repartition(docs, n_part).select(
         "doc_id", simhash_col(F.col("text")).alias("sh")
     )

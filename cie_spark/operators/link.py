@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 from cie_spark import spec
 from cie_spark import functions as CF
 from cie_spark.operators import canon
-from cie_spark.session import arrow_table, local_frame
+from cie_spark.session import arrow_table, bounded_rows, local_frame
 
 
 # distinct-surface sets (and stored dictionaries) at or below this size take
@@ -166,31 +166,6 @@ LINKMAP_SCHEMA = (
 )
 
 
-def _bounded_rows(df: DataFrame, cap: int) -> list | None:
-    """At most `cap` rows of `df` on the driver, or None past the cap.
-
-    The CollectLimit runs ALL partitions in one job round
-    (initialNumPartitions) instead of the 1, 4, 16… take escalation: the
-    limit only trips on the oversized bail-out, so the common case pays
-    every partition anyway, and each escalation round is a driver-scheduled
-    job of pure serial cost. Scoped HERE, not session-wide: globally it
-    would de-short-circuit every other limit/first/isEmpty probe in the
-    engine (CLI row caps, verify_consistency's limit(1), the small-delta
-    probe), taxing interactive queries with near-full scans."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    saved = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "10000")
-        rows = df.limit(cap + 1).collect()
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-    return rows if len(rows) <= cap else None
-
-
 def link_surfaces_rows(
     spark: SparkSession, surfaces: DataFrame,
 ) -> list[tuple[str, str, str, str]] | None:
@@ -198,7 +173,7 @@ def link_surfaces_rows(
     (bounded by LOCAL_VOCAB_CAP) and link them in-process with
     link_rows_local. None when the vocabulary or the fuzzy work exceeds the
     local budgets — link_map then runs the distributed tier."""
-    rows = _bounded_rows(
+    rows = bounded_rows(
         surfaces.select("surface").dropDuplicates(["surface"]), LOCAL_VOCAB_CAP
     )
     if rows is None:
@@ -262,7 +237,7 @@ def link_map(
     if rows is not None:
         if not rows and stored is not None:
             return stored.join(surfaces, on="surface", how="left_semi"), None
-        old = [] if stored is None else _bounded_rows(stored, LOCAL_VOCAB_CAP)
+        old = [] if stored is None else bounded_rows(stored, LOCAL_VOCAB_CAP)
         if old is not None:
             merged = local_frame(
                 spark, canon.canonicalize_rows_local(old + rows), LINKMAP_SCHEMA

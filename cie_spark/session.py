@@ -50,6 +50,31 @@ def local_frame(
     return spark.createDataFrame(arrow_table(rows, schema), schema=schema)
 
 
+def bounded_rows(df: DataFrame, cap: int) -> list | None:
+    """At most `cap` rows of `df` on the driver, or None past the cap.
+
+    The CollectLimit runs ALL partitions in one job round
+    (initialNumPartitions) instead of the 1, 4, 16… take escalation: the
+    limit only trips on the oversized bail-out, so the common case pays
+    every partition anyway, and each escalation round is a driver-scheduled
+    job of pure serial cost. Scoped HERE, not session-wide: globally it
+    would de-short-circuit every other limit/first/isEmpty probe in the
+    engine (CLI row caps, verify_consistency's limit(1), the small-delta
+    probe), taxing interactive queries with near-full scans."""
+    spark = df.sparkSession
+    key = "spark.sql.limit.initialNumPartitions"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "10000")
+        rows = df.limit(cap + 1).collect()
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    return rows if len(rows) <= cap else None
+
+
 def get_spark(
     app: str = "cie_spark",
     master: str | None = None,
@@ -87,9 +112,9 @@ def get_spark(
         # NB: spark.sql.limit.initialNumPartitions is deliberately NOT set
         # here any more — session-wide it de-short-circuits every
         # limit/first/isEmpty probe (CLI row caps, consistency checks, the
-        # local-tier size probes). The one caller that wants all-partitions-
-        # in-one-round semantics (the vocabulary-bounded surface collect)
-        # scopes it locally: link.py::_bounded_rows.
+        # local-tier size probes). The bounded driver fetches that want
+        # all-partitions-in-one-round semantics (link's surface collect,
+        # the minhash verify's result) scope it locally: bounded_rows.
         # TIMESTAMP_MICROS, not the INT96 default: INT96 parquet columns
         # carry no footer min/max statistics (pyarrow: has_min_max=False),
         # which silently disabled the manifest ts-bounds harvesting that

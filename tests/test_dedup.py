@@ -303,9 +303,9 @@ def test_jaccard_duplicate_doc_ids_match_join_verify(spark, monkeypatch):
 def test_jaccard_local_verify_budget_is_decided_before_the_fetch(
     spark, monkeypatch
 ):
-    """Over LOCAL_VERIFY_MAX_BYTES the verify takes the join path, and the
-    budget is decided before any hs array reaches the driver: no collect
-    returns an `hs` row."""
+    """The verify runs in the JVM over the kept shingle hashes: at default
+    settings the only fetch is of verified pairs (bounded by
+    LOCAL_VERIFY_MAX_PAIRS), and no collect ever returns an `hs` row."""
     base = "the quick brown fox jumps over the lazy dog today"
     rows = [
         (1, base),
@@ -314,13 +314,6 @@ def test_jaccard_local_verify_budget_is_decided_before_the_fetch(
         (4, "completely different text with no overlap at all here"),
     ]
     d = _docs(spark, rows)
-    with monkeypatch.context() as m:
-        m.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
-        want = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
-        )
-
     fetched = []
     frame_cls = type(d)  # the concrete (classic) DataFrame class
     collect = frame_cls.collect
@@ -331,11 +324,113 @@ def test_jaccard_local_verify_budget_is_decided_before_the_fetch(
         return out
 
     monkeypatch.setattr(frame_cls, "collect", spy)
-    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_BYTES", 8)
-    got = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
-    )
-    assert want, "the test must compare non-empty results"
-    assert got == want
+    got = dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+    assert got, "the test must fetch non-empty results"
     assert not fetched
+
+
+def _python_udf_rows(spark, since: set) -> list[int]:
+    """Rows out of each ArrowEvalPython node that ran in the SQL executions
+    not in `since`, from the SQL status store. A cache scan shows its
+    cached plan in every query that reads it, but the node's metrics count
+    only in the query that built the cache, so nodes are told apart by
+    their accumulator and unrun ones (0 rows) are left out."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    rows = {}
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid in since:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        accs = set()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if node.name() == "ArrowEvalPython":
+                ms = node.metrics()
+                accs |= {
+                    m.accumulatorId()
+                    for m in (ms.apply(j) for j in range(ms.size()))
+                    if m.name() == "number of output rows"
+                }
+        for acc in accs:
+            if values.contains(acc):
+                rows[acc] = rows.get(acc, 0) + int(values.apply(acc))
+    return [n for n in rows.values() if n]
+
+
+def _execution_ids(spark) -> set:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def _jaccard_corpus(spark):
+    base = "the quick brown fox jumps over the lazy dog today"
+    rows = [(i, f"{base} w{i % 5} tail {i % 3}") for i in range(40)]
+    rows += [(100 + i, f"other {i} text about nothing much") for i in range(20)]
+    return _docs(spark, rows)
+
+
+def test_jaccard_shingles_each_document_once(spark, monkeypatch):
+    """One ngram_jaccard_pairs call runs the shingle UDF once, over every
+    document, on both tiers: the verify reads the hashed shingles the
+    signature pass returned, it does not shingle the candidates again."""
+    d = _jaccard_corpus(spark)
+    n = d.count()
+    for cap in (dedup.LOCAL_VERIFY_MAX_PAIRS, 0):
+        monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", cap)
+        since = _execution_ids(spark)
+        assert dedup.ngram_jaccard_pairs(d, threshold=0.5).collect()
+        assert _python_udf_rows(spark, since) == [n], cap
+
+
+def test_jaccard_releases_its_cache(spark, monkeypatch):
+    """The (doc_id, hs, sigs) rows a call keeps are released when it
+    returns: no RDD stays persisted but the result's own materialization —
+    none for the driver-held result, its local checkpoint over
+    LOCAL_VERIFY_MAX_PAIRS."""
+    jsc = spark.sparkContext._jsc
+    d = _jaccard_corpus(spark)
+    d.count()
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    out = dedup.ngram_jaccard_pairs(d, threshold=0.5)
+    assert persisted() == before
+    assert out.count()
+
+    monkeypatch.setattr(dedup, "LOCAL_VERIFY_MAX_PAIRS", 0)
+    out = dedup.ngram_jaccard_pairs(d, threshold=0.5)
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert persisted() - before == {plan.rdd().id()}
+    assert out.count()
+
+
+def test_signature_stage_runs_one_wave(spark, tmp_path):
+    """A one-partition input (a one-file parquet scan) is widened to the
+    task-slot count (4 under local[4]), not to spark.default.parallelism (8
+    in these tests), so the Python signature stage runs in one wave."""
+    sc = spark.sparkContext
+    slots = dedup._slots(spark)
+    assert slots == 4 < sc.defaultParallelism
+    _jaccard_corpus(spark).coalesce(1).write.parquet(str(tmp_path / "docs"))
+    d = spark.read.parquet(str(tmp_path / "docs"))
+    assert d.rdd.getNumPartitions() == 1
+    sc.setJobGroup("dedup_one_wave", "signature stage of a one-partition input")
+    try:
+        assert dedup.minhash_signatures(d).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(st).numTasks
+        for job in tracker.getJobIdsForGroup("dedup_one_wave")
+        for st in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= slots

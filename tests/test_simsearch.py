@@ -47,11 +47,24 @@ def test_lsh_results_subset_of_bruteforce_space(spark, emb):
     assert ids[0] == exact[0]
 
 
-def test_near_dup_pairs_threshold(spark, emb):
-    pairs = simsearch.cosine_near_dup_pairs(emb, threshold=0.5).collect()
+def test_near_dup_pairs_threshold(spark):
+    """Every pair clears the threshold, is ordered and carries its exact
+    cosine. Planted pairs (cosine ~0.96) make the result non-empty: the
+    sf0.001 embeddings have no pair at 0.5."""
+    rng = np.random.default_rng(5)
+    M = rng.standard_normal((100, 64))
+    M[1::2] = M[0::2] + 0.3 * rng.standard_normal((50, 64))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(M)],
+        "vec_id long, embedding array<float>",
+    )
+    pairs = simsearch.cosine_near_dup_pairs(df, threshold=0.5).collect()
+    assert pairs
+    U = M / np.linalg.norm(M, axis=1, keepdims=True)
     for r in pairs:
         assert r.sim >= 0.5
         assert r.id_a < r.id_b
+        assert abs(float(U[r.id_a] @ U[r.id_b]) - r.sim) < 1e-4
 
 
 def test_ivf_topk(spark, emb):
