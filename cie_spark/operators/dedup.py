@@ -32,13 +32,20 @@ from cie_spark.session import bounded_rows, local_frame
 
 
 def _slots(spark) -> int:
-    """Tasks the cluster runs at once (4 under local[4], where
-    defaultParallelism reads spark.default.parallelism, e.g. 8). A Python
-    stage pays a fixed worker cost per wave, so the signature and band
-    stages are sized to one wave of this many tasks."""
+    """One wave of tasks: the task slots of the registered executors (4
+    under local[4], where defaultParallelism reads spark.default.parallelism,
+    e.g. 8), capped by spark.sql.shuffle.partitions, the submitter's
+    sizing. A Python stage pays a fixed worker cost per wave, so the
+    signature and band stages are sized to one wave. Under dynamic
+    allocation, or before any executor has registered, the registered
+    slots do not describe the cluster: the conf alone sizes them."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if spark.conf.get("spark.dynamicAllocation.enabled", "false") == "true":
+        return n
     sc = spark.sparkContext._jsc.sc()
     rp = sc.resourceProfileManager().defaultResourceProfile()
-    return max(1, sc.maxNumConcurrentTasks(rp))
+    slots = sc.maxNumConcurrentTasks(rp)
+    return min(n, slots) if slots > 0 else n
 
 
 def _maybe_repartition(df: DataFrame, n_part: int) -> DataFrame:
@@ -86,7 +93,8 @@ def _band_buckets(df: DataFrame, member, bands, max_bucket: int | None = None):
     The band rows are hash-partitioned on the bucket key to `_slots`
     partitions: a repartition by number, which AQE does not coalesce, so
     the window/collect stage runs one task per slot instead of being
-    folded into a single task."""
+    folded into a single task. The count is never above the shuffle
+    partitions AQE would start from."""
     parts = df.select(
         member.alias("_m"),
         F.posexplode(bands).alias("band_idx", "band_sig"),
@@ -205,8 +213,8 @@ def _minhash_bands_udf(bands: int, rows: int, shingle_words: int):
       array_distinct contract), xxhash64'd — BIT-IDENTICAL to
       transform(_word_shingles(text), xxhash64), pinned by
       tests/test_dedup.py::test_shingle_base_udf_matches_expression. The
-      exact-Jaccard verify reads these, so a minhash call shingles each
-      document once.
+      exact-Jaccard verify reads these 8-byte longs, never shingle strings,
+      so a minhash call shingles each document once.
     - `sigs`: the `bands` band signatures over bands×rows salted minima —
       BIT-IDENTICAL to the F.xxhash64 expression formulation kept in
       tests/test_dedup.py, pinned by
@@ -276,18 +284,6 @@ def _minhash_bands(
     )
 
 
-def hashed_shingle_base(
-    docs: DataFrame, shingle_words: int = 3, *, widen: bool = True
-) -> DataFrame:
-    """(doc_id, hs) — per-document array of xxhash64'd word shingles, the
-    `hs` field of the minhash UDF. Everything downstream moves 8-byte
-    longs, never shingle strings (guide §2.3 "narrower types / shuffle keys
-    instead of payloads"). `widen=False` skips the under-parallelism check
-    for inputs known to be tiny."""
-    src, s = _minhash_bands(docs, shingle_words=shingle_words)
-    return (src if widen else docs).select("doc_id", s["hs"].alias("hs"))
-
-
 def minhash_signatures(docs: DataFrame, **kw) -> DataFrame:
     """(doc_id, band_idx, band_sig) — one row per (document, band); `kw` as
     for `_minhash_bands`."""
@@ -317,9 +313,9 @@ def minhash_candidates(
     return _candidates(src, s["sigs"], max_bucket)
 
 
-# cap on the verified pairs ngram_jaccard_pairs fetches to the driver and
-# returns as a local_frame; over it the result is localCheckpoint-ed. 100k
-# pairs × ~24 B is well inside the driver budget.
+# cap on the verified pairs ngram_jaccard_pairs returns as a driver-held
+# local_frame; over it the result stays a local checkpoint. 100k pairs ×
+# ~24 B is well inside the driver budget.
 LOCAL_VERIFY_MAX_PAIRS = 100_000
 
 
@@ -343,9 +339,13 @@ def ngram_jaccard_pairs(
     since xxhash64 is collision-free on the observed shingle sets (a
     cross-doc collision has probability ~|shingles|²/2^64; equality with
     the string-based DuckDB oracle twin is re-verified at every driver SF).
-    The result is materialized before the rows are released: up to
-    LOCAL_VERIFY_MAX_PAIRS pairs as a local_frame, beyond that by
-    localCheckpoint. A duplicate doc_id pairs every one of its rows."""
+    The kept rows are the signature pass's whole output, ~8 bytes per
+    distinct shingle of every document, in executor storage for the call
+    (memory, then disk); a local checkpoint is not recomputed when an
+    executor is lost. The result is localCheckpoint-ed once, before the
+    kept rows are released; up to LOCAL_VERIFY_MAX_PAIRS pairs are then
+    fetched and returned as a local_frame instead. A duplicate doc_id
+    pairs every one of its rows."""
     kw.setdefault("rows", 4 if threshold >= 0.7 else 2)
     max_bucket = kw.pop("max_bucket", 64)
     id_type = docs.schema["doc_id"].dataType
@@ -379,13 +379,19 @@ def ngram_jaccard_pairs(
             )
             .filter(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", F.round("jaccard", round_to).alias("jaccard"))
+            .localCheckpoint(eager=True)
         )
-        rows = bounded_rows(out, LOCAL_VERIFY_MAX_PAIRS)
-        if rows is not None:
-            return local_frame(docs.sparkSession, rows, out_schema)
-        return out.localCheckpoint(eager=True)
     finally:
-        base._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        _release(base)
+    rows = bounded_rows(out, LOCAL_VERIFY_MAX_PAIRS)
+    if rows is None:
+        return out
+    _release(out)
+    return local_frame(docs.sparkSession, rows, out_schema)
+
+
+def _release(checkpointed: DataFrame) -> None:
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def jaccard_pairs_exact(

@@ -280,19 +280,34 @@ def _verify_bucket(ids, M, threshold: float, lens=None):
     against anything, and with `lens` given (rows zero-padded by _matrix)
     a pair of nonzero rows of different lengths has none and drops out.
     The only divergence from the JVM cosine is float summation order —
-    invisible at 4 rounded decimals away from ties. The kernel works on
-    the bucket's m×m Gram and cosine matrices, so its memory is O(m²)
-    whatever the dimension (gathering both rows of every pair was
-    O(pairs × dim): 1.5 GB for a 512-member bucket at dim 768)."""
+    invisible at 4 rounded decimals away from ties.
+
+    The bucket's m×m cosine matrix (one Gram product, O(m²) memory
+    whatever the dimension) only preselects pairs, with a 1e-9 slack for
+    its summation order. Each preselected pair's sim is then its own
+    row-wise dot product, gathered in chunks of ~1M floats, so a pair met
+    in buckets of different sizes carries one value whatever BLAS does
+    (gathering both rows of every pair at once was O(pairs × dim): 1.5 GB
+    for a 512-member bucket at dim 768)."""
     norms = np.sqrt(np.einsum("ij,ij->i", M, M))
     nz = norms > 0
-    ok = nz[:, None] & nz[None, :]
-    sim = np.where(ok, (M @ M.T) / np.where(ok, np.outer(norms, norms), 1.0), 0.0)
-    keep = np.triu(sim >= threshold, 1) & (ids[:, None] < ids[None, :])
+    safe = np.where(nz, norms, 1.0)
+    pre = np.triu((M @ M.T) / np.outer(safe, safe) >= threshold - 1e-9, 1)
+    pre &= ids[:, None] < ids[None, :]
     if lens is not None:
-        keep &= ~ok | (lens[:, None] == lens[None, :])
-    iu, ju = np.nonzero(keep)
-    return ids[iu], ids[ju], sim[iu, ju]
+        pre &= ~(nz[:, None] & nz[None, :]) | (lens[:, None] == lens[None, :])
+    iu, ju = np.nonzero(pre)
+    sim = np.empty(len(iu))
+    step = max(1, (1 << 20) // max(1, M.shape[1]))
+    for s in range(0, len(iu), step):
+        a, b = iu[s : s + step], ju[s : s + step]
+        ok = nz[a] & nz[b]
+        dots = np.einsum("ij,ij->i", M[a], M[b])
+        sim[s : s + step] = np.where(
+            ok, dots / np.where(ok, norms[a] * norms[b], 1.0), 0.0
+        )
+    keep = sim >= threshold
+    return ids[iu[keep]], ids[ju[keep]], sim[keep]
 
 
 def _local_buckets(sig: np.ndarray, rank: np.ndarray, bands: int, bits: int,

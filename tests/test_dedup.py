@@ -12,8 +12,8 @@ def _docs(spark, rows):
 
 
 def _expr_hashed_shingle_base(docs, shingle_words=3):
-    """All-JVM expression twin of dedup.hashed_shingle_base: the reference
-    the words->shingle->hash UDF is pinned against."""
+    """All-JVM expression twin of the minhash UDF's `hs` field: the
+    reference the words->shingle->hash pass is pinned against."""
     return docs.select(
         "doc_id",
         F.transform(
@@ -230,9 +230,10 @@ def test_shingle_base_udf_matches_expression(spark):
         (6, "Dup dup DUP dup dup dup"),  # repeated shingles -> distinct
     ] + [(10 + i, f"words {i} more shared tail {i % 5} end") for i in range(40)]
     d = _docs(spark, rows)
+    src, s = dedup._minhash_bands(d)
     got = {
         r.doc_id: list(r.hs)
-        for r in dedup.hashed_shingle_base(d).collect()
+        for r in src.select("doc_id", s["hs"].alias("hs")).collect()
     }
     ref = {
         r.doc_id: list(r.hs)
@@ -434,3 +435,16 @@ def test_signature_stage_runs_one_wave(spark, tmp_path):
         for st in tracker.getJobInfo(job).stageIds
     ]
     assert tasks and max(tasks) <= slots
+
+
+def test_slots_never_exceed_shuffle_partitions(spark):
+    """The one-wave sizing caps at spark.sql.shuffle.partitions: a
+    submitter that sets fewer partitions than there are slots is obeyed."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    assert dedup._slots(spark) == 4
+    try:
+        spark.conf.set(key, "2")
+        assert dedup._slots(spark) == 2
+    finally:
+        spark.conf.set(key, saved)

@@ -67,6 +67,27 @@ def test_near_dup_pairs_threshold(spark):
         assert abs(float(U[r.id_a] @ U[r.id_b]) - r.sim) < 1e-4
 
 
+def test_verify_bucket_sim_does_not_depend_on_bucket_size():
+    """A pair met in buckets of different sizes carries one sim, bit for
+    bit, so the distributed tier's dedup on (id_a, id_b, sim) keeps it
+    once: the kernel's Gram matrix only preselects, and each kept pair's
+    sim is its own row-wise dot product."""
+    rng = np.random.default_rng(11)
+    M = rng.standard_normal((97, 64))
+    M[1] = M[0] + 0.05 * rng.standard_normal(64)
+    ids = np.arange(97)
+    ref = None
+    for m in (2, 3, 17, 64, 97):
+        a, b, sim = simsearch._verify_bucket(ids[:m], M[:m], 0.9)
+        got = {(int(x), int(y)): s for x, y, s in zip(a, b, sim)}
+        assert (0, 1) in got, m
+        if ref is None:
+            ref = got[(0, 1)]
+            exact = M[0] @ M[1] / np.linalg.norm(M[0]) / np.linalg.norm(M[1])
+            assert abs(ref - exact) < 1e-12
+        assert got[(0, 1)] == ref, m
+
+
 def test_ivf_topk(spark, emb):
     """IVF probe path: exact sims on the probed cells only; the query's own
     vector shares its cell by construction, so it always ranks first; probing
