@@ -268,17 +268,17 @@ def mock_embedding_matrix(texts: pd.Series, dim: int = EMBED_DIM) -> np.ndarray:
     return out
 
 
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def mock_embedding(texts: pd.Series) -> pd.Series:
-    """Deterministic 64-dim hash-based embedding, L2-normalized.
+def __getattr__(name: str):
+    """`mock_embedding`: the mock provider's embedding UDF (deterministic
+    64-dim hash-bag vectors, L2-normalized; embedding.go:46-89 analog),
+    `embedding_provider.embedding_udf(MockEmbeddingProvider())` under its
+    own name. Resolved on first use: embedding_provider imports this
+    module, so importing it here at load time would be circular."""
+    if name == "mock_embedding":
+        from cie_spark.functions.embedding_provider import mock_embedding
 
-    Stand-in for the reference's mock embedding provider (deterministic
-    hash-based vectors, embedding.go:46-89, L2-normalized per
-    docs/architecture.md:350-363). Arrow-batched + numpy-vectorized; see
-    mock_embedding_matrix. Swap providers via
-    cie_spark.functions.embedding_provider.embedding_udf.
-    """
-    return pd.Series(list(mock_embedding_matrix(texts)))
+        return mock_embedding
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def hash_str(s: str) -> int:

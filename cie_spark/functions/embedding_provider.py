@@ -85,12 +85,17 @@ class RetryingProvider:
                 attempt += 1
 
 
-def embedding_udf(provider: EmbeddingProvider):
-    """Arrow-batched pandas UDF backed by `provider` (column -> array<float>)."""
+def embedding_udf(provider: EmbeddingProvider, name: str = "_embed"):
+    """Arrow-batched pandas UDF backed by `provider` (column -> array<float>),
+    shown as `name` in query plans."""
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
         mat = provider.embed_batch(texts)
         return pd.Series(list(np.asarray(mat, dtype=np.float32)))
 
-    return _embed
+    _embed.__name__ = name
+    return F.pandas_udf(_embed, T.ArrayType(T.FloatType()))
+
+
+# functions.mock_embedding (see there)
+mock_embedding = embedding_udf(MockEmbeddingProvider(), "mock_embedding")

@@ -108,9 +108,7 @@ class KGPipeline:
         self.entities = SnapshotTable(
             spark, f"{warehouse}/entities", bucket_key="entity_id", n_buckets=16
         )
-        self.lineage = SnapshotTable(
-            spark, f"{warehouse}/lineage", write_partitions=1
-        )
+        self.lineage = SnapshotTable(spark, f"{warehouse}/lineage")
         self.processed = SnapshotTable(
             spark,
             f"{warehouse}/processed_convs",
@@ -121,9 +119,7 @@ class KGPipeline:
         # analog): linking work is per-DISTINCT-surface, so an incremental
         # run reuses stored links and runs the (codegen-heavy) fuzzy tier
         # only for never-before-seen surfaces — usually none
-        self.links = SnapshotTable(
-            spark, f"{warehouse}/surface_links", write_partitions=1
-        )
+        self.links = SnapshotTable(spark, f"{warehouse}/surface_links")
 
     # -- maintenance ----------------------------------------------------
 
@@ -563,7 +559,7 @@ class KGPipeline:
         # exchange: mentions hash-partitioned on the triples table's
         # `_bucket`, as many ways as the triples write has tasks, so every
         # conv_id aggregation below and the bucketed writes keep this
-        # partitioning instead of shuffling again (see _write_bucketed).
+        # partitioning instead of shuffling again (see SnapshotTable._write).
         started = _now()
         if small_ids is not None:
             touched = self.triples.buckets_for_keys(small_ids)

@@ -31,6 +31,17 @@ snapshot. At deployment scale ``n_buckets`` is sized so a bucket fits a
 single executor's write throughput (e.g. 4096 buckets for a 100-TB table
 -> ~25 GB/bucket).
 
+One rewrite primitive
+---------------------
+Every mutation commits through ``_rewrite``: drop some buckets, write
+f(their current rows) as one new fileset, carry every other bucket by
+reference. MERGE and keyed DELETE replace the affected buckets, compaction
+the fat ones, predicate DELETE / rebucket / overwrite every bucket, and an
+append replaces none, so its new paths join the carried ones. An unbucketed
+table is one bucket, 0, whose paths are its filesets (``_units``): the
+bucketed/unbucketed choice only picks the writer and whether the manifest
+gets a ``buckets`` map.
+
 Analog of the reference's storage layer: idempotent `:put` upserts
 (datalog.go:177-199), cascading per-file deletes (embedded.go:336-391),
 checkpoint = committed snapshot (checkpoint.go:29-177). Where the reference
@@ -79,7 +90,6 @@ class SnapshotTable:
         *,
         bucket_key: str | None = None,
         n_buckets: int = 128,
-        write_partitions: int | None = None,
         stats_cols: list[str] | None = None,
     ):
         self.spark = spark
@@ -94,10 +104,6 @@ class SnapshotTable:
         # cannot intersect, closing the "ts-range query scans every live
         # file" gap without waiting for row-group-level footer skipping.
         self.stats_cols = stats_cols or []
-        # unbucketed writes: None -> spread across shuffle-partition count
-        # (throughput tables); small metadata tables (lineage) set 1 so a
-        # 6-row append is one task + one file, not 32 empty ones
-        self.write_partitions = write_partitions
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
         # the COMMITTED spec wins over constructor args (Iceberg: the
@@ -115,7 +121,7 @@ class SnapshotTable:
         of every mutation, so a rebucket() committed by another handle is
         picked up no later than the CAS retry. Constructor args still
         apply to tables with no committed spec (creation, and the
-        in-memory spec adoption of an empty-table rebucket)."""
+        in-memory spec adoption of an unwritten-table rebucket)."""
         spec = (snap or {}).get("spec")
         if spec:
             self.bucket_key = spec["bucket_key"]
@@ -407,6 +413,14 @@ class SnapshotTable:
     def _bucket_map(snap: dict) -> dict[int, list[str]]:
         return {int(k): v for k, v in snap.get("buckets", {}).items()}
 
+    @staticmethod
+    def _units(snap: dict | None) -> dict[int, list[str]]:
+        """The snapshot's data paths by bucket. An unbucketed manifest has
+        no `buckets` map: its filesets are the paths of one bucket, 0."""
+        if snap is not None and "buckets" in snap:
+            return SnapshotTable._bucket_map(snap)
+        return {0: list(snap["filesets"])} if snap and snap["filesets"] else {}
+
     # -- schema evolution ---------------------------------------------------
     #
     # Additive evolution (Iceberg add-column analog): a write whose frame
@@ -420,7 +434,13 @@ class SnapshotTable:
         self, prev: dict | None, df: DataFrame
     ) -> tuple[T.StructType, bool]:
         """(table schema after this write, did it widen?). A `_bucket`
-        column is write routing, never part of the table schema."""
+        column is write routing, never part of the table schema.
+
+        Columns are compared by type, not by nullability: the nullable flag
+        recorded at the table's first write stays, and a frame that differs
+        only in nullability is accepted. So the manifests mark
+        triples.subj, triples.conv_id and processed_convs.conv_id nullable,
+        as Spark derived them for the first frame written."""
         data = T.StructType([f for f in df.schema.fields if f.name != "_bucket"])
         if prev is None:
             return data, False
@@ -454,7 +474,7 @@ class SnapshotTable:
     def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto `schema`: missing columns become typed NULLs,
         column order follows the table schema. A `_bucket` column the frame
-        carries is kept (last): it routes the write, see _write_bucketed."""
+        carries is kept (last): it routes the write, see _write."""
         have = set(df.columns)
         cols = [
             F.col(f.name) if f.name in have
@@ -463,20 +483,12 @@ class SnapshotTable:
         ]
         return df.select(*cols, *(["_bucket"] if "_bucket" in have else []))
 
-    @staticmethod
-    def _referenced_filesets(bmap: dict[int, list[str]], *extra: str) -> list[str]:
-        """Every fileset the bucket map points into (carried + new) — merge
-        commits list ALL of them so 'filesets' always means live references."""
-        refs = {p.split("/", 1)[0] for ps in bmap.values() for p in ps}
-        refs.update(extra)
-        return sorted(refs)
-
     def _effective_partition_by(
         self, snap: dict | None, requested: list[str] | None
     ) -> list[str] | None:
-        """A bucketed table's sub-bucket partition layout is fixed by its
-        first write: mixing partition-dir and plain files in one table would
-        break partition discovery on multi-path reads."""
+        """A table's partition layout is fixed by its first write: mixing
+        partition-dir and plain files in one table would break partition
+        discovery on multi-path reads."""
         if snap is not None and "partition_by" in snap:
             return snap["partition_by"] or None
         return requested
@@ -486,8 +498,8 @@ class SnapshotTable:
     def _bucket_col(self):
         """Each row's bucket as a `_bucket` column, tagged in its metadata
         with the spec it was computed under. A caller that adds it before
-        its own conv_id-keyed work hands _write_bucketed a pre-bucketed
-        frame (see there)."""
+        its own conv_id-keyed work hands _write a pre-bucketed frame (see
+        there)."""
         return (
             F.pmod(F.xxhash64(F.col(self.bucket_key)), F.lit(self.n_buckets))
             .cast("int")
@@ -580,39 +592,23 @@ class SnapshotTable:
             return None
         return df.filter(F.col(self.bucket_key).isin(non_null))
 
-    def _write_fileset(self, df: DataFrame, partition_by: list[str] | None) -> str:
-        fs = "fs-" + uuid.uuid4().hex[:12]
-        path = os.path.join(self.root, "data", fs)
-        if self.write_partitions:
-            # small tables (lineage, surface_links): merge the input's
-            # partitions in place — one task, one file, and no shuffle
-            df = df.coalesce(self.write_partitions)
-        else:
-            # spread the write across the cluster: AQE may coalesce the
-            # final stage to a handful of partitions (right for shuffles,
-            # wrong for the I/O-bound encode+write step, which then runs
-            # near-serially and caps scaling). Round-robin repartition =
-            # every core writes.
-            df = df.repartition(
-                int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            )
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-        return fs
-
-    def _write_bucketed(
+    def _write(
         self, df: DataFrame, partition_by: list[str] | None,
         n_touched: int | None = None,
-    ) -> tuple[str, dict[int, list[str]]]:
-        """Write a fileset partitioned by _bucket (then partition_by).
+    ) -> tuple[str | None, dict[int, list[str]]]:
+        """Write df as one new fileset: (its name, its paths by bucket).
 
-        Shuffle keyed on _bucket alone: every bucket lands in exactly one
-        task, so the fileset holds exactly one file per (bucket, partition)
-        — no small-file explosion. Parallelism = write_tasks(n_touched):
-        the shuffle partitions for a full write, a few per bucket for a
-        rewrite of `n_touched` buckets.
+        Unbucketed: one task and one file (coalesce(1): the unbucketed
+        tables are small metadata tables — lineage, surface_links — whose
+        appends would otherwise leave one near-empty file per partition),
+        and the fileset is bucket 0's new path.
+
+        Bucketed: shuffle keyed on _bucket alone, so every bucket lands in
+        exactly one task and the fileset holds exactly one file per
+        (bucket, partition) — no small-file explosion. Parallelism =
+        write_tasks(n_touched): the shuffle partitions for a full write, a
+        few per bucket for a rewrite of `n_touched` buckets. A write of zero
+        rows produces no bucket: its dir is removed and (None, {}) returned.
 
         Pre-bucketed input: a frame that already carries `_bucket` from
         this table's `_bucket_col()` under its current spec keeps it (see
@@ -625,31 +621,48 @@ class SnapshotTable:
         """
         fs = "fs-" + uuid.uuid4().hex[:12]
         path = os.path.join(self.root, "data", fs)
-        dfb = self._with_bucket(df).repartition(
-            self.write_tasks(n_touched), "_bucket"
-        )
-        w = dfb.write.mode("overwrite").partitionBy("_bucket", *(partition_by or []))
+        part = list(partition_by or [])
+        if self.bucket_key is None:
+            df = df.coalesce(1)
+        else:
+            df = self._with_bucket(df).repartition(
+                self.write_tasks(n_touched), "_bucket"
+            )
+            part.insert(0, "_bucket")
+        w = df.write.mode("overwrite")
+        if part:
+            w = w.partitionBy(*part)
         w.parquet(path)
-        buckets: dict[int, list[str]] = {}
-        if os.path.isdir(path):
-            for d in os.listdir(path):
-                if d.startswith("_bucket="):
-                    buckets[int(d.split("=", 1)[1])] = [f"{fs}/{d}"]
+        if self.bucket_key is None:
+            return fs, {0: [fs]}
+        buckets = {
+            int(d.split("=", 1)[1]): [f"{fs}/{d}"]
+            for d in os.listdir(path) if d.startswith("_bucket=")
+        }
+        if not buckets:
+            shutil.rmtree(path, ignore_errors=True)
+            return None, {}
         return fs, buckets
 
     def _read_paths(
-        self, rel_paths: list[str], merge_schema: bool = False
+        self, snap: dict, rel_paths: list[str],
+        schema: T.StructType | None = None, widened: bool = False,
     ) -> DataFrame | None:
-        """Read a set of data paths. Bucket-partition dirs are grouped by
-        fileset and read with basePath = the fileset root so partition
-        discovery stays consistent across mixed path sets; the internal
-        _bucket partition column is dropped (it is derivable from
-        bucket_key). One read per fileset — bounded by commit count, not by
-        data size; the unions are plan-level only. `merge_schema` is set
-        only on tables whose schema has evolved (footer merging costs; the
-        common fixed-schema table skips it)."""
+        """Read a set of `snap`'s data paths, conformed to `schema` (default:
+        the snapshot's table schema), so a bucket-pruned read touching only
+        pre-evolution files still surfaces the new columns (NULL).
+
+        Bucket-partition dirs are grouped by fileset and read with basePath
+        = the fileset root so partition discovery stays consistent across
+        mixed path sets; the internal _bucket partition column is dropped
+        (it is derivable from bucket_key). One read per fileset — bounded by
+        commit count, not by data size; the unions are plan-level only.
+        Footers are merged only on tables whose schema has evolved (the
+        snapshot's `schema_merge`, or a write that `widened` it): merging
+        costs, and the common fixed-schema table skips it."""
         if not rel_paths:
             return None
+        merge_schema = bool(snap.get("schema_merge")) or widened
         ms = "true" if merge_schema else "false"
         plain = [p for p in rel_paths if "/_bucket=" not in p]
         by_fs: dict[str, list[str]] = {}
@@ -673,7 +686,9 @@ class SnapshotTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=merge_schema)
-        return out
+        if schema is None and "table_schema" in snap:
+            schema = T.StructType.fromJson(snap["table_schema"])
+        return out if schema is None else self._conform(out, schema)
 
     def read(
         self, snapshot_id: str | None = None, buckets: list[int] | None = None,
@@ -694,26 +709,14 @@ class SnapshotTable:
                 snap = None
         if snap is None:
             return None
-        ms = bool(snap.get("schema_merge"))
-        stats = snap.get("stats", {})
-        if self.bucket_key is not None and "buckets" in snap:
-            bmap = self._bucket_map(snap)
-            keys = sorted(bmap) if buckets is None else sorted(set(buckets) & set(bmap))
-            paths = self._prune_paths(
-                [p for b in keys for p in bmap[b]], stats, prune
-            )
-            out = self._read_paths(paths, ms)
-        elif not snap["filesets"]:
-            return None
-        else:
-            out = self._read_paths(
-                self._prune_paths(list(snap["filesets"]), stats, prune), ms
-            )
-        if out is not None and "table_schema" in snap:
-            # conform to the table schema: a bucket-pruned read touching only
-            # pre-evolution files must still surface the new columns (NULL)
-            out = self._conform(out, T.StructType.fromJson(snap["table_schema"]))
-        return out
+        units = self._units(snap)
+        keys = sorted(units)
+        if buckets is not None and "buckets" in snap:
+            keys = sorted(set(buckets) & set(units))
+        paths = [p for b in keys for p in units[b]]
+        return self._read_paths(
+            snap, self._prune_paths(paths, snap.get("stats", {}), prune)
+        )
 
     def read_matching(self, match_df: DataFrame, keys: list[str]) -> DataFrame | None:
         """Rows whose `keys` match a row of match_df — reads only the buckets
@@ -738,34 +741,76 @@ class SnapshotTable:
                 last = e
         raise last  # contention beyond the retry budget — surface it
 
+    def _head(self) -> dict | None:
+        """HEAD's manifest, its bucket spec adopted (see _adopt_spec)."""
+        snap = self.current_snapshot()
+        self._adopt_spec(snap)
+        return snap
+
+    def _rewrite(
+        self,
+        snap: dict | None,
+        replace: set[int] | None,
+        rows: Callable[[DataFrame | None], DataFrame | None],
+        op: str,
+        summary: dict,
+        *,
+        read: bool = True,
+        schema: tuple[T.StructType, bool] | None = None,
+        partition_by: list[str] | None = None,
+        n_touched: int | None = None,
+        cas: bool = True,
+        before_commit: Callable[[], object] | None = None,
+    ) -> str:
+        """The one copy-on-write commit behind every mutation: drop the
+        buckets `replace` of `snap` (None: every bucket), write
+        `rows(current rows of those buckets)` as one new fileset, carry
+        every other bucket by reference, and commit.
+
+        `rows` gets None when nothing is read (`read=False`, or no live
+        bucket to replace) and may return None to write nothing. The new
+        fileset's paths are added to whatever a bucket still carries, so an
+        append is a rewrite that replaces no bucket. `schema` is (table
+        schema after this write, did it widen?) for a write that sets it;
+        the replaced rows are read conformed to it. `cas=False` commits
+        without a parent check (overwrite); otherwise the commit is a CAS
+        against `snap`. `before_commit` as in merge()."""
+        units = self._units(snap)
+        drop = set(units) if replace is None else set(replace) & set(units)
+        cur = None
+        if read and drop:
+            cur = self._read_paths(
+                snap, [p for b in sorted(drop) for p in units[b]],
+                *(schema or ()),
+            )
+        df = rows(cur)
+        part = self._effective_partition_by(snap, partition_by)
+        fs, written = (None, {}) if df is None else self._write(df, part, n_touched)
+        new = {b: ps for b, ps in units.items() if b not in drop}
+        for b, ps in written.items():
+            new[b] = new.get(b, []) + ps
+        filesets = list(
+            dict.fromkeys(p.split("/", 1)[0] for b in sorted(new) for p in new[b])
+        )
+        return self._commit_cleaning(
+            [fs] if fs else [],
+            filesets, op, summary,
+            new if self.bucket_key is not None else None, part or [],
+            expected_parent=(snap or {}).get("snapshot_id") if cas else _UNCHECKED,
+            schema_info=schema and (schema[0].jsonValue(), schema[1]),
+            before_commit=before_commit,
+        )
+
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         return self._retrying(lambda: self._append_once(df, partition_by))
 
     def _append_once(self, df: DataFrame, partition_by: list[str] | None) -> str:
-        prev = self.current_snapshot()
-        self._adopt_spec(prev)
-        base = prev["snapshot_id"] if prev else None
-        schema, widened = self._evolve_schema(prev, df)
+        snap = self._head()
+        schema, widened = self._evolve_schema(snap, df)
         df = self._conform(df, schema)
-        sinfo = (schema.jsonValue(), widened)
-        if self.bucket_key is not None:
-            part = self._effective_partition_by(prev, partition_by)
-            fs, new_buckets = self._write_bucketed(df, part)
-            bmap = self._bucket_map(prev) if prev else {}
-            for b, paths in new_buckets.items():
-                bmap.setdefault(b, []).extend(paths)
-            filesets = (prev["filesets"] if prev else []) + [fs]
-            return self._commit_cleaning(
-                [fs],
-                filesets, "append", {"added_filesets": 1}, bmap, part or [],
-                expected_parent=base, schema_info=sinfo,
-            )
-        fs = self._write_fileset(df, partition_by)
-        filesets = (prev["filesets"] if prev else []) + [fs]
-        return self._commit_cleaning(
-            [fs],
-            filesets, "append", {"added_filesets": 1}, expected_parent=base,
-            schema_info=sinfo,
+        return self._rewrite(
+            snap, set(), lambda _: df, "append", {"added_filesets": 1},
+            schema=(schema, widened), partition_by=partition_by,
         )
 
     def overwrite(
@@ -774,34 +819,13 @@ class SnapshotTable:
     ) -> str:
         """`before_commit`: as in merge()."""
         # replace-everything semantics: no parent check — an overwrite wins
-        # over whatever committed in between by definition
-        return self._overwrite_once(
-            df, partition_by, expected_parent=_UNCHECKED,
-            before_commit=before_commit,
-        )
-
-    def _overwrite_once(
-        self, df: DataFrame, partition_by: list[str] | None,
-        expected_parent: str | None,
-        before_commit: Callable[[], object] | None = None,
-    ) -> str:
-        # overwrite resets the table schema to the frame's (no old files
-        # survive, so there is nothing to evolve against)
-        sinfo = (self._evolve_schema(None, df)[0].jsonValue(), False)
-        if self.bucket_key is not None:
-            part = self._effective_partition_by(self.current_snapshot(), partition_by)
-            fs, buckets = self._write_bucketed(df, part)
-            return self._commit_cleaning(
-                [fs],
-                [fs], "overwrite", {}, buckets, part or [],
-                expected_parent=expected_parent, schema_info=sinfo,
-                before_commit=before_commit,
-            )
-        fs = self._write_fileset(df, partition_by)
-        return self._commit_cleaning(
-            [fs],
-            [fs], "overwrite", {}, expected_parent=expected_parent,
-            schema_info=sinfo, before_commit=before_commit,
+        # over whatever committed in between by definition. It also resets
+        # the table schema to the frame's (no old files survive, so there
+        # is nothing to evolve against).
+        return self._rewrite(
+            self._head(), None, lambda _: df, "overwrite", {}, read=False,
+            schema=(self._evolve_schema(None, df)[0], False),
+            partition_by=partition_by, cas=False, before_commit=before_commit,
         )
 
     def merge(
@@ -860,108 +884,66 @@ class SnapshotTable:
         writes several tables at once holds each commit until the commits
         it must follow have landed.
         """
-        cur_snap = self.current_snapshot()
-        self._adopt_spec(cur_snap)
-        base = cur_snap["snapshot_id"] if cur_snap else None
-        schema, widened = self._evolve_schema(cur_snap, df)
-        sinfo = (schema.jsonValue(), widened)
+        snap = self._head()
+        schema, widened = self._evolve_schema(snap, df)
         df = self._conform(df, schema)
-        read_ms = bool((cur_snap or {}).get("schema_merge")) or widened
-        if self.bucket_key is not None:
-            if cur_snap is None or not self._bucket_map(cur_snap):
-                if resolve is not None:
-                    df = resolve(None, df)
-                return self._overwrite_once(
-                    df, partition_by, expected_parent=base,
-                    before_commit=before_commit,
-                )
-            # purge_covers: caller guarantees every incoming key's bucket is
-            # also a purge-key bucket (e.g. purge = changed conv_ids and
-            # incoming rows all belong to changed convs) — saves one
-            # distinct-collect job on the incoming frame.
-            # aff_hint: the caller already knows the touched buckets
-            # (driver-local delta hashed via buckets_for_keys) — skips the
-            # bucket-discovery job(s) entirely. The hint must COVER both the
-            # incoming and purge keys; an under-hint would leave matched
-            # rows unmerged in unread buckets, so only pass ids-derived sets.
-            if aff_hint is not None:
-                aff = set(aff_hint)
-            elif purge is not None and purge_covers:
-                aff = self._affected_buckets(purge)
-            else:
-                aff = self._affected_buckets(df)
-                if purge is not None:
-                    aff |= self._affected_buckets(purge)
-            bmap = self._bucket_map(cur_snap)
-            touched = sorted(aff & set(bmap))
-            cur = self._read_paths(
-                [p for b in touched for p in bmap[b]], read_ms
+        units = self._units(snap)
+        if not units:
+            # an empty table: one full-width write, nothing to read
+            return self._rewrite(
+                snap, None, lambda _: resolve(None, df) if resolve else df,
+                "overwrite", {}, schema=(schema, False),
+                partition_by=partition_by, before_commit=before_commit,
             )
-            if cur is not None:
-                cur = self._conform(cur, schema)
-                if "_bucket" in df.columns:
-                    # pre-bucketed input: the carried rows get the column
-                    # too, and a stale-spec one is recomputed BEFORE the
-                    # union, whose column tag is its first input's
-                    df = self._with_bucket(df)
-                    cur = cur.select("*", self._bucket_col())
+        # purge_covers: caller guarantees every incoming key's bucket is
+        # also a purge-key bucket (e.g. purge = changed conv_ids and
+        # incoming rows all belong to changed convs) — saves one
+        # distinct-collect job on the incoming frame.
+        # aff_hint: the caller already knows the touched buckets
+        # (driver-local delta hashed via buckets_for_keys) — skips the
+        # bucket-discovery job(s) entirely. The hint must COVER both the
+        # incoming and purge keys; an under-hint would leave matched
+        # rows unmerged in unread buckets, so only pass ids-derived sets.
+        if self.bucket_key is None:
+            aff = set(units)
+        elif aff_hint is not None:
+            aff = set(aff_hint)
+        elif purge is not None and purge_covers:
+            aff = self._affected_buckets(purge)
+        else:
+            aff = self._affected_buckets(df)
+            if purge is not None:
+                aff |= self._affected_buckets(purge)
+
+        def upsert(cur: DataFrame | None) -> DataFrame:
+            if cur is None:
+                return resolve(None, df) if resolve is not None else df
             incoming = df
-            if cur is not None:
-                if purge is not None:
-                    cur = cur.join(
-                        purge.dropDuplicates(purge_keys),
-                        on=purge_keys,
-                        how="left_anti",
-                    )
-                if resolve is not None:
-                    incoming = resolve(cur, df)
-                kept = cur.join(
-                    incoming.select(*keys).dropDuplicates(keys),
-                    on=keys,
+            if "_bucket" in df.columns:
+                # pre-bucketed input: the carried rows get the column too,
+                # and a stale-spec one is recomputed BEFORE the union, whose
+                # column tag is its first input's
+                incoming = self._with_bucket(df)
+                cur = cur.select("*", self._bucket_col())
+            if purge is not None:
+                cur = cur.join(
+                    purge.dropDuplicates(purge_keys), on=purge_keys,
                     how="left_anti",
                 )
-                merged = kept.select(incoming.columns).unionByName(incoming)
-            else:
-                merged = resolve(None, df) if resolve is not None else df
-            part = self._effective_partition_by(cur_snap, partition_by)
-            fs, new_buckets = self._write_bucketed(
-                merged, part, n_touched=len(aff)
-            )
-            new_bmap = {b: p for b, p in bmap.items() if b not in aff}
-            new_bmap.update(new_buckets)
-            return self._commit_cleaning(
-                [fs],
-                self._referenced_filesets(new_bmap, fs), "merge",
-                {"keys": keys, "rewritten_buckets": len(aff),
-                 "carried_buckets": len(new_bmap) - len(new_buckets)},
-                new_bmap, part or [],
-                expected_parent=base, schema_info=sinfo,
-                before_commit=before_commit,
-            )
-        # unbucketed: full-table copy-on-write (small tables only)
-        cur = self.read(snapshot_id=base) if base else None
-        if cur is not None:
-            cur = self._conform(cur, schema)
-        if cur is None:
             if resolve is not None:
-                df = resolve(None, df)
-            return self._overwrite_once(
-                df, partition_by, expected_parent=base,
-                before_commit=before_commit,
+                incoming = resolve(cur, incoming)
+            kept = cur.join(
+                incoming.select(*keys).dropDuplicates(keys), on=keys,
+                how="left_anti",
             )
-        if purge is not None:
-            cur = cur.join(
-                purge.dropDuplicates(purge_keys), on=purge_keys, how="left_anti"
-            )
-        if resolve is not None:
-            df = resolve(cur, df)
-        kept = cur.join(df.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
-        merged = kept.select(df.columns).unionByName(df)
-        fs = self._write_fileset(merged, partition_by)
-        return self._commit_cleaning(
-            [fs],
-            [fs], "merge", {"keys": keys}, expected_parent=base,
-            schema_info=sinfo, before_commit=before_commit,
+            return kept.select(incoming.columns).unionByName(incoming)
+
+        return self._rewrite(
+            snap, aff, upsert, "merge",
+            {"keys": keys, "rewritten_buckets": len(aff),
+             "carried_buckets": len(set(units) - aff)},
+            schema=(schema, widened), partition_by=partition_by,
+            n_touched=len(aff), before_commit=before_commit,
         )
 
     def delete_matching(self, match_df: DataFrame, keys: list[str]) -> str:
@@ -971,48 +953,17 @@ class SnapshotTable:
         return self._retrying(lambda: self._delete_matching_once(match_df, keys))
 
     def _delete_matching_once(self, match_df: DataFrame, keys: list[str]) -> str:
-        cur_snap = self.current_snapshot()
-        self._adopt_spec(cur_snap)
-        base = cur_snap["snapshot_id"] if cur_snap else None
-        if cur_snap is None:
-            return self._commit([], "delete", {"keys": keys}, expected_parent=base)
-        if self.bucket_key is not None and self._bucket_map(cur_snap):
-            aff = self._affected_buckets(match_df)
-            bmap = self._bucket_map(cur_snap)
-            touched = sorted(aff & set(bmap))
-            part = self._effective_partition_by(cur_snap, None)
-            if not touched:
-                return self._commit(
-                    cur_snap["filesets"], "delete", {"keys": keys, "noop": True},
-                    bmap, part or [], expected_parent=base,
-                )
-            cur = self._read_paths(
-                [p for b in touched for p in bmap[b]],
-                bool(cur_snap.get("schema_merge")),
-            )
-            if "table_schema" in cur_snap:
-                cur = self._conform(
-                    cur, T.StructType.fromJson(cur_snap["table_schema"])
-                )
-            remaining = cur.join(
+        snap = self._head()
+        aff = set(self._units(snap))
+        if self.bucket_key is not None and aff:
+            aff &= self._affected_buckets(match_df)
+        return self._rewrite(
+            snap, aff,
+            lambda cur: None if cur is None else cur.join(
                 match_df.dropDuplicates(keys), on=keys, how="left_anti"
-            )
-            fs, new_buckets = self._write_bucketed(
-                remaining, part, n_touched=len(touched)
-            )
-            new_bmap = {b: p for b, p in bmap.items() if b not in aff}
-            new_bmap.update(new_buckets)
-            return self._commit_cleaning(
-                [fs],
-                self._referenced_filesets(new_bmap, fs), "delete",
-                {"keys": keys, "rewritten_buckets": len(touched)},
-                new_bmap, part or [], expected_parent=base,
-            )
-        cur = self.read(snapshot_id=base)
-        remaining = cur.join(match_df.dropDuplicates(keys), on=keys, how="left_anti")
-        fs = self._write_fileset(remaining, None)
-        return self._commit_cleaning(
-            [fs], [fs], "delete", {"keys": keys}, expected_parent=base
+            ),
+            "delete", {"keys": keys, "rewritten_buckets": len(aff)},
+            n_touched=len(aff),
         )
 
     def delete_where(self, condition: str) -> str:
@@ -1020,30 +971,12 @@ class SnapshotTable:
         keyed deletes at scale). CAS-committed against the snapshot it read,
         like every other mutating op — a concurrent merge/append is not
         silently dropped (ADVICE r3 medium)."""
-        return self._retrying(lambda: self._delete_where_once(condition))
-
-    def _delete_where_once(self, condition: str) -> str:
-        cur_snap = self.current_snapshot()
-        self._adopt_spec(cur_snap)
-        base = cur_snap["snapshot_id"] if cur_snap else None
-        cur = self.read(snapshot_id=base) if base else None
-        if cur is None:
-            return self._commit(
-                [], "delete", {"condition": condition}, expected_parent=base
+        return self._retrying(
+            lambda: self._rewrite(
+                self._head(), None,
+                lambda cur: None if cur is None else cur.filter(~F.expr(condition)),
+                "delete", {"condition": condition},
             )
-        remaining = cur.filter(~F.expr(condition))
-        if self.bucket_key is not None:
-            part = self._effective_partition_by(cur_snap, None)
-            fs, buckets = self._write_bucketed(remaining, part)
-            return self._commit_cleaning(
-                [fs],
-                [fs], "delete", {"condition": condition}, buckets, part or [],
-                expected_parent=base,
-            )
-        fs = self._write_fileset(remaining, None)
-        return self._commit_cleaning(
-            [fs],
-            [fs], "delete", {"condition": condition}, expected_parent=base
         )
 
     def compact_buckets(self, max_paths_per_bucket: int = 1) -> str | None:
@@ -1063,31 +996,13 @@ class SnapshotTable:
         )
 
     def _compact_once(self, bound: int) -> str | None:
-        snap = self.current_snapshot()
-        self._adopt_spec(snap)
-        if snap is None:
-            return None
-        bmap = self._bucket_map(snap)
-        fat = sorted(b for b, ps in bmap.items() if len(ps) > bound)
+        snap = self._head()
+        fat = {b for b, ps in self._units(snap).items() if len(ps) > bound}
         if not fat:
             return None
-        base = snap["snapshot_id"]
-        cur = self._read_paths(
-            [p for b in fat for p in bmap[b]], bool(snap.get("schema_merge"))
-        )
-        if cur is not None and "table_schema" in snap:
-            cur = self._conform(cur, T.StructType.fromJson(snap["table_schema"]))
-        part = self._effective_partition_by(snap, None)
-        fs, new_buckets = self._write_bucketed(
-            cur, part, n_touched=len(fat)
-        )
-        new_bmap = {b: p for b, p in bmap.items() if b not in set(fat)}
-        new_bmap.update(new_buckets)
-        return self._commit_cleaning(
-            [fs],
-            self._referenced_filesets(new_bmap, fs), "compact",
-            {"rewritten_buckets": len(fat), "bound": bound},
-            new_bmap, part or [], expected_parent=base,
+        return self._rewrite(
+            snap, fat, lambda cur: cur, "compact",
+            {"rewritten_buckets": len(fat), "bound": bound}, n_touched=len(fat),
         )
 
     def rebucket(
@@ -1107,7 +1022,10 @@ class SnapshotTable:
         additionally records the change for audit). Unlike
         compact_buckets this rewrites every live row: run it as background
         maintenance, not on the hot path. Returns the new snapshot id, or
-        None for an empty/unwritten table (the new spec is simply adopted).
+        None for an unwritten table (the new spec is simply adopted). An
+        emptied table commits the new spec with no rows: adopted in memory
+        only, it would be replaced by the committed one at the next
+        mutation.
 
         NOT concurrent-safe with an in-flight run that passes merge
         `aff_hint`s: a hint is hashed against the modulus current when it
@@ -1121,34 +1039,17 @@ class SnapshotTable:
         return self._retrying(lambda: self._rebucket_once(n_buckets, bucket_key))
 
     def _rebucket_once(self, n_buckets: int, bucket_key: str | None) -> str | None:
-        snap = self.current_snapshot()
-        self._adopt_spec(snap)  # accurate from_* audit values on stale handles
+        snap = self._head()  # accurate from_* audit values on stale handles
         old_key, old_n = self.bucket_key, self.n_buckets
-        if snap is None:
-            self.bucket_key = bucket_key or self.bucket_key
-            self.n_buckets = n_buckets
-            return None
-        base = snap["snapshot_id"]
-        bmap = self._bucket_map(snap)
-        paths = [p for ps in bmap.values() for p in ps] or list(snap["filesets"])
-        cur = self._read_paths(paths, bool(snap.get("schema_merge")))
-        if cur is None:  # committed-but-empty table: nothing to rewrite
-            self.bucket_key = bucket_key or self.bucket_key
-            self.n_buckets = n_buckets
-            return None
-        if "table_schema" in snap:
-            cur = self._conform(cur, T.StructType.fromJson(snap["table_schema"]))
         self.bucket_key = bucket_key or self.bucket_key
         self.n_buckets = n_buckets
+        if snap is None:  # unwritten table: no spec to replace
+            return None
         try:
-            part = self._effective_partition_by(snap, None)
-            fs, new_buckets = self._write_bucketed(cur, part)
-            return self._commit_cleaning(
-                [fs],
-                [fs], "rebucket",
+            return self._rewrite(
+                snap, None, lambda cur: cur, "rebucket",
                 {"n_buckets": n_buckets, "bucket_key": self.bucket_key,
                  "from_n_buckets": old_n, "from_bucket_key": old_key},
-                new_buckets, part or [], expected_parent=base,
             )
         except BaseException:
             # leave the handle consistent with the still-committed old spec
@@ -1158,11 +1059,10 @@ class SnapshotTable:
     @staticmethod
     def _live_filesets(snap: dict | None) -> set[str]:
         """Every fileset a snapshot references: the 'filesets' list PLUS the
-        filesets that carried-forward bucket paths point into. A bucketed
-        merge/delete commit lists only the fileset it wrote, while unaffected
-        buckets still reference older filesets' dirs — liveness must come
-        from the bucket map too (ADVICE r2: dropping those from the diff
-        silently skips their changed conversations forever)."""
+        filesets its bucket paths point into. Older bucketed manifests list
+        only the fileset a merge/delete wrote, while carried buckets still
+        reference older filesets' dirs (ADVICE r2: dropping those from the
+        diff silently skips their changed conversations forever)."""
         if snap is None:
             return set()
         live = set(snap["filesets"])
@@ -1170,67 +1070,36 @@ class SnapshotTable:
             live.update(p.split("/", 1)[0] for p in paths)
         return live
 
-    def _chain_back_to(
-        self, from_snapshot_id: str | None
-    ) -> tuple[list[dict], dict | None]:
-        """Walk the parent chain from HEAD back to (excluding)
-        `from_snapshot_id`: returns (snapshots after it, newest first; the
-        base snapshot or None). O(commits since) manifest reads — never a
-        scan of the whole snapshots/ directory (manifest-hygiene item: a
-        1000-commit table resolves a recent diff in a handful of reads)."""
-        out: list[dict] = []
-        s = self.current_snapshot()
-        while s is not None:
-            if s["snapshot_id"] == from_snapshot_id:
-                return out, s
-            out.append(s)
-            parent = s.get("parent")
-            if parent is None:
-                return out, None
-            try:
-                s = self._read_snapshot(parent)
-            except FileNotFoundError:  # expired past the retained window
-                return out, None
-        return out, None
-
     def diff_filesets(self, from_snapshot_id: str | None) -> DataFrame | None:
         """Rows in filesets added after `from_snapshot_id` (changelog read —
-        the incremental-source analog of an Iceberg snapshot diff). A merge
+        the incremental-source analog of an Iceberg snapshot diff): the HEAD
+        paths whose fileset the base snapshot did not reference. A merge
         fileset includes carried bucket-mates, so the result over-approximates
         the changed rows — callers hash-filter (see KGPipeline.run_from_table).
 
-        Resolved by walking the HEAD parent chain back to the base snapshot
-        (O(commits since), not O(all history)). A fileset is new iff some
-        post-base snapshot references it and the base did not: filesets are
-        immutable uuid dirs, so one dropped before the base can never
-        reappear after it."""
-        after, base = self._chain_back_to(from_snapshot_id)
-        if from_snapshot_id is not None and base is None:
-            raise ValueError(
-                f"snapshot {from_snapshot_id!r} not found in {self.root} "
-                "(expired?) — fall back to a full re-read"
-            )
-        seen = self._live_filesets(base)
-        new_fs: list[str] = []
-        for s in reversed(after):  # oldest -> newest, stable order
-            new_fs.extend(fs for fs in self._live_filesets(s) if fs not in seen)
-            seen.update(self._live_filesets(s))
-        live = self._live_filesets(self.current_snapshot())
-        new_fs = [fs for fs in dict.fromkeys(new_fs) if fs in live]
-        if not new_fs:
+        Filesets are immutable uuid dirs, so one the base referenced holds
+        nothing new, and one dropped before HEAD holds nothing live. History
+        is linear (every commit's parent is the HEAD it replaced), so the
+        base is an ancestor of HEAD whenever its manifest still exists: one
+        manifest read, whatever the number of commits since."""
+        base = None
+        if from_snapshot_id is not None:
+            try:
+                base = self._read_snapshot(from_snapshot_id)
+            except FileNotFoundError:
+                raise ValueError(
+                    f"snapshot {from_snapshot_id!r} not found in {self.root} "
+                    "(expired?) — fall back to a full re-read"
+                ) from None
+        head = self.current_snapshot()
+        if head is None:
             return None
-        # bucketed filesets hold _bucket=K partition dirs; plain ones don't —
-        # group through _read_paths so partition discovery stays consistent
-        rel: list[str] = []
-        for fs in new_fs:
-            path = os.path.join(self.root, "data", fs)
-            subs = [d for d in os.listdir(path) if d.startswith("_bucket=")]
-            rel.extend(f"{fs}/{d}" for d in subs) if subs else rel.append(fs)
-        cur = self.current_snapshot() or {}
-        out = self._read_paths(rel, bool(cur.get("schema_merge")))
-        if out is not None and "table_schema" in cur:
-            out = self._conform(out, T.StructType.fromJson(cur["table_schema"]))
-        return out
+        seen = self._live_filesets(base)
+        units = self._units(head)
+        return self._read_paths(head, [
+            p for b in sorted(units) for p in units[b]
+            if p.split("/", 1)[0] not in seen
+        ])
 
     def expire_snapshots(self, keep_last: int = 10) -> dict:
         """Manifest + data hygiene: retain the last `keep_last` snapshots of

@@ -628,3 +628,43 @@ def test_stale_prebucketed_frame_is_rebucketed(spark, tmp_path):
     snap = t.current_snapshot()
     assert [f["name"] for f in snap["table_schema"]["fields"]] == ["k", "v"]
     assert t.read().columns == ["k", "v"]
+
+
+def test_benchmark_tracer_counts_merge_commits(spark, tmp_path, monkeypatch):
+    """kgbench's Tracer wraps SnapshotTable.merge, _retrying and the table
+    reads by name. Two merges, one of which loses a forced CAS race, count
+    two commits in three attempts, and each leaves one merge span carrying
+    the files and buckets its commit wrote. The wrappers replace class and
+    module attributes, so each one is restored at teardown."""
+    from kgbench.hooks import Tracer
+
+    from cie_spark.sources.io_snapshots import CommitConflict
+
+    patch = Tracer._patch
+
+    def restored_at_teardown(self, owner, attr, make):
+        monkeypatch.setattr(owner, attr, getattr(owner, attr))
+        patch(self, owner, attr, make)
+
+    monkeypatch.setattr(Tracer, "_patch", restored_at_teardown)
+    t = SnapshotTable(spark, str(tmp_path / "tbl"), bucket_key="k", n_buckets=4)
+    t.overwrite(_df(spark, [(f"k{i}", i) for i in range(8)]))
+    tracer = Tracer(spark.sparkContext)
+    tracer.install()
+
+    t.merge(_df(spark, [("k1", 10)]), keys=["k"])
+    commit = SnapshotTable._commit_locked
+
+    def lose_once(self, *a, **kw):
+        monkeypatch.setattr(SnapshotTable, "_commit_locked", commit)
+        raise CommitConflict("injected lost race")
+
+    monkeypatch.setattr(SnapshotTable, "_commit_locked", lose_once)
+    t.merge(_df(spark, [("k2", 20)]), keys=["k"])
+
+    assert tracer.counters["commits"] == 2
+    assert tracer.counters["commit_attempts"] == 3
+    spans = [s for s in tracer.spans if s.name == "io_snapshots.merge.tbl"]
+    assert [(s.attrs["files"], s.attrs["buckets"]) for s in spans] == [(1, 1)] * 2
+    got = {r.k: r.v for r in t.read().collect()}
+    assert (got["k1"], got["k2"], len(got)) == (10, 20, 8)
