@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cie_spark.operators.dedup import _band_buckets, _split_bands
-from cie_spark.session import local_frame
+from cie_spark.session import bounded_rows, local_frame
 
 
 def _as_double(col: Column) -> Column:
@@ -398,11 +398,11 @@ def cosine_near_dup_pairs(
         ]
     )
     bits = n_planes // bands
-    # ids-first size probe (a column-pruned CollectLimit): an over-cap input
-    # never moves vector bytes to the driver
+    # ids-first size probe (a column-pruned bounded fetch, one job): an
+    # over-cap input never moves vector bytes to the driver
     fetched = None
     cap = LOCAL_MAX_VECTORS
-    if cap and len(vectors.select(id_col).limit(cap + 1).collect()) <= cap:
+    if cap and bounded_rows(vectors.select(id_col), cap) is not None:
         fetched = _fetch_matrix(vectors, id_col, vec_col, cap)
 
     if fetched is not None:

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from contextlib import ExitStack, contextmanager
 from datetime import datetime, timezone
 
 from pyspark import inheritable_thread_target
@@ -52,7 +53,7 @@ from pyspark.sql import functions as F
 
 from cie_spark import schema
 from cie_spark.operators import extract, link, triples, validate
-from cie_spark.session import local_frame
+from cie_spark.session import bounded_rows, local_frame
 from cie_spark.sources.io_snapshots import SnapshotTable
 
 RESUME_POLICIES = ("trust_checkpoint", "force_reprocess", "fail_fast")
@@ -82,6 +83,40 @@ SMALL_DELTA_ROWS = 1_000_000
 
 def _now() -> datetime:
     return datetime.now(timezone.utc)
+
+
+def affected_turns(turns: SnapshotTable, convs: DataFrame, *, land=False):
+    """(scoped, ids): the full turn set of every conversation `convs`
+    names, read back from the `turns` table, and its conv_ids. The one
+    scoping step run_from_table and the streaming watch share.
+
+    One bounded fetch of the distinct conv_ids picks the read: up to
+    SMALL_DELTA_CONVS ids become a bucket-pruned literal lookup
+    (read_keys, buckets hashed in-process); past the cap `ids` is None and
+    read_matching semi-joins the ids. The ids are what KGPipeline.run takes
+    as `delta_scope_ids`; run alone decides from its exact delta whether
+    the run is small. With `land`, `convs` are new turns (a watch
+    micro-batch) upserted into `turns` between the fetch and the read, the
+    merge bucket-hinted by the fetched ids; the caller pins them, as they
+    are read twice. Otherwise `convs` is a computed frame, pinned here past
+    the cap so that the scans of the result do not recompute it. `scoped`
+    is None when nothing is indexable: no ids, or only null ones
+    (read_keys drops null keys, as the left-semi join does)."""
+    keys = convs.select("conv_id").dropDuplicates(["conv_id"])
+    rows = bounded_rows(keys, SMALL_DELTA_CONVS)
+    ids = None if rows is None else [r[0] for r in rows]
+    if ids == []:
+        return None, ids
+    if land:
+        turns.merge(
+            convs, keys=["conv_id", "turn_idx"],
+            aff_hint=None if ids is None else turns.buckets_for_keys(ids),
+        )
+    if ids is not None:
+        return turns.read_keys(ids), ids
+    if not land:
+        keys = keys.localCheckpoint(eager=True)
+    return turns.read_matching(keys, ["conv_id"]), None
 
 
 class KGPipeline:
@@ -278,7 +313,6 @@ class KGPipeline:
         because the pipeline is single-flight (run_from_table flock; watch
         is one-at-a-time) — no concurrent query in this session depends on
         these confs mid-run. Values restored on exit, exceptions included."""
-        from contextlib import contextmanager
 
         @contextmanager
         def guard():
@@ -355,17 +389,17 @@ class KGPipeline:
     def _run_from_table_locked(self, turns: SnapshotTable, **kw) -> dict:
         since = self.last_source_snapshot()
         cur = turns.current_snapshot_id()
+        skipped = {"run_id": None, "rows_in": 0, "triples": 0,
+                   "seconds": 0.0, "skipped": True}
         if since is None:
             df = turns.read()
             if df is None:
-                return {"run_id": None, "rows_in": 0, "triples": 0,
-                        "seconds": 0.0, "skipped": True}
+                return skipped
             out = self.run(df, **kw)
         else:
             delta_rows = turns.diff_filesets(since)
             if delta_rows is None:
-                out = {"run_id": None, "rows_in": 0, "triples": 0,
-                       "seconds": 0.0, "skipped": True}
+                out = skipped
             else:
                 # a bucket-granular upsert CARRIES unchanged bucket-mates into
                 # the new fileset, so the raw diff over-approximates the delta
@@ -373,43 +407,14 @@ class KGPipeline:
                 # diff rows against the processed checkpoint FIRST: carried
                 # conversations hash equal and drop out; genuinely changed or
                 # partially-appended conversations mismatch and stay. Only
-                # those convs are then read back in full.
-                #
-                # One limit-collect replaces the former eager-checkpoint +
-                # isEmpty + join-in-read_matching chain (3 driver rounds ->
-                # 1): a delta of <= SMALL_DELTA_CONVS ids is driver-trivial,
-                # scoping becomes a literal predicate over a bucket-pruned
-                # read (buckets hashed in-process), and the whole scoped run
-                # executes under the small-run conf guard. An over-cap delta
-                # re-derives the frame for the unchanged distributed path —
-                # one extra hash pass over delta files, amortized by the
-                # delta's own work at that size.
-                changed_df = self.delta_convs(delta_rows).select(
-                    "conv_id", "n_turns"
+                # those convs are then read back in full. The diff holds only
+                # the new rows of an appended conversation, so its turn count
+                # says nothing about the run's size: run() decides that from
+                # its own exact delta.
+                scoped, ids = affected_turns(turns, self.delta_convs(delta_rows))
+                out = skipped if scoped is None else self.run(
+                    scoped, delta_scope_ids=ids, **kw
                 )
-                rows = changed_df.limit(SMALL_DELTA_CONVS + 1).collect()
-                ids = [r[0] for r in rows]
-                n_rows = sum(r[1] for r in rows)
-                if not ids:
-                    out = {"run_id": None, "rows_in": 0, "triples": 0,
-                           "seconds": 0.0, "skipped": True}
-                elif (
-                    len(ids) <= SMALL_DELTA_CONVS
-                    and n_rows <= SMALL_DELTA_ROWS
-                ):
-                    scoped = turns.read_keys(ids)
-                    if scoped is None:  # only-null conv_ids: nothing indexable
-                        out = {"run_id": None, "rows_in": 0, "triples": 0,
-                               "seconds": 0.0, "skipped": True}
-                    else:
-                        with self._small_run_confs():
-                            out = self.run(scoped, delta_scope_ids=ids, **kw)
-                else:
-                    changed = changed_df.select("conv_id").localCheckpoint(
-                        eager=True
-                    )
-                    scoped = turns.read_matching(changed, ["conv_id"])
-                    out = self.run(scoped, **kw)
         self._set_source_snapshot(cur)
         return out
 
@@ -455,11 +460,9 @@ class KGPipeline:
         fail_on_violation: bool = True,
         delta_scope_ids: list[str] | None = None,
     ) -> dict:
-        # ExitStack: the small-delta fast path discovers mid-run (after the
-        # hash pass) that the delta is tiny and enters the small-run conf
-        # guard; the stack guarantees conf restoration on every exit path.
-        from contextlib import ExitStack
-
+        # ExitStack: the small-delta fast path decides mid-run (after the
+        # hash pass) whether the small-run conf guard applies; the stack
+        # guarantees conf restoration on every exit path.
         with ExitStack() as stack:
             return self._run_impl(
                 transcripts, stack,
@@ -511,21 +514,37 @@ class KGPipeline:
             n_delta = rows_in = None
             small_ids = None
         else:
+            # the small-run conf guard is entered once: before the hash pass
+            # if the caller's scope fits both caps at one turn per
+            # conversation (the least each holds), else once the exact
+            # delta fits. An early guard is left before extraction if the
+            # exact delta does not fit.
+            confs = stack.enter_context(ExitStack())
+            least = min(SMALL_DELTA_CONVS, SMALL_DELTA_ROWS)
+            guarded = delta_scope_ids is not None and len(delta_scope_ids) <= least
+            if guarded:
+                confs.enter_context(self._small_run_confs())
             delta = self.delta_convs(
                 transcripts, restrict_ids=delta_scope_ids
             ).cache()
-            n_delta, rows_in = _agg()
-            n_delta, rows_in = int(n_delta), int(rows_in)
+            # the run's one small-delta decision, from one bounded fetch of
+            # the exact delta (it also fills the cache). Past the conv cap
+            # the fetch returns None and one more job counts the cache.
+            local_delta = bounded_rows(delta, SMALL_DELTA_CONVS)
+            if local_delta is None:
+                n_delta, rows_in = (int(x) for x in _agg())
+            else:
+                n_delta = len(local_delta)
+                rows_in = sum(r["n_turns"] for r in local_delta)
             small_ids = None
-            if 0 < n_delta <= SMALL_DELTA_CONVS and rows_in <= SMALL_DELTA_ROWS:
+            if local_delta and rows_in <= SMALL_DELTA_ROWS:
                 # small-delta fast path: the delta is driver-trivial —
-                # collect it once (bounded by the cap), re-ship it as a
-                # local_frame LocalRelation (the downstream purge/checkpoint
-                # merges stop re-running its lineage), scope by a literal
-                # predicate instead of a broadcast join, and run the rest
-                # under the small-run conf guard. Bucket sets for the commit
-                # merges are hashed in-process (no bucket-discovery jobs).
-                local_delta = delta.collect()
+                # re-ship the fetched rows as a local_frame LocalRelation
+                # (the downstream purge/checkpoint merges stop re-running
+                # its lineage), scope by a literal predicate instead of a
+                # broadcast join, and run the rest under the small-run conf
+                # guard. Bucket sets for the commit merges are hashed
+                # in-process (no bucket-discovery jobs).
                 delta.unpersist()
                 delta = local_frame(
                     self.spark, local_delta,
@@ -533,8 +552,10 @@ class KGPipeline:
                 )
                 small_ids = [r["conv_id"] for r in local_delta]
                 scoped = transcripts.filter(F.col("conv_id").isin(small_ids))
-                stack.enter_context(self._small_run_confs())
+                if not guarded:
+                    confs.enter_context(self._small_run_confs())
             else:
+                confs.close()
                 scoped = transcripts.join(
                     delta.select("conv_id").hint("broadcast")
                     if n_delta < 100_000

@@ -559,21 +559,22 @@ class SnapshotTable:
         mirrors the JVM exactly: xxhash64(NULL) passes the seed (42)
         through, so null rows land in bucket pmod(42, n) — a hint built
         from a key list containing None still COVERS those rows."""
-        from cie_spark.functions.xxh64 import xxh64_signed
+        import numpy as np
 
-        n = self.n_buckets
-        out = set()
+        from cie_spark.functions import xxh64_bytes_array
+
+        n, keys = self.n_buckets, list(keys)
         for k in keys:
-            if k is None:
-                out.add(42 % n)
-            elif isinstance(k, str):
-                out.add(xxh64_signed(k.encode("utf-8")) % n)
-            else:
+            if k is not None and not isinstance(k, str):
                 raise TypeError(
                     f"buckets_for_keys supports str/None keys only, got "
                     f"{type(k).__name__}: non-string bucket keys hash "
                     f"differently on the JVM (use _affected_buckets)"
                 )
+        strs = [k.encode("utf-8") for k in keys if k is not None]
+        out = {int(b) for b in xxh64_bytes_array(strs).view(np.int64) % n}
+        if len(strs) < len(keys):
+            out.add(42 % n)
         return out
 
     def read_keys(self, keys) -> DataFrame | None:

@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from cie_spark import schema
-from cie_spark.plans.pipeline import SMALL_DELTA_CONVS, KGPipeline
+from cie_spark.plans.pipeline import KGPipeline, affected_turns
 from cie_spark.sources.io_snapshots import SnapshotTable
 
 
@@ -57,45 +57,21 @@ def watch(
     def _batch(df, epoch_id: int) -> None:
         # single-flight by construction: foreachBatch is serialized per query
         batch = df.localCheckpoint(eager=True)  # pin: stream frames are one-pass
-        # one bounded collect decides empty AND small in a single job round
-        # (replaces the former isEmpty probe): a micro-batch is latency-
-        # critical, and at maxFilesPerTrigger=64 its conversation set is
-        # nearly always driver-trivial. ids may contain None (a null
-        # conv_id in a landed file): buckets_for_keys covers the null
-        # bucket, read_keys drops the null rows from indexing — the same
-        # outcome the left-semi join gave them.
-        ids = [
-            r[0]
-            for r in batch.select("conv_id")
-            .dropDuplicates(["conv_id"])
-            .limit(SMALL_DELTA_CONVS + 1)
-            .collect()
-        ]
-        if not ids:
+        # 1. accumulate the batch into the bronze turns table (idempotent
+        #    upsert keyed on (conv_id, turn_idx) — replays are safe), then
+        # 2. re-read the FULL turn set of every affected conversation: the
+        #    same scoping step as run_from_table, one bounded fetch of the
+        #    batch's conv_ids deciding the read. A null conv_id updates the
+        #    bronze table and indexes nothing.
+        full, ids = affected_turns(turns, batch, land=True)
+        if full is None:
             return
-        if len(ids) <= SMALL_DELTA_CONVS:
-            # small-batch fast path, same shape as the pipeline's: buckets
-            # hashed in-process (no discovery job on the merge), affected
-            # conversations re-read via a bucket-pruned literal lookup (no
-            # join). pipe.run() then takes its own small-delta path for the
-            # same ids.
-            # 1. accumulate the batch into the bronze turns table (idempotent
-            #    upsert keyed on (conv_id, turn_idx) — replays are safe)
-            turns.merge(
-                batch, keys=["conv_id", "turn_idx"],
-                aff_hint=turns.buckets_for_keys(ids),
-            )
-            # 2. re-read the FULL turn set of every affected conversation
-            full = turns.read_keys(ids)
-            if full is None:  # only-null conv_ids: bronze updated, no index
-                return
-        else:
-            turns.merge(batch, keys=["conv_id", "turn_idx"])
-            convs = batch.select("conv_id").dropDuplicates(["conv_id"])
-            full = turns.read_matching(convs, ["conv_id"])
         # 3. same incremental pipeline as batch mode (hash delta + purge +
         #    idempotent MERGE)
-        pipe.run(full, incremental=True, prose=prose, run_id=f"stream-{epoch_id}")
+        pipe.run(
+            full, incremental=True, prose=prose, run_id=f"stream-{epoch_id}",
+            delta_scope_ids=ids,
+        )
 
     writer = stream.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir

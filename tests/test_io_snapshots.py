@@ -489,17 +489,18 @@ def test_rebucket_evolves_spec_contents_unchanged(spark, tmp_path):
 
 
 def test_python_bucket_matches_spark(spark, tmp_path):
-    """Contract for the driver-side bucket hash (xxh64.py): buckets_for_keys
-    must agree bit-for-bit with the JVM bucket expression
+    """Contract for the driver-side bucket hash (functions.xxh64_bytes_array):
+    buckets_for_keys must agree bit-for-bit with the JVM bucket expression
     pmod(xxhash64(key), n_buckets) for every UTF-8 shape (all xxh64 branch
     lengths: <4, 4-7, 8-31, >=32 bytes; multi-byte unicode; empty). A
     divergence would make the small-delta fast path prune the WRONG bucket
     and silently miss matched rows."""
     import random
 
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from cie_spark.functions.xxh64 import xxh64_signed
+    from cie_spark.functions import xxh64_bytes_array
 
     rng = random.Random(7)
     keys = [
@@ -524,7 +525,8 @@ def test_python_bucket_matches_spark(spark, tmp_path):
         .collect()
     }
     for k in keys:
-        assert xxh64_signed(k.encode("utf-8")) == jvm[k][0], k
+        h = xxh64_bytes_array([k.encode("utf-8")]).view(np.int64)[0]
+        assert int(h) == jvm[k][0], k
         assert t.buckets_for_keys([k]) == {jvm[k][1]}, k
     # set semantics over a batch
     assert t.buckets_for_keys(keys) == {jvm[k][1] for k in keys}

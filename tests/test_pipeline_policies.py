@@ -206,6 +206,37 @@ def test_run_from_table_reads_only_changed_files(spark, tmp_path):
     t.unpersist()
 
 
+def test_incremental_run_from_table_job_count(spark, tmp_path):
+    """A 10-conversation edit re-indexed by run_from_table is scheduling-
+    bound, so its cost is its job count. The run decides the small-delta
+    path from ONE bounded fetch of its exact delta; with the scoping fetch
+    that is two fetches, not three (three took 26 jobs here). Counted under
+    a job group, as the write wave's pool threads inherit it."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    src = SnapshotTable(
+        spark, str(tmp_path / "src"), bucket_key="conv_id", n_buckets=4
+    )
+    src.overwrite(generate_transcripts(spark, n_convs=40, avg_turns=5, seed=6))
+    p = KGPipeline(spark, str(tmp_path / "wh"), n_buckets=4)
+    p.run_from_table(src)
+    ids = [f"conv-{i:06d}" for i in range(0, 40, 4)]
+    edited = src.read_keys(ids).filter(F.col("turn_idx") == 1).withColumn(
+        "text", F.lit("edited: now about [[Grafana]]")
+    )
+    src.merge(edited, keys=["conv_id", "turn_idx"])
+    bus.waitUntilEmpty()
+    sc.setJobGroup("cie-incr", "10-conversation incremental reindex")
+    try:
+        out = p.run_from_table(src)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert not out.get("skipped")
+    assert len(st.getJobIdsForGroup("cie-incr")) <= 25
+
+
 def test_incremental_touch_preserves_entity_surfaces(spark, tmp_path):
     """An incremental run that sees only ONE surface form of an entity must
     not shrink the entity's accumulated surface set (MERGE WHEN MATCHED
@@ -304,6 +335,54 @@ def test_conv_hash_order_independent(spark, tmp_path):
     t.unpersist()
 
 
+def test_appended_turn_over_the_row_cap_extracts_with_session_confs(
+    spark, tmp_path, monkeypatch
+):
+    """An append of one turn to a long conversation: the source diff holds
+    only the new turn, but the run re-indexes the whole conversation. With
+    SMALL_DELTA_ROWS below that conversation's turn count the exact delta
+    fails the row gate, so extraction must run under the session's own
+    AQE setting, not the small-run guard's."""
+    src = SnapshotTable(
+        spark, str(tmp_path / "src"), bucket_key="conv_id", n_buckets=16
+    )
+    base = generate_transcripts(spark, n_convs=8, avg_turns=6, seed=5).cache()
+    src.overwrite(base)
+    p = KGPipeline(spark, str(tmp_path / "wh"))
+    p.run_from_table(src)
+
+    longest = (
+        base.groupBy("conv_id")
+        .agg(F.count("*").alias("n"), F.max("turn_idx").alias("last"))
+        .orderBy(F.desc("n"), "conv_id")
+        .first()
+    )
+    src.append(
+        base.filter(
+            (F.col("conv_id") == longest.conv_id)
+            & (F.col("turn_idx") == longest.last)
+        )
+        .withColumn("turn_idx", F.col("turn_idx") + 1)
+        .withColumn("text", F.lit("now about [[Grafana]]"))
+    )
+    monkeypatch.setattr(pl, "SMALL_DELTA_ROWS", longest.n - 1)
+
+    seen = []
+    orig = pl.extract.extract_mentions
+
+    def spy(*a, **kw):
+        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(pl.extract, "extract_mentions", spy)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    out = p.run_from_table(src)
+    assert not out.get("skipped")
+    assert out["rows_in"] == longest.n + 1
+    assert seen == [aqe]
+    base.unpersist()
+
+
 def test_small_delta_path_agrees_with_big(spark, tmp_path, monkeypatch):
     """The small-delta fast path (driver-collected delta, literal isin
     scoping, in-process bucket hints, AQE-off conf guard) must produce a
@@ -318,8 +397,10 @@ def test_small_delta_path_agrees_with_big(spark, tmp_path, monkeypatch):
 
     p_small = KGPipeline(spark, str(tmp_path / "whs"))
     p_big = KGPipeline(spark, str(tmp_path / "whb"))
+    p_over = KGPipeline(spark, str(tmp_path / "who"))
     p_small.run_from_table(src)
     p_big.run_from_table(src)
+    p_over.run_from_table(src)
 
     # two new convs (generator is hash-per-id: ids 0..11 regenerate
     # identically, so the slice >11 is genuinely new rows)...
@@ -359,24 +440,29 @@ def test_small_delta_path_agrees_with_big(spark, tmp_path, monkeypatch):
     r_big = p_big.run_from_table(src)
     assert not engaged, "row cap=0 must force the distributed path"
     assert not r_big.get("skipped")
+    # conv cap 0: the scoping read and the run take their over-cap branches
+    monkeypatch.setattr(pl, "SMALL_DELTA_CONVS", 0)
+    r_over = p_over.run_from_table(src)
+    assert not engaged, "conv cap=0 must force the distributed path"
+    assert not r_over.get("skipped")
 
     # confs the guard touches are restored
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuf_before
 
     # identical warehouse state on every table the run commits
-    assert r_small["triples"] == r_big["triples"]
-    assert _triple_set(p_small) == _triple_set(p_big)
+    assert r_small["triples"] == r_big["triples"] == r_over["triples"]
+    assert _triple_set(p_small) == _triple_set(p_big) == _triple_set(p_over)
     ents = lambda p: sorted(  # noqa: E731
         (r.entity_id, tuple(sorted(r.surfaces)))
         for r in p.entities.read().select("entity_id", "surfaces").collect()
     )
-    assert ents(p_small) == ents(p_big)
+    assert ents(p_small) == ents(p_big) == ents(p_over)
     proc = lambda p: sorted(  # noqa: E731
         (r.conv_id, r.conv_hash, r.n_turns)
         for r in p.processed.read().collect()
     )
-    assert proc(p_small) == proc(p_big)
+    assert proc(p_small) == proc(p_big) == proc(p_over)
 
     # and both no-op on an unchanged source
     assert p_small.run_from_table(src).get("skipped") is True

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from cie_spark.operators import validate
+from cie_spark.plans import pipeline
 from cie_spark.plans.pipeline import KGPipeline
 from cie_spark.sources.gen import generate_transcripts
 from cie_spark.streaming.watch import watch
@@ -80,6 +81,26 @@ def test_watch_cross_batch_conversation(spark, tmp_path):
     # both entities' contains-edges survive the second batch
     assert ("conv:cx", "contains", "ent:apache-kafka") in got
     assert ("conv:cx", "contains", "ent:redis") in got
+
+
+def test_watch_over_cap_batch_converges(spark, tmp_path, monkeypatch):
+    """The same cross-batch oracle with every micro-batch over the
+    small-delta conv cap: the bronze merge takes no bucket hint, the
+    affected conversations are re-read by read_matching, and the run
+    counts its cached delta instead of fetching it."""
+    from cie_spark.sources.io_snapshots import SnapshotTable
+
+    matched = []
+    orig = SnapshotTable.read_matching
+
+    def spy(self, *a, **kw):
+        matched.append(self.root)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "read_matching", spy)
+    monkeypatch.setattr(pipeline, "SMALL_DELTA_CONVS", 0)
+    test_watch_cross_batch_conversation(spark, tmp_path)
+    assert len(matched) == 2  # one over-cap read back per micro-batch
 
 
 def test_validate_triples_clean_and_dirty(spark):
